@@ -11,18 +11,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
@@ -47,10 +36,11 @@ object Bench {
     // a few queries, which r6 showed produces 15x phantom regressions
     // (q_unpivot 4.17s recorded vs 0.55s steady-state in a fresh JVM).
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // Optional subset (comma-separated names, or a file path via @/path)
-    // for the outer-decade scaling runs, where timing the full surface
-    // is wall-clock infeasible. The driver never sets this — its
-    // BENCH_r{N} numbers stay full-surface and comparable.
+    // Optional subset (comma-separated names, or a file path via @/path):
+    // the single-query dev loop, and the outer-decade scaling runs where
+    // timing the full surface is wall-clock infeasible. Only a
+    // full-surface run rewrites bench_full_last.json, so the committed
+    // BENCH_r{N}-comparable map is never replaced by a partial one.
     val subset: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_SUBSET")
       .map { s =>
         val names =
@@ -129,7 +119,7 @@ object Bench {
     // map is also persisted to a file in the working tree — committed
     // next session, it gives every round a full timing history that no
     // tail window can clip.
-    try {
+    if (ordered.size == SparkEntry.queries.size) try {
       val qjson = results
         .map { case (n, mn, md) => f""""$n":{"min":$mn%.3f,"med":$md%.3f}""" }
         .mkString("{", ",", "}")

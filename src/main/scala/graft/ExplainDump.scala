@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dumps `explain("formatted")` for the headline queries to a markdown
@@ -11,6 +10,11 @@ import org.apache.spark.sql.execution.ExplainMode
   * with `java -cp "target/scala-2.13/classes:<spark jars glob>"
   * graft.ExplainDump /root/testdata/sf0.01 EXPLAINS.md` (same -cp as
   * tools/verify.sh).
+  *
+  * Trailing query names (`ExplainDump <sfDir> <out> q1 q2 …`, Verify's
+  * convention) dump only those queries' plans — the before/after
+  * evidence of a plan change. The session is `local[4]` with 4 shuffle
+  * partitions on every host, so EXPLAINS.md stays reproducible.
   */
 object ExplainDump {
   private val Headline = Seq(
@@ -87,21 +91,15 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "EXPLAINS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val named = args.drop(2).toSeq
+    val unknown = named.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val spark = GraftSession("local[4]", 4)
     val sb = new StringBuilder
     sb.append("# Headline query plans (`explain formatted`, AQE initial plan)\n\n")
     sb.append(s"Generated by `graft.ExplainDump` at $sfDir — regenerate after plan changes.\n")
-    Headline.foreach { name =>
+    val queries = if (named.nonEmpty) named else Headline
+    queries.foreach { name =>
       val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
       sb.append(s"\n## $name\n\n```\n")
       sb.append(qe.explainString(ExplainMode.fromString("formatted")))
@@ -114,7 +112,7 @@ object ExplainDump {
     // filter on bkh (the point-lookup prune), the rewrite fold its
     // delta-sized broadcast remap, the patch resolve its single
     // broadcast join.
-    {
+    if (named.isEmpty) {
       import org.apache.spark.sql.functions._
       import graft.operators.{ClusterLedger, MinHashLedger}
       val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
@@ -155,7 +153,8 @@ object ExplainDump {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
     Files.writeString(Paths.get(out), sb.toString)
-    println(s"[explain] wrote $out (${Headline.size} + 3 ledger plans)")
+    val ledger = if (named.isEmpty) " + 3 ledger" else ""
+    println(s"[explain] wrote $out (${queries.size}$ledger plans)")
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -29,28 +29,23 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "SCALING.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
+
+    // Replica key offsets (Replicas.shift): doc and user ids 1e7, the
+    // event and order keys 1e9, vector ids 1e8. Every replica, 0
+    // included, gets its own token space (tag aa, ba, …).
+    val IdOff = 10000000L
+    val RowOff = 1000000000L
+    val VecOff = 100000000L
 
     val base = Tables.documents(spark, sfDir).select("doc_id", "text")
 
-    def replicated(k: Int): DataFrame =
-      (0 until k).map { i =>
-        val tag = ('a' + i % 26).toChar.toString + ('a' + i / 26).toChar
-        base.select(
-          (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          regexp_replace(col("text"), "([a-z]+)", s"$$1x$tag").as("text"))
-      }.reduce(_ unionAll _)
+    // replica i of a document table: disjoint doc ids and token space
+    def docReplica(docs: DataFrame)(i: Int): DataFrame =
+      docs.withColumn("doc_id", Replicas.shift(col("doc_id"), i, IdOff))
+        .withColumn("text", Replicas.disjointText(col("text"), i))
+    def replicaSlice(i: Int): DataFrame = docReplica(base)(i)
+    def replicated(k: Int): DataFrame = Replicas.union(k)(replicaSlice)
 
     // replicated(k) plus the same closing boilerplate on every doc:
     // the perturbed replicas still grow the vocabulary ~31·k, but the
@@ -67,34 +62,23 @@ object ScaleSmoke {
 
     // same disjoint-token replication, source kept: each source's
     // shingle set grows linearly, the cross-source structure is preserved
-    def replicatedSrc(k: Int): DataFrame =
-      (0 until k).map { i =>
-        val tag = ('a' + i % 26).toChar.toString + ('a' + i / 26).toChar
-        baseSrc.select(
-          (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-          col("source"),
-          regexp_replace(col("text"), "([a-z]+)", s"$$1x$tag").as("text"))
-      }.reduce(_ unionAll _)
+    def replicatedSrc(k: Int): DataFrame = Replicas.union(k)(docReplica(baseSrc))
 
     val events = Tables.events(spark, sfDir)
       .select("event_id", "user_id", "ts", "event_type", "value")
 
     def replicatedEvents(k: Int): DataFrame =
-      (0 until k).map { i =>
-        events.select(
-          (col("event_id") + lit(i.toLong * 1000000000L)).as("event_id"),
-          (col("user_id") + lit(i.toLong * 10000000L)).as("user_id"),
-          col("ts"), col("event_type"), col("value"))
-      }.reduce(_ unionAll _)
+      Replicas.union(k)(i => events.select(
+        Replicas.shift(col("event_id"), i, RowOff).as("event_id"),
+        Replicas.shift(col("user_id"), i, IdOff).as("user_id"),
+        col("ts"), col("event_type"), col("value")))
 
     val lineitem = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_partkey")
 
     def replicatedLineitem(k: Int): DataFrame =
-      (0 until k).map { i =>
-        lineitem.select(
-          (col("l_orderkey") + lit(i.toLong * 1000000000L)).as("l_orderkey"),
-          col("l_partkey"))
-      }.reduce(_ unionAll _)
+      Replicas.union(k)(i => lineitem.select(
+        Replicas.shift(col("l_orderkey"), i, RowOff).as("l_orderkey"),
+        col("l_partkey")))
 
     // by-name: operators like heavyHittersFrom run a bounded driver
     // action (the MG sketch pass) while BUILDING the plan — the timer
@@ -254,8 +238,9 @@ object ScaleSmoke {
       "char_entropy" -> (k => AdvancedTextQueries.charEntropyFrom(replicatedSrc(k))))
 
     val sb = new StringBuilder
+    def row(line: String): Unit = { println(s"[scale] $line"); sb.append(line + "\n") }
     sb.append("# Operator scaling smoke (corpus replicated with disjoint token/user spaces)\n\n")
-    sb.append(s"Base: `$sfDir` (${base.count()} docs, ${events.count()} events), local[$cpus]. ")
+    sb.append(s"Base: `$sfDir` (${base.count()} docs, ${events.count()} events), ${spark.sparkContext.master}. ")
     sb.append("Generated by `graft.ScaleSmoke` — rows should grow ~linearly in scale; ")
     sb.append("time growing much faster than rows marks a hot spot.\n\n")
     sb.append(s"| operator | scale | rows | seconds (min of $reps) |\n|---|---|---|---|\n")
@@ -269,8 +254,7 @@ object ScaleSmoke {
       val sec = timeMin(fn(k))
       val rows = fn(k).count()
       val line = f"| $name | ${k}x | $rows | $sec%.1f |"
-      println(s"[scale] $line")
-      sb.append(line + "\n")
+      row(line)
     }
 
     // ---- ANN recall/cost: brute force vs LSH (multi-probe) vs IVF ----
@@ -278,16 +262,15 @@ object ScaleSmoke {
       .select(col("vec_id"), SimilarityQueries.asDoubles(col("embedding")).as("vec"))
 
     def replicatedEmb(k: Int): DataFrame =
-      (0 until k).map { i =>
+      Replicas.union(k) { i =>
         val jittered =
           if (i == 0) col("vec")
           else transform(col("vec"), (x, j) =>
-            x + (pmod(hash(col("vec_id"), lit(i), j), lit(2001)) - lit(1000))
+            x + Replicas.jitterDelta(col("vec_id"), i, j)
               .cast("double") / 20000.0)
-        embBase.select(
-          (col("vec_id") + lit(i.toLong * 100000000L)).as("vec_id"),
+        embBase.select(Replicas.shift(col("vec_id"), i, VecOff).as("vec_id"),
           jittered.as("vec"))
-      }.reduce(_ unionAll _)
+      }
 
     sb.append("\n## ANN recall/cost (jittered embedding replicas, ~constant probe count)\n\n")
     sb.append("recall@5 vs the brute-force ground truth on the identical corpus; ")
@@ -316,8 +299,7 @@ object ScaleSmoke {
       def emit(variant: String, df: DataFrame, sec: Double): Unit = {
         val recall = df.select("probe_id", "vec_id").intersect(exact).count() / nExact
         val line = f"| ${k}x | $variant | $nRows | $nProbes | $recall%.3f | $sec%.1f |"
-        println(s"[scale] $line")
-        sb.append(line + "\n")
+        row(line)
       }
       emit("brute_force", exact, bruteSec)
       // int8 quantized scan + exact re-rank: recall loss here is pure
@@ -386,12 +368,6 @@ object ScaleSmoke {
     ClusterLedger.init(spark, clLedger)
     ClusterLedger.initPatch(spark, clLedgerPa)
     val mhRoot = Files.createTempDirectory("mh_ledger_scale_")
-    def replicaSlice(i: Int): DataFrame = {
-      val tag = ('a' + i % 26).toChar.toString + ('a' + i / 26).toChar
-      base.select(
-        (col("doc_id") + lit(i.toLong * 10000000L)).as("doc_id"),
-        regexp_replace(col("text"), "([a-z]+)", s"$$1x$tag").as("text"))
-    }
     // half-replicas: 12 same-size batches instead of 6 so the ledger
     // grows >10x within the same smoke budget (pair materialization,
     // which scales with the fixture's dup density, dominates wall time)
@@ -519,7 +495,7 @@ object ScaleSmoke {
     val regimeRoot = Files.createTempDirectory("mh_regime_")
     val nRep = 60
     MinHashLedger.bulkLoad(spark,
-      (0 until nRep).map(replicaSlice).reduce(_ unionAll _), regime)
+      Replicas.union(nRep)(replicaSlice), regime)
     val ledgerRows = spark.table(regime).count()
     val ledgerMb = dirMb(spark.sql(s"DESC FORMATTED $regime")
       .filter(col("col_name") === "Location")
@@ -565,8 +541,7 @@ object ScaleSmoke {
       val sec = (System.nanoTime() - t0) / 1e9
       val line = f"| $n | $keys | $before | ${pairs.count()} | " +
         f"${probeIo.readMb}%.1f | $sec%.1f | ${io.readMb}%.1f |"
-      println(s"[scale] $line")
-      sb.append(line + "\n")
+      row(line)
     }
     spark.sql(s"DROP TABLE IF EXISTS $regime")
 
@@ -585,8 +560,7 @@ object ScaleSmoke {
       timeNoop(ClusterQueries.kmeansAssign(spark, corpus)) // warm
       val sec = timeMin(ClusterQueries.kmeansAssign(spark, corpus))
       val line = f"| ${k}x | $nRows | $sec%.1f |"
-      println(s"[scale] $line")
-      sb.append(line + "\n")
+      row(line)
     }
 
     // ---- JL projection audit over the same jittered replicas ----
@@ -604,8 +578,7 @@ object ScaleSmoke {
       val sec = timeMin(SimilarityQueries.jlProjectFrom(spark, corpus))
       val outRows = SimilarityQueries.jlProjectFrom(spark, corpus).count()
       val line = f"| ${k}x | $nRows | $outRows | $sec%.1f |"
-      println(s"[scale] $line")
-      sb.append(line + "\n")
+      row(line)
     }
 
     // ---- Skew: manufactured hot key, plain vs salted wall time ----
@@ -635,9 +608,9 @@ object ScaleSmoke {
         .select(explode(sequence(lit(0L), lit(k - 1L))).as("r"),
           col("event_id"), col("user_id"), col("ts"))
         .select(
-          (col("event_id") + col("r") * 1000000000L).as("event_id"),
+          (col("event_id") + col("r") * RowOff).as("event_id"),
           when(pmod(col("event_id"), lit(5)) === 0, lit(1L))
-            .otherwise(col("user_id") + col("r") * 10000000L).as("user_id"),
+            .otherwise(col("user_id") + col("r") * IdOff).as("user_id"),
           col("ts"))
         .repartition(32)
 
@@ -689,8 +662,7 @@ object ScaleSmoke {
         val rows = mk().count()
         confs.keys.foreach(c => spark.conf.set(c, prevConf(c)))
         val line = f"| ${k}x | $name | $rows | $sec%.2f |"
-        println(s"[scale] $line")
-        sb.append(line + "\n")
+        row(line)
       }
     }
     // Plan evidence that STOCK AQE skew splitting actually fires on
@@ -755,8 +727,7 @@ object ScaleSmoke {
       val sec = (System.nanoTime() - t0) / 1e9
       require(resolved == n, s"path-$n: only $resolved/$n vertices reached component 0")
       val line = f"| $n | $rounds | $sec%.1f |"
-      println(s"[scale] $line")
-      sb.append(line + "\n")
+      row(line)
     }
 
     // BFS is level-synchronous: rounds = source eccentricity BY DESIGN
@@ -784,8 +755,7 @@ object ScaleSmoke {
       require(reached == n, s"bfs-path-$n: only $reached/$n vertices labeled")
       require(rounds == n - 1, s"bfs-path-$n: $rounds rounds, expected ${n - 1}")
       val line = f"| $n | $rounds | $sec%.1f | ${sec / rounds}%.3f |"
-      println(s"[scale] $line")
-      sb.append(line + "\n")
+      row(line)
     }
 
     Files.writeString(Paths.get(out), sb.toString)

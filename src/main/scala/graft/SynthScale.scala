@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Writes a k×-scaled synthetic copy of a testdata directory (default
@@ -11,13 +11,11 @@ import org.apache.spark.sql.functions._
   * parquet, so the sweep stays a true engine-vs-oracle comparison
   * regardless of how the data was manufactured.
   *
-  * Replication follows ScaleSmoke's conventions: every key column
-  * shifts by a replica-unique offset (FK pairs shift by the SAME
-  * offset, so join structure replicates); document text is perturbed
-  * with a replica-unique token suffix (disjoint token/shingle spaces —
-  * duplicate rate stays the base corpus's instead of exploding k²);
-  * embeddings get deterministic per-element jitter (replica 0 exact);
-  * the fixed-size dimension tables (region, nation) copy verbatim.
+  * Replication is [[Replicas]]' transform: every key column shifts by
+  * i·1e7 (FK pairs by the SAME offset, so join structure replicates);
+  * document text moves to a replica-unique token space; embeddings get
+  * ±0.05 float jitter. Replica 0 is the base data, untouched; the
+  * fixed-size dimension tables (region, nation) copy verbatim.
   *
   *   java -cp "target/scala-2.13/classes:<spark jars>" graft.SynthScale \
   *     /root/testdata/sf0.1 /tmp/sf1synth 10
@@ -27,16 +25,7 @@ object SynthScale {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (args.length > 1) args(1) else "/tmp/sf1synth"
     val k = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     def load(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     // single FILE per table, matching the driver fixtures' layout (the
@@ -55,13 +44,12 @@ object SynthScale {
       println(s"[synth] wrote $name")
     }
     val Off = 10000000L
-    def shifted(df: DataFrame, keyCols: Seq[String])(i: Int): DataFrame =
-      keyCols.foldLeft(df)((d, c) =>
-        d.withColumn(c, col(c) + lit(i * Off)))
     def replicate(df: DataFrame, keyCols: Seq[String],
         extra: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
-      (0 until k).map(i => extra(shifted(df, keyCols)(i), i))
-        .reduce(_ unionAll _)
+      Replicas.union(k) { i =>
+        extra(keyCols.foldLeft(df)((d, c) =>
+          d.withColumn(c, Replicas.shift(col(c), i, Off))), i)
+      }
 
     save(load("region"), "region")
     save(load("nation"), "nation")
@@ -72,16 +60,13 @@ object SynthScale {
     save(replicate(load("lineitem"),
       Seq("l_orderkey", "l_partkey", "l_suppkey")), "lineitem")
     save(replicate(load("events"), Seq("event_id", "user_id")), "events")
-    // disjoint token spaces per replica (ScaleSmoke's convention);
     // n_chars tracks the perturbed text (the fixture invariant
     // n_chars == length(text) holds in the base data)
     save(replicate(load("documents"), Seq("doc_id"),
       (d, i) => {
-        val tag = ('a' + i % 26).toChar.toString + ('a' + i / 26).toChar
         val t =
           if (i == 0) d
-          else d.withColumn("text",
-            regexp_replace(col("text"), "([a-z]+)", s"$$1x$tag"))
+          else d.withColumn("text", Replicas.disjointText(col("text"), i))
         t.withColumn("n_chars", length(col("text")).cast("long"))
           .select("doc_id", "text", "lang", "source", "n_chars")
       }), "documents")
@@ -90,8 +75,8 @@ object SynthScale {
         (if (i == 0) d
          else d.withColumn("embedding",
            transform(col("embedding"), (x, j) =>
-             (x + (pmod(hash(col("vec_id"), lit(i), j), lit(2001)) - lit(1000))
-               .cast("float") / 20000.0f))))
+             x + Replicas.jitterDelta(col("vec_id"), i, j)
+               .cast("float") / 20000.0f)))
           .select("vec_id", "embedding", "label")), "embeddings")
     println(s"[synth] done: $out at ${k}x of $src")
     spark.stop()

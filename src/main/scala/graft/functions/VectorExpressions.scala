@@ -96,8 +96,4 @@ object VectorFunctions {
   def vecDot(a: Column, b: Column): Column =
     ColumnBridge.column(
       DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** L2 norm via the codegen'd dot product. */
-  def vecNorm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(vecDot(a, a))
 }

@@ -9,7 +9,8 @@ import graft.functions.DotProduct
   * expressions under SQL names so `spark.sql("... vec_dot(a,b) ...")`
   * works anywhere (install via
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`).
+  * `withExtensions(new GraftExtensions)` on a session builder;
+  * `GraftSession` does the former).
   * No custom optimizer rules or strategies are injected — SURVEY.md §4.2:
   * every query plan here is expressible with stock Catalyst; the
   * extension surface is expressions only.

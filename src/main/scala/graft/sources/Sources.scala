@@ -35,11 +35,6 @@ object Sources {
         input_file_name().as("path"),
         col("value").as("content"))
 
-  /** Line-granular text read (one row per line, with source path). */
-  def textLines(spark: SparkSession, globPath: String): DataFrame =
-    spark.read.text(globPath)
-      .select(input_file_name().as("path"), col("value").as("line"))
-
   /** The reference's intermediate format: NDJSON {"Key":…,"Value":…}. */
   def writeKvJson(df: DataFrame, keyCol: String, valueCol: String, path: String): Unit =
     df.select(col(keyCol).cast("string").as("Key"),

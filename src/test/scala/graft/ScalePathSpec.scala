@@ -135,21 +135,20 @@ class ScalePathSpec extends AnyFunSuite {
     // corpus where every vector has true near-neighbors, the shape a
     // near-dup corpus actually has. SCALING.md measures that regime;
     // this spec ASSERTS it (judge r8: a recall regression must fail
-    // `sbt test`, not drift in a doc). Same recipe as ScaleSmoke:
-    // 16 replicas, deterministic ±0.05 per-element jitter.
+    // `sbt test`, not drift in a doc). Same Replicas recipe as
+    // ScaleSmoke: 16 replicas, deterministic ±0.05 per-element jitter.
     val embBase = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         SimilarityQueries.asDoubles(col("embedding")).as("vec"))
-    val corpus = (0 until 16).map { i =>
+    val corpus = Replicas.union(16) { i =>
       val jittered =
         if (i == 0) col("vec")
         else transform(col("vec"), (x, j) =>
-          x + (pmod(hash(col("vec_id"), lit(i), j), lit(2001)) - lit(1000))
+          x + Replicas.jitterDelta(col("vec_id"), i, j)
             .cast("double") / 20000.0)
-      embBase.select(
-        (col("vec_id") + lit(i.toLong * 100000000L)).as("vec_id"),
+      embBase.select(Replicas.shift(col("vec_id"), i, 100000000L).as("vec_id"),
         jittered.as("vec"))
-    }.reduce(_ unionAll _).localCheckpoint(true)
+    }.localCheckpoint(true)
     val mod = 125 // 4 probe ids per 500-id replica x 16 replicas = 64 probes
     val exact = SimilarityQueries.blockedTopKFrom(corpus, 5, mod)
       .select("probe_id", "vec_id").localCheckpoint(true)

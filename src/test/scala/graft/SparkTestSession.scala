@@ -4,22 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole ScalaTest run. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      // local[threads, maxFailures]: allow one task retry so the
-      // fault-injection spec can exercise Spark's re-execution path
-      // (plain local[4] fails the job on first task failure).
-      .master("local[4,2]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // local[threads, maxFailures]: allow one task retry so the
+  // fault-injection spec can exercise Spark's re-execution path
+  // (plain local[4] fails the job on first task failure).
+  lazy val spark: SparkSession = GraftSession("local[4,2]", 4)
   val sfDir = "/root/testdata/sf0.001"
 }

@@ -15,9 +15,15 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 rm -rf "$OUT"
+# Verify exits non-zero when a query threw, but only after dumping every
+# other query and oracle_sql.json: still selfcheck what was written, then
+# return the failure.
+status=0
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT" "$@" 2>/tmp/verify.log || { tail -30 /tmp/verify.log; exit 1; }
+  graft.Verify "$SF_DIR" "$OUT" "$@" 2>/tmp/verify.log || status=$?
+if [ ! -f "$OUT/oracle_sql.json" ]; then tail -30 /tmp/verify.log; exit 1; fi
 grep -E "\[verify\]" /tmp/verify.log || true
-python3 tools/selfcheck.py "$SF_DIR" "$OUT" "$@"
+python3 tools/selfcheck.py "$SF_DIR" "$OUT" "$@" || status=$?
+exit $status
