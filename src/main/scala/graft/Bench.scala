@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Uses the `noop` sink so the FULL plan executes
   * (a bare `.count()` would let Catalyst prune most of the work and
@@ -13,10 +11,18 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.fromEnv()
 
-    def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // A query that throws records -1 for that rep, is named in the
+    // "failed" list of the summary and bench_full_last.json, and makes
+    // the run exit 1 — a crash must never read as a faster total.
+    val failed = scala.collection.mutable.SortedSet.empty[String]
+    def run(name: String): Double = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        failed += name
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -52,8 +58,7 @@ object Bench {
         require(unknown.isEmpty, s"unknown bench subset: ${unknown.mkString(",")}")
         names
       }.getOrElse(SparkEntry.queries.keySet)
-    val ordered = SparkEntry.queries.toSeq
-      .filter { case (n, _) => subset(n) }.sortBy(_._1)
+    val ordered = SparkEntry.queries.keys.toSeq.filter(subset).sorted
     // BPE training cost, accounted explicitly: the merge table is
     // memoized per (corpus, k, tokenizer) for the JVM's lifetime, so
     // after this first run every q_bpe_merges/q_bpe_encode rep prices
@@ -63,14 +68,14 @@ object Bench {
     // record it so the artifact states train vs encode cost instead of
     // hiding training inside whichever query touches the memo first.
     val bpeTrainCold =
-      if (subset("q_bpe_merges")) run(SparkEntry.queries("q_bpe_merges"))
+      if (subset("q_bpe_merges")) run("q_bpe_merges")
       else -1.0
     println(f"""{"metric":"cold","name":"bpe_train","sec":$bpeTrainCold%.3f}""")
-    ordered.foreach { case (_, fn) => run(fn) }
+    ordered.foreach(run)
 
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
-    for (_ <- 0 until reps; (name, fn) <- ordered) {
-      val t = run(fn)
+    for (_ <- 0 until reps; name <- ordered) {
+      val t = run(name)
       if (t >= 0) times(name) = times.getOrElse(name, Vector.empty) :+ t
     }
     // Re-certify the slowest tail: the queries whose numbers drive the
@@ -79,8 +84,8 @@ object Bench {
     // false regression on them.
     val slowest = times.toSeq
       .filter(_._2.nonEmpty).sortBy(-_._2.min).take(8).map(_._1).toSet
-    for (_ <- 0 until 2; (name, fn) <- ordered if slowest(name)) {
-      val t = run(fn)
+    for (_ <- 0 until 2; name <- ordered if slowest(name)) {
+      val t = run(name)
       if (t >= 0) times(name) = times(name) :+ t
     }
 
@@ -90,7 +95,7 @@ object Bench {
     // maps inlined in the summary pushed the head out). One JSON line
     // per query makes any tail self-sufficient, and the machine-readable
     // summary is ONE SHORT line that always fits.
-    val results = ordered.map { case (name, _) =>
+    val results = ordered.map { name =>
       val ts = times.getOrElse(name, Vector.empty)
       val (min, med) =
         if (ts.isEmpty) (-1.0, -1.0)
@@ -115,6 +120,7 @@ object Bench {
     val pipelineIo = results
       .filter(r => pipelineQueries(r._1) && r._2 >= 0).map(_._2).sum
     val totalExPipeline = total - pipelineIo
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     // The recorder keeps only a 2000-char stdout tail, so the per-query
     // map is also persisted to a file in the working tree — committed
     // next session, it gives every round a full timing history that no
@@ -128,7 +134,8 @@ object Bench {
         f"""{"sf_dir":"$sfDir","total_min":$total%.3f,"total_med":$totalMed%.3f,""" +
           f""""bpe_train_cold_sec":$bpeTrainCold%.3f,""" +
           f""""pipeline_sec":$pipelineIo%.3f,""" +
-          f""""total_ex_pipeline":$totalExPipeline%.3f,"queries":$qjson}""")
+          f""""total_ex_pipeline":$totalExPipeline%.3f,"failed":$failedJson,""" +
+          f""""queries":$qjson}""")
       finally w.close()
     } catch { case _: Throwable => () }
     // Stop Spark BEFORE the summary line so no shutdown logging can land
@@ -161,7 +168,8 @@ object Bench {
       f""""median_total":$totalMed%.3f,"queries_count":${results.size},""" +
       f""""pipeline_sec":$pipelineIo%.3f,""" +
       f""""total_ex_pipeline":$totalExPipeline%.3f,""" +
-      f""""slowest":$slowestTail,"sf":$sfNum}""")
+      f""""slowest":$slowestTail,"sf":$sfNum,"failed":$failedJson}""")
     Console.out.flush()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -339,7 +339,7 @@ object AdvancedTextQueries {
     * already computes; the histogram is two tiny aggs over |clustered
     * docs| rows, and the singleton count enters as the difference of
     * two 1-row aggregates joined as a scalar broadcast (declared in
-    * PlanAuditSpec) — the corpus itself is scanned once, for its count.
+    * SurfaceSweepSpec) — the corpus itself is scanned once, for its count.
     */
   def qClusterSizes(spark: SparkSession, sfDir: String): DataFrame = {
     val cc = qDedupClusters(spark, sfDir)

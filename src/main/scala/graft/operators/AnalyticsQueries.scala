@@ -801,7 +801,7 @@ object AnalyticsQueries {
     * bucketing never diverges from the direct oracle); everything
     * pairwise operates on sketch rows (|types|·k), tiny at any corpus
     * size. The types×types pair grid is a schema-bounded broadcast
-    * cross join, declared in PlanAuditSpec's dimensionGridBroadcasts.
+    * cross join, declared in SurfaceSweepSpec's dimensionGridBroadcasts.
     */
   val KmvK = 64
   def qOverlapKmv(spark: SparkSession, sfDir: String): DataFrame =
@@ -1077,7 +1077,7 @@ object AnalyticsQueries {
     *
     * Scale: degrees and internal edges are map-combinable aggs over
     * the edge list; the brand lookup broadcasts the part dim; m
-    * enters as a declared 1-row aggregate broadcast (PlanAudit). The
+    * enters as a declared 1-row aggregate broadcast (the plan audit). The
     * decimal(38,0) products make overflow past ~10⁹-degree-mass
     * brands an explicit error, not a wrap (q_gini's convention).
     */

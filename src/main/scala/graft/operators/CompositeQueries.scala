@@ -287,7 +287,7 @@ object CompositeQueries {
     * without small promotional discounts, over a one-year ship window,
     * discounts 5–7%, quantity < 24. The canonical
     * full-scan-with-tight-filters probe: every predicate must reach
-    * the parquet scan (PlanAudit asserts pushdown repo-wide).
+    * the parquet scan.
     *
     * Determinism: price and discount are re-expressed in exact integer
     * cents/basis points, so the revenue sum is an exact decimal and

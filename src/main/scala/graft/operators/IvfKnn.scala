@@ -15,8 +15,13 @@ import graft.operators.SimilarityQueries.{asDoubles, dot, l2Norm}
   * its `nProbe` nearest cells. Recall/cost trades off via nProbe
   * (nProbe = nLists degenerates to exact brute force).
   *
-  * Deterministic: k-means runs with a fixed seed, and centroids are
-  * data-derived, so the same corpus always yields the same index.
+  * Deterministic under any input partitioning: k-means|| seeds its
+  * sampling per partition index, so a fixed seed alone would tie the
+  * index to the scan's split layout. The training set is therefore
+  * keyed by `vec_id` before fitting — a hash sample, then a fixed
+  * `nLists`-way hash partitioning sorted within partitions — so the
+  * same corpus yields the same index whatever the file splits,
+  * shuffle-partition count or task retries.
   * Training SAMPLES the corpus (k-means is iterative); at 100 TB you
   * train on a ~1M-row sample, then a single broadcast-join pass assigns
   * cells — the big side never shuffles for the index build.
@@ -53,13 +58,16 @@ object IvfKnn {
   def buildIndexFrom(emb: DataFrame, nLists: Int = NLists): (DataFrame, DataFrame) = {
     val spark = emb.sparkSession
     val featured = emb.withColumn("features", array_to_vector(col("vec")))
-    // Fit on a bounded seeded sample; the one pass that touches every
+    // Fit on a bounded hash sample; the one pass that touches every
     // vector is model.transform below — a narrow map against broadcast
     // centroids, no shuffle of the corpus.
     val n = featured.count()
-    val train =
+    val sampled =
       if (n <= MaxTrainRows) featured
-      else featured.sample(withReplacement = false, MaxTrainRows.toDouble / n, seed = 42L)
+      else featured.filter(pmod(xxhash64(col("vec_id")), lit(1000000L)) <
+        lit(MaxTrainRows * 1000000L / n))
+    val train = sampled.repartition(nLists, col("vec_id"))
+      .sortWithinPartitions("vec_id")
     val model = new KMeans()
       .setK(nLists).setSeed(42L).setMaxIter(10)
       .setFeaturesCol("features").setPredictionCol("cell")

@@ -129,7 +129,7 @@ object ScaleOps {
     *   3. A per-range (count, subtotal…) aggregate — n rows, bounded
     *      by CONFIG, not the corpus — gets exclusive prefix offsets
     *      from the only single-partition window in the plan (over
-    *      those n rows; PlanAuditSpec recognizes this bounded shape
+    *      those n rows; SurfaceSweepSpec recognizes this bounded shape
     *      by its `__pr_pid` grouping key).
     *   4. The n-row offset frame broadcast-joins back:
     *      global rank = local rank + prior-range count, global

@@ -242,13 +242,12 @@ object TimeSeriesQueries {
     // so NO rounding ever runs on the seasonal term
     val seasonal = trended.groupBy(col("event_type").as("s_type"), col("dow"))
       .agg(count(lit(1)).as("n_dow"), sum(col("det_micro")).as("s_micro"))
-      .select(col("s_type"), col("dow"),
+      .select(col("s_type"), col("dow").as("s_dow"),
         (floor(col("s_micro").cast("double") / col("n_dow")).cast("long")
           .cast("double") / 1000000.0 + lit(0.0)).as("seasonal"))
     trended
       .join(broadcast(seasonal),
-        col("event_type") === col("s_type") &&
-          trended("dow") === seasonal("dow"))
+        col("event_type") === col("s_type") && col("dow") === col("s_dow"))
       .select(col("event_type"), col("d").as("day"), col("c").as("n_events"),
         col("trend"), col("seasonal"),
         (round(col("c") - col("trend") - col("seasonal"), 6) + lit(0.0))

@@ -46,24 +46,6 @@ object Sources {
       .schema("Key STRING, Value STRING")
       .json(path)
 
-  /** Header-on CSV with explicit schema (never inferSchema — schema
-    * inference is a full extra pass over the data at scale).
-    */
-  def readCsv(spark: SparkSession, path: String, ddlSchema: String): DataFrame =
-    spark.read.option("header", "true").schema(ddlSchema).csv(path)
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  /** Parquet read with schema evolution: a long-lived corpus
-    * accumulates files written by successive pipeline versions;
-    * mergeSchema unions their schemas (older files yield nulls for
-    * newer columns) at the cost of reading every footer — so it is an
-    * explicit opt-in here, not a default.
-    */
-  def readParquetMerged(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
   /** Compact a directory of many small files into `targetFiles`
     * evenly-sized ones (small files are the classic large-corpus
     * killer: every task, listing and footer read multiplies by file
@@ -138,15 +120,6 @@ object Sources {
     */
   def binaryCorpus(spark: SparkSession, globPath: String): DataFrame =
     spark.read.format("binaryFile").load(globPath)
-
-  /** ORC — the second columnar format next to parquet, same pushdown /
-    * pruning behavior through the datasource API.
-    */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
 
   /** Hive-style partitioned layout: one directory per value of
     * `partCols` (e.g. `day=2024-01-05/`). THE data-layout primitive at

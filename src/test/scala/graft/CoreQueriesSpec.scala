@@ -10,11 +10,8 @@ class CoreQueriesSpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query key has an oracle and runs at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sfDir)
-      assert(df.count() >= 0, s"$name failed to execute")
-    }
+  // every query executing is SurfaceSweepSpec's first check
+  test("every query key has an oracle") {
     // declared exceptions: approximate sketches have no cross-engine
     // oracle by design (DuckDB's approx_count_distinct is a different
     // sketch); their error bound is spec-checked in StatsSpec instead.

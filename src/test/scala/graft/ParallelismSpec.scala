@@ -1,36 +1,17 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The reference's mtiming/rtiming apps
-  * (`/root/reference/mrapps/mtiming.go:21-64`, `rtiming.go:19-62`) fail
-  * the run if map/reduce tasks do not actually execute in parallel. The
-  * engine analogue: with the file-split size forced small, every oracle
-  * query's non-trivial parquet scans must plan >1 input partition — a
-  * single-partition scan of a large table serializes the whole heaviest
-  * stage no matter how many executors exist (exactly the regression
-  * commit 8de0470 fixed by accident on the embeddings scan; this test
-  * catches the next one).
+/** The reference's rtiming app (`mrapps/rtiming.go`) fails the run if
+  * reduce tasks do not actually execute in parallel; the engine
+  * analogue is a reduce stage planned on more than one partition. Its
+  * mtiming twin (every non-trivial scan planned on more than one input
+  * partition) runs over every query in SurfaceSweepSpec.
   */
 class ParallelismSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
-  // sf0.01: every fact table is > 32 KiB, so a 16 KiB split target must
-  // produce multiple splits; only region/nation/supplier stay whole.
   private val sfDir = "/root/testdata/sf0.01"
-  private val SplitBytes = 16384L
-  private val TinyScanBytes = 2 * SplitBytes
-
-  /** (scan bytes, planned input partitions) per file scan in the plan. */
-  private def scanStats(plan: SparkPlan): Seq[(Long, Int)] = plan match {
-    case a: AdaptiveSparkPlanExec => scanStats(a.executedPlan)
-    case s: FileSourceScanExec =>
-      Seq((s.relation.location.sizeInBytes,
-        s.inputRDDs().map(_.getNumPartitions).max))
-    case other => other.children.flatMap(scanStats)
-  }
 
   test("rtiming: the reduce side of a shuffle runs with >1 partition") {
     import org.apache.spark.sql.functions._
@@ -49,47 +30,6 @@ class ParallelismSpec extends AnyFunSuite {
         "reduce stage ran on a single partition")
     } finally {
       conf.set("spark.sql.adaptive.coalescePartitions.enabled", prevCoalesce)
-    }
-  }
-
-  test("mtiming: every oracle query scans non-trivial inputs with >1 task") {
-    val conf = spark.conf
-    val prevMax = conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpen = conf.get("spark.sql.files.openCostInBytes")
-    conf.set("spark.sql.files.maxPartitionBytes", SplitBytes.toString)
-    conf.set("spark.sql.files.openCostInBytes", "0")
-    try {
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          val df = fn(spark, sfDir)
-          val stats = scanStats(df.queryExecution.executedPlan)
-          // iterative operators (q_dedup_clusters) return a
-          // localCheckpoint-backed frame: lineage is truncated by design
-          // and the file scans ran inside the convergence loop, so the
-          // final plan legitimately has none — only then is empty OK.
-          // Model-emitting operators (q_bpe_merges) go one further: the
-          // output IS the fixed-size trained model, materialized as a
-          // local relation after the per-round scans already ran — a
-          // local scan of O(k) rows is their legitimate final plan.
-          def hasRddScan(p: SparkPlan): Boolean = p match {
-            case a: AdaptiveSparkPlanExec => hasRddScan(a.executedPlan)
-            case _: org.apache.spark.sql.execution.RDDScanExec => true
-            case _: org.apache.spark.sql.execution.LocalTableScanExec => true
-            case other => other.children.exists(hasRddScan)
-          }
-          val checkpointBacked = hasRddScan(df.queryExecution.executedPlan)
-          assert(stats.nonEmpty || checkpointBacked,
-            s"$name has no file scan to parallelize")
-          val serialBigScans = stats.filter { case (bytes, parts) =>
-            bytes > TinyScanBytes && parts <= 1
-          }
-          if (serialBigScans.nonEmpty) Some(name -> serialBigScans) else None
-      }
-      assert(offenders.isEmpty,
-        s"single-partition scans of non-trivial inputs: $offenders")
-    } finally {
-      conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-      conf.set("spark.sql.files.openCostInBytes", prevOpen)
     }
   }
 }

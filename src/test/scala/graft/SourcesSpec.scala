@@ -48,18 +48,6 @@ class SourcesSpec extends AnyFunSuite {
       Map("a" -> "1", "b" -> "2", "c" -> "3"))
   }
 
-  test("CSV round-trips with explicit schema") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("csv_").toString
-    val df = Seq((1L, "a", 1.5), (2L, "b", -2.25)).toDF("id", "s", "x")
-    Sources.writeCsv(df, dir)
-    val back = Sources.readCsv(spark, dir, "id BIGINT, s STRING, x DOUBLE")
-    // compare names+types; CSV reads are nullable while literal Seqs are not
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      df.schema.map(f => (f.name, f.dataType)))
-    assert(back.exceptAll(df).count() == 0 && df.exceptAll(back).count() == 0)
-  }
-
   test("binary corpus: one row per file, bytes intact, metadata-only scans prune content") {
     assume(haveCorpus)
     import spark.implicits._
@@ -74,38 +62,6 @@ class SourcesSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(!metaPlan.contains("content"),
       "metadata projection still reads content:\n" + metaPlan.take(800))
-  }
-
-  test("ORC round-trips with schema and pushes filters like parquet") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("orc_").toString
-    val df = Tables.lineitem(spark, SparkTestSession.sfDir)
-      .select("l_orderkey", "l_quantity", "l_returnflag")
-    Sources.writeOrc(df, dir)
-    val back = Sources.readOrc(spark, dir)
-    assert(back.schema.map(f => (f.name, f.dataType)) ==
-      df.schema.map(f => (f.name, f.dataType)))
-    assert(back.count() == df.count())
-    val filtered = back.filter($"l_quantity" > 25)
-    assert(filtered.count() == df.filter($"l_quantity" > 25).count())
-    // the predicate reaches the ORC reader, not a post-scan filter only
-    val explained = filtered.queryExecution.executedPlan.toString
-    assert(explained.contains("PushedFilters") &&
-      explained.contains("l_quantity"), explained)
-  }
-
-  test("schema evolution: mergeSchema unions old and new file schemas") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("evolve_").toString
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v1")
-      .write.mode("append").parquet(dir)
-    Seq((3L, "c", 3.5)).toDF("id", "v1", "v2")
-      .write.mode("append").parquet(dir)
-    val merged = Sources.readParquetMerged(spark, dir)
-    assert(merged.columns.toSet == Set("id", "v1", "v2"))
-    assert(merged.count() == 3)
-    // old files surface null for the new column
-    assert(merged.filter($"v2".isNull).count() == 2)
   }
 
   test("compaction: many small files become the target count, rows intact") {
