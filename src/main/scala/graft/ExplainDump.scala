@@ -83,7 +83,7 @@ object ExplainDump {
     "q_dedup_simhash_unicode", "q_ngram_jaccard_unicode",
     "q_tfidf_unicode", "q_bpe_encode_unicode",
     // round-9/10 oracle-checked incremental ledger flows (their
-    // component plans — pruned probe, folds, resolve — are dumped in
+    // component plans — pruned probe, patch resolve — are dumped in
     // the ledger section below; these entries record the composed
     // queries' result shapes)
     "q_dedup_incremental", "q_dedup_incr_clusters")
@@ -109,9 +109,8 @@ object ExplainDump {
     // The incremental-ledger operators live OUTSIDE SparkEntry.queries
     // (no-oracle, spec-proven), so their plans are dumped here against
     // a small seeded ledger: the probe plan must show the pushed In
-    // filter on bkh (the point-lookup prune), the rewrite fold its
-    // delta-sized broadcast remap, the patch resolve its single
-    // broadcast join.
+    // filter on bkh (the point-lookup prune), the patch resolve its
+    // single broadcast join.
     if (named.isEmpty) {
       import org.apache.spark.sql.functions._
       import graft.operators.{ClusterLedger, MinHashLedger}
@@ -119,10 +118,8 @@ object ExplainDump {
       val seed = docs.filter(col("doc_id") % 2 === 0)
       val probeBatch = docs.filter(col("doc_id") % 40 === 1).limit(25)
       val mh = "explain_minhash_ledger"
-      val cl = "explain_cluster_ledger"
       val clp = "explain_cluster_ledger_pa"
       MinHashLedger.init(spark, mh)
-      ClusterLedger.init(spark, cl)
       ClusterLedger.initPatch(spark, clp)
       try {
         val runDir = java.nio.file.Files
@@ -131,16 +128,10 @@ object ExplainDump {
         val ids = seed.select(col("doc_id").as("id"))
         val edges = pairs
           .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
-        ClusterLedger.ingest(spark, ids, edges, cl, s"$runDir/cl")
         ClusterLedger.ingestPatch(spark, ids, edges, clp, s"$runDir/clp")
         val ledgerPlans = Seq(
           "minhash_ledger_probe (point-lookup pruned)" ->
             MinHashLedger.candidatePairsAgainst(spark, probeBatch, mh),
-          "cluster_ledger_rewrite_fold" ->
-            ClusterLedger.updatedLabels(spark.table(cl),
-              probeBatch.select(col("doc_id").as("id")),
-              spark.table(cl).limit(4)
-                .select(col("id").as("src"), col("component").as("dst"))),
           "cluster_ledger_patch_resolve" ->
             ClusterLedger.resolvePatch(spark, clp))
         ledgerPlans.foreach { case (name, df) =>
@@ -149,11 +140,11 @@ object ExplainDump {
             .explainString(ExplainMode.fromString("formatted")))
           sb.append("```\n")
         }
-      } finally Seq(mh, cl, clp, s"${clp}_patch")
+      } finally Seq(mh, clp, s"${clp}_patch")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
     Files.writeString(Paths.get(out), sb.toString)
-    val ledger = if (named.isEmpty) " + 3 ledger" else ""
+    val ledger = if (named.isEmpty) " + 2 ledger" else ""
     println(s"[explain] wrote $out (${queries.size}$ledger plans)")
     spark.stop()
   }

@@ -341,11 +341,9 @@ object ScaleSmoke {
     //     read the WHOLE ledger.
     // compact_sec is the LSM amortization (sorted-run fold), priced
     // separately so probe and maintenance cost are not conflated.
-    // cluster_rw_write_mb vs cluster_pa_write_mb: the SAME batch's pairs
-    // folded into the incremental component labels by BOTH ClusterLedger
-    // modes — rewrite mode rewrites the whole label table (bytes grow
-    // with admitted docs), patch-append mode writes the delta + the
-    // touched-clusters patch map (bytes track the batch).
+    // cluster_pa_write_mb: the batch's pairs folded into the incremental
+    // component labels by ClusterLedger's patch-append fold, which writes
+    // the delta + the touched-clusters patch map (bytes track the batch).
     sb.append("\n## Incremental MinHash band ledger (per-batch IO vs ledger size)\n\n")
     sb.append("Same-size batches ingested sequentially; the ledger grows 12x. ")
     sb.append("probe64_read_mb is a FIXED 64-doc probe after each ingest+compact: ")
@@ -355,18 +353,15 @@ object ScaleSmoke {
     sb.append("bounded by min(batch_keys, row_groups) x row-group size; at this ")
     sb.append("fixture scale a 10k-key batch touches most 256 KB row groups, at ")
     sb.append("production scale batch_keys << row_groups. compact_sec is the ")
-    sb.append("amortized LSM sorted-run fold. cluster_rw/pa_write_mb compare ")
-    sb.append("ClusterLedger's rewrite vs patch-append folds of the same pairs: ")
-    sb.append("rewrite bytes grow with admitted docs, patch bytes track the ")
-    sb.append("delta.\n\n")
-    sb.append("| batch | ledger_rows_before | pairs_out | ingest_sec | ingest_read_mb | compact_sec | probe64_sec | probe64_read_mb | cluster_rw_write_mb | cluster_pa_write_mb |\n")
-    sb.append("|---|---|---|---|---|---|---|---|---|---|\n")
+    sb.append("amortized LSM sorted-run fold. cluster_pa_write_mb is ")
+    sb.append("ClusterLedger's patch-append fold of the same pairs: its bytes ")
+    sb.append("track the delta.\n\n")
+    sb.append("| batch | ledger_rows_before | pairs_out | ingest_sec | ingest_read_mb | compact_sec | probe64_sec | probe64_read_mb | cluster_pa_write_mb |\n")
+    sb.append("|---|---|---|---|---|---|---|---|---|\n")
     val mhLedger = "scale_minhash_ledger"
-    val clLedger = "scale_cluster_ledger"
-    val clLedgerPa = "scale_cluster_ledger_pa"
+    val clLedger = "scale_cluster_ledger_pa"
     MinHashLedger.init(spark, mhLedger)
-    ClusterLedger.init(spark, clLedger)
-    ClusterLedger.initPatch(spark, clLedgerPa)
+    ClusterLedger.initPatch(spark, clLedger)
     val mhRoot = Files.createTempDirectory("mh_ledger_scale_")
     // half-replicas: 12 same-size batches instead of 6 so the ledger
     // grows >10x within the same smoke budget (pair materialization,
@@ -394,24 +389,18 @@ object ScaleSmoke {
           .count()
       }
       val probeSec = (System.nanoTime() - tp) / 1e9
-      // fold the batch's pairs into the incremental cluster labels in
-      // BOTH modes; the delta CC cost tracks the DELTA, the write
-      // volumes are the two persistence contracts under comparison
+      // fold the batch's pairs into the incremental cluster labels; the
+      // delta CC cost and the write volume track the DELTA
       val ids = batch.select(col("doc_id").as("id"))
       val edges = pairs
         .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
-      val (_, rwIo) = IoMeter.measure(spark) {
-        ClusterLedger.ingest(spark, ids, edges, clLedger,
-          s"$mhRoot/cluster$i")
-      }
       val (_, paIo) = IoMeter.measure(spark) {
-        ClusterLedger.ingestPatch(spark, ids, edges, clLedgerPa,
+        ClusterLedger.ingestPatch(spark, ids, edges, clLedger,
           s"$mhRoot/clusterpa$i")
       }
       val line = f"| ${i + 1} | $before | ${pairs.count()} | $sec%.1f | " +
         f"${ingestIo.readMb}%.1f | $compactSec%.1f | $probeSec%.1f | " +
-        f"${probeIo.readMb}%.1f | ${rwIo.writtenMb}%.1f | " +
-        f"${paIo.writtenMb}%.1f |"
+        f"${probeIo.readMb}%.1f | ${paIo.writtenMb}%.1f |"
       println(s"[scale] $line (probe64 pairs=$probeCnt)")
       sb.append(line + "\n")
     }
@@ -447,24 +436,22 @@ object ScaleSmoke {
       "corpus-sized sig fetch) and row-group pruning keeps the " +
       "duplication out of probe IO (probe64_read_mb above).\n")
 
-    // the two modes must agree after the full sequence
-    val rwLabels = spark.table(clLedger)
-    val paLabels = ClusterLedger.resolvePatch(spark, clLedgerPa)
-    require(rwLabels.exceptAll(paLabels).isEmpty &&
-      paLabels.exceptAll(rwLabels).isEmpty,
-      "ClusterLedger rewrite and patch-append modes diverged")
+    // resolved labels before the checkpoint, materialized because the
+    // checkpoint overwrites both tables the resolve reads
+    val paBefore = ClusterLedger.resolvePatch(spark, clLedger)
+      .localCheckpoint(true)
     // Patch-map maintenance: checkpointPatch folds the map into the
     // base (ONE corpus-sized write, amortized over the 12 delta-sized
     // folds above — the read path's broadcast-small patch guarantee is
     // what it buys) and truncates the map; labels bit-identical after.
     val tk = System.nanoTime()
     val (_, ckptIo) = IoMeter.measure(spark) {
-      ClusterLedger.checkpointPatch(spark, clLedgerPa, s"$mhRoot/ckpt")
+      ClusterLedger.checkpointPatch(spark, clLedger, s"$mhRoot/ckpt")
     }
     val ckptSec = (System.nanoTime() - tk) / 1e9
-    val paAfter = ClusterLedger.resolvePatch(spark, clLedgerPa)
-    require(rwLabels.exceptAll(paAfter).isEmpty &&
-      paAfter.exceptAll(rwLabels).isEmpty,
+    val paAfter = ClusterLedger.resolvePatch(spark, clLedger)
+    require(paBefore.exceptAll(paAfter).isEmpty &&
+      paAfter.exceptAll(paBefore).isEmpty,
       "checkpointPatch changed resolved labels")
     sb.append(f"\nPatch-map maintenance: one checkpointPatch after the " +
       f"12 folds wrote ${ckptIo.writtenMb}%.1f MB in $ckptSec%.1f s " +
@@ -473,8 +460,7 @@ object ScaleSmoke {
       "resolved labels verified bit-identical pre/post.\n")
     spark.sql(s"DROP TABLE IF EXISTS $mhLedger")
     spark.sql(s"DROP TABLE IF EXISTS $clLedger")
-    spark.sql(s"DROP TABLE IF EXISTS $clLedgerPa")
-    spark.sql(s"DROP TABLE IF EXISTS ${clLedgerPa}_patch")
+    spark.sql(s"DROP TABLE IF EXISTS ${clLedger}_patch")
 
     // ---- Production ingest regime: batch_keys << row_groups ----
     // The 12-batch table above shows ingest_read_mb ~flat at ~35 MB —

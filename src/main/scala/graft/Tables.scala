@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Typed loaders for the synthetic star schema at `$sfDir/<name>.parquet`
   * (see FIXTURES.md §2). Always load via these helpers so every query reads
@@ -49,13 +49,43 @@ object Tables {
     * open-cost unit per core. Hash-keyed (never round-robin), so task
     * retries reproduce the same placement (guide §2.5 rand() caveat).
     */
-  def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
+  def spread(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
+    if (underOneOpenCostPerCore(df))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism, key)
+    else df
+
+  /** The small-input test shared by [[spread]] and ClusterLedger's
+    * pushdown guard: `df`'s stats size is under parallelism ×
+    * openCostInBytes, the packing bound under which Spark cannot emit
+    * one split per core.
+    */
+  def underOneOpenCostPerCore(df: DataFrame): Boolean = {
     val spark = df.sparkSession
-    val p = spark.sparkContext.defaultParallelism
-    val openCost = spark.sessionState.conf.filesOpenCostInBytes
-    val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <
-      BigInt(p) * openCost
-    if (small) df.repartition(p, key) else df
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <
+      BigInt(spark.sparkContext.defaultParallelism) *
+        spark.sessionState.conf.filesOpenCostInBytes
+  }
+
+  /** The one capped driver collect: at most `cap` rows of `df`, or None
+    * when it has more (one `limit(cap + 1)` action either way). Callers
+    * take their distributed path on None.
+    */
+  def collectBounded(df: DataFrame, cap: Int): Option[Array[Row]] = {
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length > cap) None else Some(rows)
+  }
+
+  /** Drop a catalog table AND any stale physical location from a
+    * previous JVM: the in-memory catalog forgets the table, its
+    * warehouse dir persists, and CREATE then fails with
+    * LOCATION_ALREADY_EXISTS. Every ledger `init` calls this first.
+    */
+  def dropWithLocation(spark: SparkSession, table: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    val loc = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(loc)) fs.delete(loc, true)
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

@@ -956,7 +956,7 @@ object AdvancedTextQueries {
     mergeTableDf(spark, trainBpeMerges(spark, docs, k))
 
   /** The k-round trainer; returns the merge table as driver state. */
-  private[operators] def trainBpeMerges(spark: SparkSession, docs: DataFrame,
+  private[graft] def trainBpeMerges(spark: SparkSession, docs: DataFrame,
       k: Int, tok: Column => Column = tokens): Seq[(Int, String, String, Long)] = {
     var v = docs
       .select(explode(tok(col("text"))).as("word"))
@@ -1024,7 +1024,7 @@ object AdvancedTextQueries {
       .map { case (_, l, r, _) => (l, r) })
 
   /** Encode-only half: apply a trained merge table in training order. */
-  private[operators] def encodeWith(docs: DataFrame,
+  private[graft] def encodeWith(docs: DataFrame,
       merges: Seq[(String, String)],
       tok: Column => Column = tokens): DataFrame = {
     val spaced = concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 "))

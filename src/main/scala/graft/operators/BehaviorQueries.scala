@@ -528,9 +528,11 @@ object BehaviorQueries {
     // stays ONE action (the capped collect itself — no checkpoint
     // job); only the rare fallback recomputes the matrix, and its own
     // eager checkpoint of the joined edge frame bounds that to once.
-    val take = c.limit(StationaryMaxCells + 1).collect()
-    if (take.length > StationaryMaxCells)
-      return qStationaryDistributed(spark, c.localCheckpoint(true), scale)
+    val take = graft.Tables.collectBounded(c, StationaryMaxCells) match {
+      case Some(rows) => rows
+      case None =>
+        return qStationaryDistributed(spark, c.localCheckpoint(true), scale)
+    }
     val edges = take.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val rowsum = edges.groupBy(_._1).map { case (f, es) => (f, es.map(_._3).sum) }
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted

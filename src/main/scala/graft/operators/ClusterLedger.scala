@@ -25,17 +25,12 @@ import org.apache.spark.sql.functions._
   * (ClusterLedgerSpec proves it pair-for-pair on the fixture corpus
   * through the real MinHashLedger batch flow).
   *
-  * == Two persistence modes ==
+  * == Patch-append persistence ==
   *
-  * REWRITE mode ([[init]]/[[ingest]]): one narrow rewrite of the
-  * (id, component) table per batch — two longs per admitted doc.
-  * Reads are free (the table IS the answer), but per-batch write
-  * volume is corpus-linear: at billions of docs the rewrite dominates.
-  *
-  * PATCH-APPEND mode ([[initPatch]]/[[ingestPatch]]/[[resolvePatch]]):
-  * per-batch writes are proportional to the DELTA. The base label
-  * table is APPEND-ONLY — each batch appends its new docs labeled as
-  * of admission — and merges land in a separate, fully-resolved
+  * ([[initPatch]]/[[ingestPatch]]/[[resolvePatch]]) Per-batch writes
+  * are proportional to the DELTA. The base label table is APPEND-ONLY
+  * — each batch appends its new docs labeled as of admission — and
+  * merges land in a separate, fully-resolved
   * `<table>_patch` map (stale label → current label). Because labels
   * are monotone decreasing and a stale label can never become current
   * again (a cluster's label is its min member id; once remapped to a
@@ -44,12 +39,12 @@ import org.apache.spark.sql.functions._
   * batch — no chains survive — and a read resolves with ONE
   * broadcast-join: `coalesce(patch[component], component)`.
   * Per-batch write = |delta| appended labels + the (touched-clusters-
-  * sized) patch rewrite; measured against rewrite mode in SCALING.md.
-  * ClusterLedgerSpec proves both modes resolve to identical labels
-  * through the real MinHashLedger batch flow.
+  * sized) patch rewrite, where rewriting the whole label table per
+  * batch would write corpus-linear bytes (measured side by side in
+  * SCALING.md's ledger section).
   *
-  * Retry-safe (both modes): MinHashLedger blesses blind re-append for
-  * a crashed-then-retried batch, and the composed pipeline forwards
+  * Retry-safe: MinHashLedger blesses blind re-append for a
+  * crashed-then-retried batch, and the composed pipeline forwards
   * the same batch here — so `newIds` is anti-joined against the
   * already-admitted ids before labeling. Without that, a retried doc
   * would emit a SECOND self-labeled row (`coalesce(component, id)`)
@@ -60,40 +55,6 @@ import org.apache.spark.sql.functions._
 object ClusterLedger {
 
   val NBuckets = 16
-
-  /** Largest batch-id / delta-endpoint set collected to the driver for
-    * the patch-fold point-lookup path (8 MB of longs at the limit —
-    * MinHashLedger.MaxPushdownKeys' twin). At or under the cap the
-    * fold's base-table reads prune by an In filter (the table is
-    * bucketed AND sorted by id, so parquet min/max stats skip
-    * non-matching row groups) and every join broadcasts a
-    * delta-bounded side; past it the fold falls back to the
-    * corpus-proportional shuffle joins — a batch that large is
-    * corpus-scale, where those joins are proportional anyway.
-    */
-  val MaxPatchPushdownIds: Int = 1 << 20
-
-  /** Drop metadata AND any stale physical location from a previous JVM
-    * (in-memory catalog forgets the table, the warehouse dir persists,
-    * and CREATE then fails with LOCATION_ALREADY_EXISTS).
-    */
-  private def dropWithLocation(spark: SparkSession, table: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
-
-  /** Create the empty label table (rewrite mode). */
-  def init(spark: SparkSession, ledgerTable: String): Unit = {
-    import spark.implicits._
-    dropWithLocation(spark, ledgerTable)
-    Seq.empty[(Long, Long)].toDF("id", "component")
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(NBuckets, "id").sortBy("id")
-      .saveAsTable(ledgerTable)
-  }
 
   /** The delta-sized remap: collapse delta-edge endpoints to their
     * current cluster labels (super-nodes), run CC on that collapsed
@@ -115,55 +76,11 @@ object ClusterLedger {
     GraphOps.connectedComponents(superEdges)
   }
 
-  /** Pure delta update: `oldLabels` (a valid min-label components
-    * table of everything admitted so far), this batch's `newIds`
-    * (one `id` column — every admitted doc, paired or not) and the
-    * batch's `deltaEdges` (src, dst) → the updated labels for
-    * prior ∪ new docs.
-    */
-  def updatedLabels(oldLabels: DataFrame, newIds: DataFrame,
-      deltaEdges: DataFrame): DataFrame = {
-    val l = oldLabels.select(col("id"), col("component"))
-    // delta-sized CC; its (super-node -> merged min) rows are the only
-    // remap state — broadcast-joined below so the corpus-sized sides
-    // never exchange
-    val merged = mergeRemap(l, deltaEdges)
-    val relabeledOld = l
-      .join(broadcast(merged.select(col("id").as("component"),
-        col("component").as("c2"))), Seq("component"), "left")
-      .select(col("id"), coalesce(col("c2"), col("component")).as("component"))
-    val newLabeled = newIds.select(col("id"))
-      .join(l.select("id"), Seq("id"), "left_anti")
-      .join(broadcast(merged), Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("component"))
-    relabeledOld.unionByName(newLabeled)
-  }
-
-  /** Fold one batch into the persistent table (rewrite mode):
-    * materialize the updated labels BEFORE overwriting (the plan reads
-    * the table it replaces), then swap. Returns the updated labels
-    * (reading the materialized parquet, valid after the swap).
-    */
-  def ingest(spark: SparkSession, newIds: DataFrame, deltaEdges: DataFrame,
-      ledgerTable: String, tmpDir: String): DataFrame = {
-    updatedLabels(spark.table(ledgerTable), newIds, deltaEdges)
-      .write.mode(SaveMode.Overwrite).parquet(tmpDir)
-    spark.read.parquet(tmpDir)
-      .select("id", "component")
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(NBuckets, "id").sortBy("id")
-      .saveAsTable(ledgerTable)
-    spark.read.parquet(tmpDir)
-  }
-
-  // ---------------- patch-append mode ----------------
-
   /** Create the empty append-only base table + empty patch map. */
   def initPatch(spark: SparkSession, ledgerTable: String): Unit = {
     import spark.implicits._
-    dropWithLocation(spark, ledgerTable)
-    dropWithLocation(spark, patchTable(ledgerTable))
+    graft.Tables.dropWithLocation(spark, ledgerTable)
+    graft.Tables.dropWithLocation(spark, patchTable(ledgerTable))
     Seq.empty[(Long, Long)].toDF("id", "component")
       .write.mode(SaveMode.Overwrite)
       .bucketBy(NBuckets, "id").sortBy("id")
@@ -252,7 +169,7 @@ object ClusterLedger {
     // is corpus-scale, where they are proportional anyway).
     spark.catalog.refreshTable(ledgerTable)
     spark.catalog.refreshTable(patchTable(ledgerTable))
-    // Regime guard (Tables.spread's scale-adaptive move, inverted): the
+    // Regime guard (Tables.spread's small-input test, inverted): the
     // pushdown spends ~2 extra actions per fold (the touched-id collect
     // and the pruned-slice materialization), which only pays once the
     // base table is big enough that corpus-proportional scans dominate
@@ -261,11 +178,7 @@ object ClusterLedger {
     // 11.7 s for the whole 3-batch flow on a KB-sized base), so the
     // small regime keeps the plain joins and the pushdown arms exactly
     // where its delta-proportional IO matters.
-    val baseBig = spark.table(ledgerTable)
-      .queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(spark.sparkContext.defaultParallelism) *
-        spark.sessionState.conf.filesOpenCostInBytes
-    if (!baseBig)
+    if (graft.Tables.underOneOpenCostPerCore(spark.table(ledgerTable)))
       return ingestPatchFallback(spark, newIds, deltaEdges, ledgerTable,
         materialize)
     ingestPatchPushdown(spark, newIds, deltaEdges, ledgerTable, materialize)
@@ -273,7 +186,9 @@ object ClusterLedger {
 
   /** The point-lookup patch fold — package-visible so ClusterLedgerSpec
     * can drive this regime directly on fixture-sized tables the size
-    * guard would route to the fallback.
+    * guard would route to the fallback. The touched-id collect is
+    * capped at MinHashLedger.MaxPushdownKeys (8 MB of longs); past it
+    * the fold takes the fallback.
     */
   private[graft] def ingestPatchPushdown(spark: SparkSession,
       newIds: DataFrame, deltaEdges: DataFrame, ledgerTable: String,
@@ -281,11 +196,13 @@ object ClusterLedger {
     val touched = newIds.select(col("id"))
       .unionAll(deltaEdges.select(col("src").as("id")))
       .unionAll(deltaEdges.select(col("dst").as("id")))
-      .distinct().limit(MaxPatchPushdownIds + 1).collect()
-    if (touched.length > MaxPatchPushdownIds)
-      return ingestPatchFallback(spark, newIds, deltaEdges, ledgerTable,
-        materialize)
-    val touchedIds = touched.map(_.getLong(0))
+      .distinct()
+    val touchedIds =
+      graft.Tables.collectBounded(touched, MinHashLedger.MaxPushdownKeys) match {
+        case Some(rows) => rows.map(_.getLong(0))
+        case None => return ingestPatchFallback(spark, newIds, deltaEdges,
+          ledgerTable, materialize)
+      }
     // the touched slice of the base table, resolved through the patch
     // map exactly like resolvePatch; materialized because the patch
     // table it reads is overwritten later in this fold
@@ -429,8 +346,8 @@ object ClusterLedger {
     * signatures, recursive-CTE reachability, unpaired docs
     * self-labeled), so incremental-fold ≡ full-recompute is
     * hash-checked by the driver, not just spec-asserted
-    * (ClusterLedgerSpec proves the same equality through ingest-mode
-    * folds).
+    * (ClusterLedgerSpec proves the same equality per batch through
+    * durable ingestPatch folds).
     *
     * Everything ephemeral: band + label + patch tables are throwaway
     * UUIDs dropped in the finally, intermediates are eager

@@ -18,9 +18,12 @@ object DedupLedger {
 
   val NBuckets = 16
 
-  /** Create an empty ledger table (bucketed, bucket-sorted by hash). */
+  /** Create an empty ledger table (bucketed, bucket-sorted by hash),
+    * robust to a stale warehouse directory (see Tables.dropWithLocation).
+    */
   def init(spark: SparkSession, ledgerTable: String): Unit = {
     import spark.implicits._
+    graft.Tables.dropWithLocation(spark, ledgerTable)
     Seq.empty[String].toDF("text_hash")
       .write.mode(SaveMode.Overwrite)
       .bucketBy(NBuckets, "text_hash").sortBy("text_hash")

@@ -63,12 +63,13 @@ object GraphOps {
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .localCheckpoint(true)
-    val take = sym.limit(LocalCcMaxEdges + 1).collect()
-    if (take.length > LocalCcMaxEdges)
+    val take = graft.Tables.collectBounded(sym, LocalCcMaxEdges) match {
+      case Some(rows) => rows
       // sym is already symmetrized+deduped+checkpointed: enter the
       // distributed loop past its own re-symmetrization so the
       // big-graph path materializes the edge list exactly once
-      return ccRoundsPreSym(sym, maxIter, 3)._1
+      case None => return ccRoundsPreSym(sym, maxIter, 3)._1
+    }
     // driver union-find with min-label canonicalization
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -138,13 +139,14 @@ object GraphOps {
     // LAZY checkpoint below materializes in the same action.
     //
     // ONE propagation step per action — fusing two steps per action was
-    // tried and MEASURED SLOWER (BenchOne sf0.1 steady-state: single
-    // ~2.5 s; fused ~3.0 s recomputing the twice-referenced inner step,
-    // ~3.7-4.5 s checkpointing it): convergence lands between the two
-    // fused steps often enough that the extra step's shuffle + the
-    // intermediate's block-cache write outweigh the saved action
-    // dispatch. Near-dup graphs converge in a handful of rounds; the
-    // action count is already within one of optimal.
+    // tried and MEASURED SLOWER (`graft.Bench` subset run, sf0.1
+    // steady-state: single ~2.5 s; fused ~3.0 s recomputing the
+    // twice-referenced inner step, ~3.7-4.5 s checkpointing it):
+    // convergence lands between the two fused steps often enough that
+    // the extra step's shuffle + the intermediate's block-cache write
+    // outweigh the saved action dispatch. Near-dup graphs converge in a
+    // handful of rounds; the action count is already within one of
+    // optimal.
     // Pointer jumping: rewrite every label through the label table
     // itself. Every component value is a vertex id with its own row
     // (labels cover all vertices; a label is always some vertex's id),

@@ -91,23 +91,17 @@ object MinHashLedger {
   /** Largest batch key set pushed as an In filter (8 MB of longs at
     * the limit). Beyond this the probe falls back to the plain scan
     * join — a batch that large is corpus-scale, where a scan IS
-    * proportional to the batch.
+    * proportional to the batch. ClusterLedger's point-lookup patch fold
+    * caps its touched-id collect at the same bound.
     */
   val MaxPushdownKeys: Int = 1 << 20
 
-  /** Create the empty band-index ledger. Robust to a stale warehouse
-    * directory from a previous JVM (the in-memory catalog forgets the
-    * table but its location persists; CREATE would then fail with
-    * LOCATION_ALREADY_EXISTS): drop any metadata AND the physical dir
-    * before writing.
+  /** Create the empty band-index ledger (robust to a stale warehouse
+    * directory, see Tables.dropWithLocation).
     */
   def init(spark: SparkSession, ledgerTable: String): Unit = {
     import spark.implicits._
-    spark.sql(s"DROP TABLE IF EXISTS $ledgerTable")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), ledgerTable.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
+    graft.Tables.dropWithLocation(spark, ledgerTable)
     writeSorted(
       Seq.empty[(Long, String, Long, String)]
         .toDF("bkh", "bkey", "doc_id", "sig"),
@@ -397,11 +391,10 @@ object MinHashLedger {
     */
   private def prunedLedger(spark: SparkSession, fresh: DataFrame,
       ledgerTable: String, maxPushdownKeys: Int): DataFrame = {
-    val keys = fresh.select("bkh").distinct()
-      .limit(maxPushdownKeys + 1).collect().map(_.getLong(0))
     val all = spark.table(ledgerTable)
-    if (keys.length <= maxPushdownKeys)
-      all.filter(col("bkh").isInCollection(keys))
-    else all
+    graft.Tables.collectBounded(fresh.select("bkh").distinct(), maxPushdownKeys) match {
+      case Some(keys) => all.filter(col("bkh").isInCollection(keys.map(_.getLong(0))))
+      case None => all
+    }
   }
 }

@@ -100,8 +100,8 @@ object StatsQueries {
     * Why not DECIMAL(38,0) sums (the previous form, kept below as
     * qCorrDecimal): decimal aggregation runs on Decimal128 objects
     * while the digit-group sums stay in primitive longs inside
-    * whole-stage codegen — BenchOne sf0.1 steady-state 0.95 s decimal
-    * vs 0.55 s long split (hi/lo 1e9 variant; the 3-group split
+    * whole-stage codegen — `graft.Bench` subset run, sf0.1
+    * steady-state 0.95 s decimal vs 0.55 s long split (hi/lo 1e9 variant; the 3-group split
     * measures the same), ~1.8× on the round's slowest scalar-agg cell.
     */
   def qCorr(spark: SparkSession, sfDir: String): DataFrame = {

@@ -38,7 +38,7 @@ object UnicodeTextQueries {
   def scripted(c: Column): Column =
     translate(lower(c), "aeiou", "αєиωю")
 
-  private def docsU(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def docsU(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .withColumn("text", scripted(col("text")))
 

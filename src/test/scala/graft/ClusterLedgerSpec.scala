@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{ClusterLedger, GraphOps, MinHashLedger, MinHashLsh}
 
-/** Incremental components must equal the full recompute — both on an
-  * adversarial synthetic delta sequence (cluster merges ACROSS
-  * batches, including a merge of two previously-separate old
-  * clusters) and through the real MinHashLedger batch flow on the
-  * fixture corpus.
+/** Incremental components must equal the one-shot
+  * `GraphOps.connectedComponents` recompute — both on an adversarial
+  * synthetic delta sequence (cluster merges ACROSS batches, including
+  * a merge of two previously-separate old clusters) and after every
+  * batch of the real MinHashLedger flow on the fixture corpus.
   */
 class ClusterLedgerSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sfDir}
@@ -18,54 +18,10 @@ class ClusterLedgerSpec extends AnyFunSuite {
   private def labelsOf(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  test("synthetic deltas: late edges merge old clusters to the true min-label") {
-    val t = "cluster_ledger_syn_t"
-    ClusterLedger.init(spark, t)
-    try {
-      // batch 1: {1,2} and {5,6} form two clusters, 9 isolated
-      val out1 = ClusterLedger.ingest(spark,
-        Seq(1L, 2L, 5L, 6L, 9L).toDF("id"),
-        Seq((1L, 2L), (5L, 6L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("cl_syn1_").toString)
-      assert(labelsOf(out1) ==
-        Set((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L), (9L, 9L)))
-
-      // batch 2: new doc 12 chains the TWO old clusters together
-      // (2—12, 12—5) — the old {5,6} cluster must fall to label 1
-      // even though no delta edge touches 6 directly
-      val out2 = ClusterLedger.ingest(spark,
-        Seq(12L).toDF("id"),
-        Seq((2L, 12L), (12L, 5L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("cl_syn2_").toString)
-      assert(labelsOf(out2) ==
-        Set((1L, 1L), (2L, 1L), (5L, 1L), (6L, 1L), (9L, 9L), (12L, 1L)))
-
-      // equals the one-shot recompute over all edges + isolated ids
-      val full = GraphOps.connectedComponents(
-        Seq((1L, 2L), (5L, 6L), (2L, 12L), (12L, 5L)).toDF("src", "dst"))
-      val fullSet = labelsOf(full) + ((9L, 9L))
-      assert(labelsOf(spark.table(t)) == fullSet)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
-  }
-
-  test("retried batch re-ingest leaves labels exactly as before (no dup rows)") {
-    val t = "cluster_ledger_retry_t"
-    ClusterLedger.init(spark, t)
-    try {
-      ClusterLedger.ingest(spark,
-        Seq(1L, 2L, 5L).toDF("id"), Seq((1L, 2L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("cl_retry1_").toString)
-      val clean = labelsOf(spark.table(t))
-      assert(clean == Set((1L, 1L), (2L, 1L), (5L, 5L)))
-      // crashed-then-retried batch: same newIds + same deltaEdges again.
-      // The anti-join must drop the already-admitted ids; the retried
-      // edges collapse to a no-op merge. One row per doc, labels equal.
-      ClusterLedger.ingest(spark,
-        Seq(1L, 2L, 5L).toDF("id"), Seq((1L, 2L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("cl_retry2_").toString)
-      assert(spark.table(t).count() == 3, "retry must not duplicate label rows")
-      assert(labelsOf(spark.table(t)) == clean)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  /** One-shot CC over `edges`, with every id in no edge self-labeled. */
+  private def oneShotLabels(ids: Set[Long], edges: Seq[(Long, Long)]) = {
+    val paired = labelsOf(GraphOps.connectedComponents(edges.toDF("src", "dst")))
+    paired ++ (ids -- paired.map(_._1)).map(i => (i, i))
   }
 
   test("patch-append mode: adversarial merges + retry resolve identically") {
@@ -82,14 +38,18 @@ class ClusterLedgerSpec extends AnyFunSuite {
       // (patch size must track touched OLD clusters, not admitted docs)
       assert(spark.table(s"${t}_patch").count() == 0)
 
-      // late chain merge of two OLD clusters: label 5 must fall to 1
-      // through the patch map (5 -> 1), never a base rewrite
+      // late chain merge of two OLD clusters through new doc 12
+      // (2—12, 12—5): label 5 must fall to 1 through the patch map
+      // (5 -> 1), never a base rewrite, though no delta edge touches 6
       val out2 = ClusterLedger.ingestPatch(spark,
         Seq(12L).toDF("id"),
         Seq((2L, 12L), (12L, 5L)).toDF("src", "dst"),
         t, Files.createTempDirectory("clp_syn2_").toString)
       assert(labelsOf(out2) ==
         Set((1L, 1L), (2L, 1L), (5L, 1L), (6L, 1L), (9L, 9L), (12L, 1L)))
+      // equals the one-shot recompute over all edges + isolated ids
+      assert(labelsOf(out2) == oneShotLabels(Set(1L, 2L, 5L, 6L, 9L, 12L),
+        Seq((1L, 2L), (5L, 6L), (2L, 12L), (12L, 5L))))
       // the base table was NOT rewritten: rows 5/6 still carry their
       // as-of-admission label, the patch map carries the merge
       assert(labelsOf(spark.table(t)).contains((6L, 5L)))
@@ -104,18 +64,22 @@ class ClusterLedgerSpec extends AnyFunSuite {
         t, Files.createTempDirectory("clp_syn3_").toString)
       assert(labelsOf(out3) == Set((0L, 0L), (1L, 0L), (2L, 0L),
         (5L, 0L), (6L, 0L), (9L, 9L), (12L, 0L)))
+      assert(labelsOf(out3) == oneShotLabels(Set(0L, 1L, 2L, 5L, 6L, 9L, 12L),
+        Seq((1L, 2L), (5L, 6L), (2L, 12L), (12L, 5L), (0L, 6L))))
       val patch = spark.table(s"${t}_patch").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(patch == Set((5L, 0L), (1L, 0L)),
         s"patch map must stay chain-free, got $patch")
 
-      // retried batch: blind re-ingest of batch 3 changes nothing
+      // crashed-then-retried batch: blind re-ingest of batch 3 (same
+      // newIds + same deltaEdges) must drop the already-admitted id and
+      // collapse the edges to a no-op merge — one row per doc, labels equal
       val out3b = ClusterLedger.ingestPatch(spark,
         Seq(0L).toDF("id"),
         Seq((0L, 6L)).toDF("src", "dst"),
         t, Files.createTempDirectory("clp_syn3b_").toString)
       assert(labelsOf(out3b) == labelsOf(out3))
-      assert(spark.table(t).count() == 7)
+      assert(spark.table(t).count() == 7, "retry must not duplicate label rows")
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       spark.sql(s"DROP TABLE IF EXISTS ${t}_patch")
@@ -192,37 +156,6 @@ class ClusterLedgerSpec extends AnyFunSuite {
     }
   }
 
-  test("patch mode ≡ rewrite mode through the real MinHashLedger batch flow") {
-    val near = "cluster_ledger_pvr_near_t"
-    val rw = "cluster_ledger_pvr_rw_t"
-    val pa = "cluster_ledger_pvr_pa_t"
-    MinHashLedger.init(spark, near)
-    ClusterLedger.init(spark, rw)
-    ClusterLedger.initPatch(spark, pa)
-    try {
-      val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      for (b <- 0 until 3) {
-        val batch = docs.filter(pmod(col("doc_id"), lit(3)) === b)
-        val pairs = MinHashLedger.ingest(spark, batch, near,
-          Files.createTempDirectory(s"clpvr_near${b}_").toString)
-        val ids = batch.select(col("doc_id").as("id"))
-        val edges = pairs
-          .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
-        val rwOut = ClusterLedger.ingest(spark, ids, edges, rw,
-          Files.createTempDirectory(s"clpvr_rw${b}_").toString)
-        val paOut = ClusterLedger.ingestPatch(spark, ids, edges, pa,
-          Files.createTempDirectory(s"clpvr_pa${b}_").toString)
-        assert(labelsOf(paOut) == labelsOf(rwOut),
-          s"batch $b: patch-composed labels diverge from rewrite mode")
-      }
-      assert(labelsOf(ClusterLedger.resolvePatch(spark, pa)) ==
-        labelsOf(spark.table(rw)))
-    } finally {
-      Seq(near, rw, pa, s"${pa}_patch")
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    }
-  }
-
   test("q_dedup_incr_clusters: the query-surface flow equals one-shot CC on its universe") {
     val out = SparkEntry.queries("q_dedup_incr_clusters")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -265,34 +198,35 @@ class ClusterLedgerSpec extends AnyFunSuite {
     val near = "cluster_ledger_near_t"
     val clus = "cluster_ledger_labels_t"
     MinHashLedger.init(spark, near)
-    ClusterLedger.init(spark, clus)
+    ClusterLedger.initPatch(spark, clus)
     try {
       val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+      var ids = Set.empty[Long]
+      var edges = Seq.empty[(Long, Long)]
       for (b <- 0 until 3) {
         val batch = docs.filter(pmod(col("doc_id"), lit(3)) === b)
         val pairs = MinHashLedger.ingest(spark, batch, near,
           Files.createTempDirectory(s"cl_near${b}_").toString)
-        ClusterLedger.ingest(spark,
+        val out = ClusterLedger.ingestPatch(spark,
           batch.select(col("doc_id").as("id")),
           pairs.select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")),
           clus, Files.createTempDirectory(s"cl_lab${b}_").toString)
+        ids ++= batch.select("doc_id").collect().map(_.getLong(0))
+        edges ++= pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
+        val got = out.collect().map(r => (r.getLong(0), r.getLong(1)))
+        assert(got.length == ids.size, s"batch $b: one label row per admitted doc")
+        assert(got.toSet == oneShotLabels(ids, edges),
+          s"batch $b: labels diverge from one-shot CC over the pairs so far")
       }
+      // by the append-monotone ledger theorem the per-batch pairs are the
+      // one-shot LSH pair set, so the final labels are its components
       val oneShotPairs = MinHashLsh.candidatePairs(docs)
-        .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
-      val oneShot = GraphOps.connectedComponents(oneShotPairs)
-      // docs in no pair are self-labeled in the ledger; one-shot CC
-      // only covers paired docs — compare on the paired universe and
-      // check the rest are self-labeled
-      val incr = labelsOf(spark.table(clus))
-      val oneShotSet = labelsOf(oneShot)
-      val pairedIds = oneShotSet.map(_._1)
-      assert(incr.filter(t => pairedIds(t._1)) == oneShotSet)
-      assert(incr.filterNot(t => pairedIds(t._1)).forall(t => t._1 == t._2))
-      assert(incr.map(_._1) ==
-        docs.select("doc_id").collect().map(_.getLong(0)).toSet)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(labelsOf(ClusterLedger.resolvePatch(spark, clus)) ==
+        oneShotLabels(ids, oneShotPairs))
     } finally {
-      spark.sql(s"DROP TABLE IF EXISTS $near")
-      spark.sql(s"DROP TABLE IF EXISTS $clus")
+      Seq(near, clus, s"${clus}_patch")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
   }
 }

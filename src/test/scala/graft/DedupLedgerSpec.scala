@@ -3,10 +3,11 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.DedupLedger
+import graft.operators.{ClusterLedger, DedupLedger, MinHashLedger}
 
 /** Cross-run incremental dedup: run 2 must admit only content unseen
-  * in run 1, and a re-ingested identical batch admits nothing.
+  * in run 1, and a re-ingested identical batch admits nothing. Every
+  * ledger's `init` also survives a stale warehouse directory.
   */
 class DedupLedgerSpec extends AnyFunSuite {
   import SparkTestSession.spark
@@ -45,5 +46,28 @@ class DedupLedgerSpec extends AnyFunSuite {
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $ledger")
     }
+  }
+
+  test("every ledger init replaces a stale warehouse directory") {
+    // a previous JVM's table: the in-memory catalog forgot it, its
+    // warehouse dir (with data in it) is still on disk
+    def plantStale(table: String): Unit = {
+      spark.sql(s"DROP TABLE IF EXISTS $table")
+      val dir = new org.apache.hadoop.fs.Path(
+        spark.conf.get("spark.sql.warehouse.dir"), table)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val out = fs.create(new org.apache.hadoop.fs.Path(dir, "part-00000-stale"))
+      try out.writeBytes("stale") finally out.close()
+    }
+    val inits: Seq[(Seq[String], String => Unit)] = Seq(
+      Seq("dedup_ledger_stale_t") -> (t => DedupLedger.init(spark, t)),
+      Seq("minhash_ledger_stale_t") -> (t => MinHashLedger.init(spark, t)),
+      Seq("cluster_ledger_stale_t", "cluster_ledger_stale_t_patch") ->
+        (t => ClusterLedger.initPatch(spark, t)))
+    try inits.foreach { case (tables, init) =>
+      tables.foreach(plantStale)
+      init(tables.head)
+      tables.foreach(t => assert(spark.table(t).count() == 0, s"$t must start empty"))
+    } finally inits.flatMap(_._1).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }

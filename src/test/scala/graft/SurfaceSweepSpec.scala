@@ -339,9 +339,28 @@ class SurfaceSweepSpec extends AnyFunSuite {
     else a.indices.find(i => a(i) != b(i))
       .map(i => s"$name differs at row $i: ${a(i)} vs ${b(i)}")
 
+  /** The memoized BPE queries, recomputed in the twin session with a
+    * fresh training run (the memo would otherwise hand run B run A's
+    * merge table).
+    */
+  private lazy val unmemoized: Map[String, () => DataFrame] = {
+    import operators.{AdvancedTextQueries => A, UnicodeTextQueries => U}
+    import operators.TextQueries.tokensUnicode
+    Map(
+      "q_bpe_merges" -> (() =>
+        A.bpeMergesFrom(twin, Tables.documents(twin, sfDir), A.BpeMergeRounds)),
+      "q_bpe_encode_unicode" -> { () =>
+        val docs = U.docsU(twin, sfDir)
+        A.encodeWith(docs,
+          A.trainBpeMerges(twin, docs, A.BpeMergeRounds, tokensUnicode)
+            .map { case (_, l, r, _) => (l, r) },
+          tokensUnicode)
+      })
+  }
+
   /** (check, message) per failed check. Plans are read before execution,
     * while AQE's scans are not yet hidden inside query stages. The
-    * memoized q_bpe_merges is also checked against a retrain in run B.
+    * memoized BPE queries are also checked against a retrain in run B.
     */
   private def sweepOne(name: String, fn: (SparkSession, String) => DataFrame): Seq[(String, String)] =
     try {
@@ -358,10 +377,7 @@ class SurfaceSweepSpec extends AnyFunSuite {
       }
       val uncrashed = nodesB.exists(_.isInstanceOf[FileSourceScanExec]) &&
         CrashOnce.totalExecutions == before
-      val retrained = Option.when(name == "q_bpe_merges")(quietCrashLogs {
-        operators.AdvancedTextQueries.bpeMergesFrom(twin, Tables.documents(twin, sfDir),
-          operators.AdvancedTextQueries.BpeMergeRounds).collect().toSeq
-      })
+      val retrained = unmemoized.get(name).map(f => quietCrashLogs(f().collect().toSeq))
       audit ++ splitViolation(name, nodesB).map("split" -> _) ++
         (rowDiff(name, rowsA, rowsB) ++
           retrained.flatMap(rowDiff(s"$name retrained without the memo", rowsA, _)))
