@@ -122,13 +122,11 @@ object ExplainDump {
       MinHashLedger.init(spark, mh)
       ClusterLedger.initPatch(spark, clp)
       try {
-        val runDir = java.nio.file.Files
-          .createTempDirectory("explain_ledger_").toString
-        val pairs = MinHashLedger.ingest(spark, seed, mh, runDir)
+        val pairs = MinHashLedger.ingest(spark, seed, mh)
         val ids = seed.select(col("doc_id").as("id"))
         val edges = pairs
           .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
-        ClusterLedger.ingestPatch(spark, ids, edges, clp, s"$runDir/clp")
+        ClusterLedger.ingestPatch(spark, ids, edges, clp)
         val ledgerPlans = Seq(
           "minhash_ledger_probe (point-lookup pruned)" ->
             MinHashLedger.candidatePairsAgainst(spark, probeBatch, mh),

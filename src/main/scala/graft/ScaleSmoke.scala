@@ -377,7 +377,7 @@ object ScaleSmoke {
       val before = spark.table(mhLedger).count()
       val t0 = System.nanoTime()
       val (pairs, ingestIo) = IoMeter.measure(spark) {
-        MinHashLedger.ingest(spark, batch, mhLedger, s"$mhRoot/run$i")
+        MinHashLedger.ingest(spark, batch, mhLedger)
       }
       val sec = (System.nanoTime() - t0) / 1e9
       val tc = System.nanoTime()
@@ -395,8 +395,7 @@ object ScaleSmoke {
       val edges = pairs
         .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
       val (_, paIo) = IoMeter.measure(spark) {
-        ClusterLedger.ingestPatch(spark, ids, edges, clLedger,
-          s"$mhRoot/clusterpa$i")
+        ClusterLedger.ingestPatch(spark, ids, edges, clLedger)
       }
       val line = f"| ${i + 1} | $before | ${pairs.count()} | $sec%.1f | " +
         f"${ingestIo.readMb}%.1f | $compactSec%.1f | $probeSec%.1f | " +
@@ -404,38 +403,6 @@ object ScaleSmoke {
       println(s"[scale] $line (probe64 pairs=$probeCnt)")
       sb.append(line + "\n")
     }
-    // Byte-footprint evaluation (r8 ask): the ledger denormalizes the
-    // full signature onto every band row (x4 duplication at rest) so a
-    // probe never needs a second lookup; the alternative normalizes to
-    // narrow band rows + one (doc_id, sig) side table. Both written
-    // once from the final ledger and sized. The denormalized form is
-    // KEPT: at-rest duplication is parquet-columnar and row-group-
-    // pruned out of probe IO (the probe64 column above), while the
-    // normalized form would add a second corpus-sized point-lookup
-    // join (sig fetch) to every probe — the measured at-rest delta
-    // below is the price of keeping probes single-lookup.
-    def dirMb(path: String): Double = {
-      def walk(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
-        else f.length
-      walk(new java.io.File(path)) / 1e6
-    }
-    val finalLedger = spark.table(mhLedger)
-    finalLedger.select("bkh", "bkey", "doc_id")
-      .write.mode("overwrite").parquet(s"$mhRoot/norm_bands")
-    finalLedger.select("doc_id", "sig").distinct()
-      .write.mode("overwrite").parquet(s"$mhRoot/norm_sigs")
-    val denormMb = dirMb(spark.sql(s"DESC FORMATTED $mhLedger")
-      .filter(col("col_name") === "Location")
-      .head().getString(1).stripPrefix("file:"))
-    sb.append(f"\nAt-rest footprint of the final ledger: denormalized " +
-      f"(sig on every band row, as shipped) ${denormMb}%.1f MB vs " +
-      f"normalized (bands ${dirMb(s"$mhRoot/norm_bands")}%.1f MB + " +
-      f"doc→sig side table ${dirMb(s"$mhRoot/norm_sigs")}%.1f MB). " +
-      "Denormalized is kept: probes stay single-lookup (no second " +
-      "corpus-sized sig fetch) and row-group pruning keeps the " +
-      "duplication out of probe IO (probe64_read_mb above).\n")
-
     // resolved labels before the checkpoint, materialized because the
     // checkpoint overwrites both tables the resolve reads
     val paBefore = ClusterLedger.resolvePatch(spark, clLedger)
@@ -478,11 +445,16 @@ object ScaleSmoke {
     sb.append("\n### Ingest read IO vs batch size (fixed big ledger — the production regime)\n\n")
     val regime = "scale_minhash_regime"
     MinHashLedger.init(spark, regime)
-    val regimeRoot = Files.createTempDirectory("mh_regime_")
     val nRep = 60
     MinHashLedger.bulkLoad(spark,
       Replicas.union(nRep)(replicaSlice), regime)
     val ledgerRows = spark.table(regime).count()
+    def dirMb(path: String): Double = {
+      def walk(f: java.io.File): Long =
+        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
+        else f.length
+      walk(new java.io.File(path)) / 1e6
+    }
     val ledgerMb = dirMb(spark.sql(s"DESC FORMATTED $regime")
       .filter(col("col_name") === "Location")
       .head().getString(1).stripPrefix("file:"))
@@ -508,8 +480,7 @@ object ScaleSmoke {
     sb.append("many TB) that per-file minimum is a vanishing fraction of ")
     sb.append("the corpus, which is the claim that matters: a 256x smaller ")
     sb.append("batch never re-reads the corpus. ingest_read_mb is the full ")
-    sb.append("ingest (probe + its own pair-materialization re-read + the ")
-    sb.append("batch source).\n\n")
+    sb.append("ingest (probe + the batch source).\n\n")
     sb.append("| batch_docs | batch_band_keys | ledger_rows_before | pairs_out | probe_read_mb | ingest_sec | ingest_read_mb |\n")
     sb.append("|---|---|---|---|---|---|---|\n")
     for ((n, i) <- Seq(2048, 512, 128, 32, 8).zipWithIndex) {
@@ -522,7 +493,7 @@ object ScaleSmoke {
       }
       val t0 = System.nanoTime()
       val (pairs, io) = IoMeter.measure(spark) {
-        MinHashLedger.ingest(spark, batch, regime, s"$regimeRoot/run$n")
+        MinHashLedger.ingest(spark, batch, regime)
       }
       val sec = (System.nanoTime() - t0) / 1e9
       val line = f"| $n | $keys | $before | ${pairs.count()} | " +

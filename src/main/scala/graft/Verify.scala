@@ -1,5 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (tools/selfcheck.py). A query
   * that throws does not stop the dump; once everything else is written
@@ -28,21 +30,9 @@ object Verify {
           Some(name)
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    implicit val formats: Formats = DefaultFormats
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      Serialization.write(SparkEntry.oracleSql))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(

@@ -19,15 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object AggQueries {
 
-  /** A 2-dp monetary double as exact integer cents. x·100 is within
-    * ~1e-9 of an integer (never at a .5 boundary), so HALF_UP rounding
-    * is identical in both engines; all downstream arithmetic is
-    * overflow-free long math — exact, order-independent, and (unlike
-    * DECIMAL aggregation) pure primitive codegen with no per-row
-    * allocation.
-    */
-  private def cents(c: Column): Column = round(c * 100).cast("long")
-
   /** TPC-H Q1 style: per (returnflag, linestatus) sums/avg/count over
     * lineitem. All money math in exact integer cents (see cents());
     * disc price = cents·(100−discount_cents) is exact in units of

@@ -17,12 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object AnalyticsQueries {
 
-  /** value in exact cents — the same monetary algebra every composite
-    * query here uses (sums of 2-dp doubles are inexact; sums of their
-    * cent-rounded longs are exact).
-    */
-  private def cents(c: Column): Column = round(c * 100, 0).cast("long")
-
   /** Revenue concentration per segment: the share of a segment's spend
     * held by its top-10 customers — the per-group concentration gauge
     * between q_gini's whole-distribution index and q_heavy_hitters'

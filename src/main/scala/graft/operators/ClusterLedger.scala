@@ -119,39 +119,18 @@ object ClusterLedger {
         coalesce(col("to_label"), col("component")).as("component"))
   }
 
-  /** Fold one batch in patch-append mode. Writes: the batch's
-    * first-time ids labeled as of admission (APPEND, delta-sized) and
-    * the substituted patch map (overwrite of a touched-clusters-sized
-    * side table). The corpus-sized base table is never rewritten.
-    * Returns the resolved labels after the fold.
+  /** Fold one batch in patch-append mode — the one body of this step;
+    * every incremental flow calls it. Writes: the batch's first-time
+    * ids labeled as of admission (APPEND, delta-sized) and the
+    * substituted patch map (overwrite of a touched-clusters-sized side
+    * table). The corpus-sized base table is never rewritten.
+    * Intermediates are eager localCheckpoints, computed before the
+    * tables they read are overwritten or appended; a crashed fold is
+    * replayed whole (see the class doc's retry note). Returns the
+    * resolved labels after the fold.
     */
   def ingestPatch(spark: SparkSession, newIds: DataFrame,
-      deltaEdges: DataFrame, ledgerTable: String, tmpDir: String): DataFrame =
-    ingestPatchImpl(spark, newIds, deltaEdges, ledgerTable,
-      (df, name) => {
-        df.write.mode(SaveMode.Overwrite).parquet(s"$tmpDir/$name")
-        spark.read.parquet(s"$tmpDir/$name")
-      })
-
-  /** Patch-mode fold whose intermediates live in executor storage
-    * (eager localCheckpoints) instead of caller-owned parquet dirs —
-    * the query-surface form: same fold, nothing written outside the
-    * ledger tables, nothing leaked when the tables drop. The durable
-    * [[ingestPatch]] keeps the tmpDir contract for pipelines that want
-    * the delta remap and new labels as restartable artifacts.
-    */
-  def ingestPatchEphemeral(spark: SparkSession, newIds: DataFrame,
-      deltaEdges: DataFrame, ledgerTable: String): DataFrame =
-    ingestPatchImpl(spark, newIds, deltaEdges, ledgerTable,
-      (df, _) => df.localCheckpoint(true))
-
-  /** The fold body; `materialize(df, name)` must return an EAGERLY
-    * computed stand-in for `df` that stays valid after the ledger
-    * tables it reads are overwritten/appended.
-    */
-  private def ingestPatchImpl(spark: SparkSession, newIds: DataFrame,
-      deltaEdges: DataFrame, ledgerTable: String,
-      materialize: (DataFrame, String) => DataFrame): DataFrame = {
+      deltaEdges: DataFrame, ledgerTable: String): DataFrame = {
     // == Point-lookup regime (the MinHashLedger.prunedLedger twin) ==
     // The fold only ever needs base-table rows for THIS BATCH's ids
     // (admitted-or-not) and the delta edges' endpoints (their current
@@ -179,9 +158,8 @@ object ClusterLedger {
     // small regime keeps the plain joins and the pushdown arms exactly
     // where its delta-proportional IO matters.
     if (graft.Tables.underOneOpenCostPerCore(spark.table(ledgerTable)))
-      return ingestPatchFallback(spark, newIds, deltaEdges, ledgerTable,
-        materialize)
-    ingestPatchPushdown(spark, newIds, deltaEdges, ledgerTable, materialize)
+      return ingestPatchFallback(spark, newIds, deltaEdges, ledgerTable)
+    ingestPatchPushdown(spark, newIds, deltaEdges, ledgerTable)
   }
 
   /** The point-lookup patch fold — package-visible so ClusterLedgerSpec
@@ -191,8 +169,8 @@ object ClusterLedger {
     * the fold takes the fallback.
     */
   private[graft] def ingestPatchPushdown(spark: SparkSession,
-      newIds: DataFrame, deltaEdges: DataFrame, ledgerTable: String,
-      materialize: (DataFrame, String) => DataFrame): DataFrame = {
+      newIds: DataFrame, deltaEdges: DataFrame,
+      ledgerTable: String): DataFrame = {
     val touched = newIds.select(col("id"))
       .unionAll(deltaEdges.select(col("src").as("id")))
       .unionAll(deltaEdges.select(col("dst").as("id")))
@@ -200,21 +178,20 @@ object ClusterLedger {
     val touchedIds =
       graft.Tables.collectBounded(touched, MinHashLedger.MaxPushdownKeys) match {
         case Some(rows) => rows.map(_.getLong(0))
-        case None => return ingestPatchFallback(spark, newIds, deltaEdges,
-          ledgerTable, materialize)
+        case None =>
+          return ingestPatchFallback(spark, newIds, deltaEdges, ledgerTable)
       }
     // the touched slice of the base table, resolved through the patch
     // map exactly like resolvePatch; materialized because the patch
     // table it reads is overwritten later in this fold
-    val epLabels = materialize(
-      spark.table(ledgerTable)
-        .filter(col("id").isInCollection(touchedIds))
-        .join(broadcast(spark.table(patchTable(ledgerTable))
-          .withColumnRenamed("from_label", "component")),
-          Seq("component"), "left")
-        .select(col("id"),
-          coalesce(col("to_label"), col("component")).as("component")),
-      "ep_labels")
+    val epLabels = spark.table(ledgerTable)
+      .filter(col("id").isInCollection(touchedIds))
+      .join(broadcast(spark.table(patchTable(ledgerTable))
+        .withColumnRenamed("from_label", "component")),
+        Seq("component"), "left")
+      .select(col("id"),
+        coalesce(col("to_label"), col("component")).as("component"))
+      .localCheckpoint(true)
     // super-node collapse on broadcast endpoint labels (mergeRemap's
     // algebra with the join sides flipped to the delta-bounded frame)
     val superEdges = deltaEdges
@@ -225,32 +202,29 @@ object ClusterLedger {
       .select(coalesce(col("sc"), col("src")).as("src"),
         coalesce(col("dc"), col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
-    val m = materialize(
-      GraphOps.connectedComponents(superEdges)
-        .select(col("id").as("from_label"), col("component").as("to_label"))
-        .filter(col("from_label") =!= col("to_label")),
-      "merged")
+    val m = GraphOps.connectedComponents(superEdges)
+      .select(col("id").as("from_label"), col("component").as("to_label"))
+      .filter(col("from_label") =!= col("to_label"))
+      .localCheckpoint(true)
     // first-time ids = batch ids with no base row among the touched
     // slice (newIds ⊆ touched, so the slice decides membership)
     val firstTime = newIds.select(col("id"))
       .join(broadcast(epLabels.select("id")), Seq("id"), "left_anti")
-    finishPatchFold(spark, m, firstTime, ledgerTable, materialize)
+    finishPatchFold(spark, m, firstTime, ledgerTable)
   }
 
   /** The corpus-proportional patch fold — the pre-pushdown shape, kept
     * verbatim as the past-the-cap regime.
     */
   private def ingestPatchFallback(spark: SparkSession, newIds: DataFrame,
-      deltaEdges: DataFrame, ledgerTable: String,
-      materialize: (DataFrame, String) => DataFrame): DataFrame = {
+      deltaEdges: DataFrame, ledgerTable: String): DataFrame = {
     val resolved = resolvePatch(spark, ledgerTable)
     // materialize the delta remap BEFORE touching the patch table (the
     // resolve plan reads it); delta-sized
-    val m = materialize(
-      mergeRemap(resolved, deltaEdges)
-        .select(col("id").as("from_label"), col("component").as("to_label"))
-        .filter(col("from_label") =!= col("to_label")),
-      "merged")
+    val m = mergeRemap(resolved, deltaEdges)
+      .select(col("id").as("from_label"), col("component").as("to_label"))
+      .filter(col("from_label") =!= col("to_label"))
+      .localCheckpoint(true)
     // the patch map records only OLD cluster labels that moved: a
     // remap entry keyed by one of this batch's first-time ids is
     // served by the base append below (the doc lands already-merged),
@@ -260,31 +234,27 @@ object ClusterLedger {
     // the anti-join drops nothing a read could ever need.
     val firstTime = newIds.select(col("id"))
       .join(spark.table(ledgerTable).select("id"), Seq("id"), "left_anti")
-    finishPatchFold(spark, m, firstTime, ledgerTable, materialize)
+    finishPatchFold(spark, m, firstTime, ledgerTable)
   }
 
   /** Shared tail of both patch-fold regimes: compose the patch map,
     * append first-time admissions, return the resolved labels.
     */
   private def finishPatchFold(spark: SparkSession, m: DataFrame,
-      firstTime: DataFrame, ledgerTable: String,
-      materialize: (DataFrame, String) => DataFrame): DataFrame = {
+      firstTime: DataFrame, ledgerTable: String): DataFrame = {
     val mOld = m.join(firstTime.withColumnRenamed("id", "from_label"),
       Seq("from_label"), "left_anti")
     // one substitution pass keeps the map fully resolved: existing
     // entries pointing at a label this batch re-merged follow it to
     // the new min; no chains can survive, so reads stay one join
-    val composed = materialize(
-      spark.table(patchTable(ledgerTable))
-        .join(broadcast(mOld.select(col("from_label").as("to_label"),
-          col("to_label").as("to2"))),
-          Seq("to_label"), "left")
-        .select(col("from_label"),
-          coalesce(col("to2"), col("to_label")).as("to_label"))
-        .unionByName(mOld),
-      "patch")
-    composed
-      .select("from_label", "to_label")
+    spark.table(patchTable(ledgerTable))
+      .join(broadcast(mOld.select(col("from_label").as("to_label"),
+        col("to_label").as("to2"))),
+        Seq("to_label"), "left")
+      .select(col("from_label"),
+        coalesce(col("to2"), col("to_label")).as("to_label"))
+      .unionByName(mOld)
+      .localCheckpoint(true)
       .write.mode(SaveMode.Overwrite).format("parquet")
       .saveAsTable(patchTable(ledgerTable))
     // first-time admissions, labeled as of NOW (post-merge). A new
@@ -292,14 +262,12 @@ object ClusterLedger {
     // the m join lands its merged min; unpaired docs self-label.
     // Materialized before the append — the plan anti-joins the table
     // it inserts into.
-    materialize(
-      firstTime
-        .join(broadcast(m.withColumnRenamed("from_label", "id")), Seq("id"),
-          "left")
-        .select(col("id"),
-          coalesce(col("to_label"), col("id")).as("component")),
-      "new_labels")
-      .select("id", "component")
+    firstTime
+      .join(broadcast(m.withColumnRenamed("from_label", "id")), Seq("id"),
+        "left")
+      .select(col("id"),
+        coalesce(col("to_label"), col("id")).as("component"))
+      .localCheckpoint(true)
       .write.mode(SaveMode.Append).insertInto(ledgerTable)
     resolvePatch(spark, ledgerTable)
   }
@@ -347,11 +315,11 @@ object ClusterLedger {
     * self-labeled), so incremental-fold ≡ full-recompute is
     * hash-checked by the driver, not just spec-asserted
     * (ClusterLedgerSpec proves the same equality per batch through
-    * durable ingestPatch folds).
+    * the same ingest and ingestPatch calls).
     *
     * Everything ephemeral: band + label + patch tables are throwaway
-    * UUIDs dropped in the finally, intermediates are eager
-    * localCheckpoints — no caller-owned dirs, nothing leaked.
+    * UUIDs dropped in the finally — no caller-owned dirs, nothing
+    * leaked.
     */
   def qDedupIncrClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = MinHashLedger.incrUniverse(spark, sfDir)
@@ -363,12 +331,8 @@ object ClusterLedger {
     try {
       (0 until 3).foreach { b =>
         val batch = docs.filter(pmod(col("doc_id"), lit(3)) === b)
-        val bands = MinHashLedger.bandRows(batch).localCheckpoint(false)
-        // this batch's pairs are fixed BEFORE its band rows land
-        val pairs = MinHashLedger.candidatesFromBands(spark, bands,
-          bandTable, MinHashLsh.BucketCap).localCheckpoint(true)
-        MinHashLedger.writeSorted(bands, bandTable, SaveMode.Append)
-        ingestPatchEphemeral(spark,
+        val pairs = MinHashLedger.ingest(spark, batch, bandTable)
+        ingestPatch(spark,
           batch.select(col("doc_id").as("id")),
           pairs.select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")),
           labelTable)

@@ -188,7 +188,6 @@ object CompositeQueries {
     * nation/region joins, and a |nations|-row window.
     */
   def qSupplierBalance(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (c: Column) => round(c * 100).cast("long")
     val byNation = Tables.supplier(spark, sfDir)
       .groupBy(col("s_nationkey"))
       .agg(count(lit(1)).as("n_suppliers"),
@@ -224,7 +223,6 @@ object CompositeQueries {
     * fact-sized catalog — q_anomaly_mad's GK note applies).
     */
   def qBrandPrices(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (c: Column) => round(c * 100).cast("long")
     val p = Tables.part(spark, sfDir)
       .select(col("p_brand"), col("p_partkey"),
         cents(col("p_retailprice")).as("pc"))
@@ -260,7 +258,6 @@ object CompositeQueries {
     * partkey either way), folding to |brands| rows map-side.
     */
   def qBrandReturns(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (c: Column) => round(c * 100).cast("long")
     val parts = Tables.part(spark, sfDir)
       .select(col("p_partkey").as("l_partkey"), col("p_brand"))
     Tables.lineitem(spark, sfDir)
@@ -297,7 +294,6 @@ object CompositeQueries {
     * final partial-agg merge.
     */
   def qDiscountRevenue(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (c: Column) => round(c * 100).cast("long")
     val bps = (c: Column) => round(c * 10000).cast("long")
     Tables.lineitem(spark, sfDir)
       .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp") &&
@@ -369,7 +365,6 @@ object CompositeQueries {
     * broadcasts, and the final fold is \|segments\| rows.
     */
   def qBasketBySegment(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (c: Column) => round(c * 100).cast("long")
     val perOrder = Tables.lineitem(spark, sfDir)
       .groupBy("l_orderkey")
       .agg(count(lit(1)).as("n_lines"),
@@ -408,7 +403,6 @@ object CompositeQueries {
     * a broadcast customer dimension join is the only exchange input.
     */
   def qWeekendEffect(spark: SparkSession, sfDir: String): DataFrame = {
-    val cents = (c: Column) => round(c * 100).cast("long")
     val seg = Tables.customer(spark, sfDir)
       .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
     val isWeekend = pmod(datediff(to_date(col("o_orderdate")),
@@ -579,8 +573,6 @@ object CompositeQueries {
         (sum(col("price_c")).cast("double") / 100.0).as("small_revenue"))
       .orderBy(asc_nulls_first("p_brand"))
   }
-
-  private def cents(c: Column): Column = round(c * 100).cast("long")
 
   /** TPC-H Q22 shape (untapped accounts): customers with above-average
     * positive balance who never placed an URGENT order, per segment —

@@ -148,7 +148,6 @@ object CurationQueries {
     * overflow, not silent wrap (q_gini's convention).
     */
   def qFeatureScale(spark: SparkSession, sfDir: String): DataFrame = {
-    def cents(c: Column): Column = round(c * 100).cast("long")
     val li = Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
         cents(col("l_quantity")).as("xq"),

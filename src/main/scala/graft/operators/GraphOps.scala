@@ -41,6 +41,16 @@ object GraphOps {
     */
   val LocalCcMaxEdges = 65536
 
+  /** Both directions of every edge, deduplicated and materialized
+    * (eager localCheckpoint): every traversal here re-joins the list
+    * per round, so the upstream pair-generation plan runs once.
+    */
+  private def symmetrized(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
+      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .localCheckpoint(true)
+
   /** edges(src, dst) → (id, component) for every vertex appearing in
     * any edge; component = the minimum vertex id reachable from `id`.
     *
@@ -59,10 +69,7 @@ object GraphOps {
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 40): DataFrame = {
     val spark = edges.sparkSession
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
+    val sym = symmetrized(edges)
     val take = graft.Tables.collectBounded(sym, LocalCcMaxEdges) match {
       case Some(rows) => rows
       // sym is already symmetrized+deduped+checkpointed: enter the
@@ -97,16 +104,8 @@ object GraphOps {
     * deep chains then collapse logarithmically).
     */
   def connectedComponentsWithRounds(edges: DataFrame, maxIter: Int = 40,
-      shortcutAfter: Int = 3): (DataFrame, Int) = {
-    // materialize the symmetrized edge list once: it is re-joined every
-    // iteration, and without the checkpoint each round would re-run the
-    // (possibly expensive) upstream pair-generation plan from scratch
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    ccRoundsPreSym(sym, maxIter, shortcutAfter)
-  }
+      shortcutAfter: Int = 3): (DataFrame, Int) =
+    ccRoundsPreSym(symmetrized(edges), maxIter, shortcutAfter)
 
   /** The propagation loop over an ALREADY symmetrized, deduplicated,
     * materialized edge list — the entry [[connectedComponents]]'s
@@ -315,10 +314,7 @@ object GraphOps {
     * chains exactly like connectedComponents' cap.
     */
   def bfsDepths(edges: DataFrame, maxIter: Int = 30): (DataFrame, Int) = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
+    val sym = symmetrized(edges)
     var labels = sym.agg(min(col("src")).as("node"))
       .select(col("node"), lit(0L).as("depth"))
       .localCheckpoint(true)

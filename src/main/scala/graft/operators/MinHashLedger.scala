@@ -10,22 +10,21 @@ import org.apache.spark.sql.functions._
   * content hashes to the LSH band index.
   *
   * The ledger stores one row per (band, bucket) membership:
-  * `(bkh, bkey, doc_id, sig)` with `bkey = band '#' bucket-hash`
-  * exactly as `MinHashLsh.candidatePairs` keys its shuffle, `bkh =
-  * xxhash64(bkey)` the fixed-width probe key, and `sig` the full
-  * NumHashes-slot signature (pipe-joined md5 hex strings). A new
-  * batch:
+  * `(bkh, bkey, doc_id)` with `bkey = band '#' bucket-hash` exactly as
+  * `MinHashLsh.candidatePairs` keys its shuffle and `bkh =
+  * xxhash64(bkey)` the fixed-width probe key. A new batch:
   *
   *   1. computes its own band rows (one pass over the BATCH only),
   *   2. probes the ledger with a bkey equi-join — new docs meet
   *      previously-ingested docs ONLY inside a shared bucket, the
   *      same inverted-index pruning as the one-shot LSH, so prior
   *      corpora are never re-scanned or re-hashed,
-  *   3. emits candidate pairs (new×old ∪ new×new) with the
-  *      signature-estimated Jaccard (matching-slot fraction — the
-  *      standard MinHash estimator, computable from the LEDGER alone,
-  *      no old-document fetch),
+  *   3. emits candidate pairs (new×old ∪ new×new) as `(doc_id_1 <
+  *      doc_id_2)`, the columns of `MinHashLsh.candidatePairs`,
   *   4. appends its band rows.
+  *
+  * [[ingest]] is the one body of that step; every incremental flow
+  * calls it.
   *
   * == Probe IO is bounded by the BATCH, not the corpus (r8 fix) ==
   *
@@ -103,8 +102,7 @@ object MinHashLedger {
     import spark.implicits._
     graft.Tables.dropWithLocation(spark, ledgerTable)
     writeSorted(
-      Seq.empty[(Long, String, Long, String)]
-        .toDF("bkh", "bkey", "doc_id", "sig"),
+      Seq.empty[(Long, String, Long)].toDF("bkh", "bkey", "doc_id"),
       ledgerTable, SaveMode.Overwrite)
   }
 
@@ -128,14 +126,9 @@ object MinHashLedger {
     * oracle computes directly from the same salted-md5 signatures, so
     * the incremental≡one-shot equivalence is hash-checked by the
     * driver, not just spec-asserted. The cap (bucket df ≤ 10000) is
-    * encoded on both sides; it never binds at fixture scale.
-    *
-    * Unlike the durable [[ingest]] API (whose runDir parquet is the
-    * caller-owned at-least-once output contract), the query flow
-    * materializes each batch's pairs as an EAGER localCheckpoint —
-    * computed before the append mutates the ledger, held in executor
-    * storage, nothing written outside the throwaway table (which the
-    * finally drops, data included).
+    * encoded on both sides; it never binds at fixture scale. Nothing
+    * is written outside the throwaway table (which the finally drops,
+    * data included).
     */
   def qDedupIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = incrUniverse(spark, sfDir)
@@ -146,35 +139,25 @@ object MinHashLedger {
     init(spark, table)
     try {
       (0 until 3).map { b =>
-        val bands = bandRows(docs.filter(pmod(col("doc_id"), lit(3)) === b))
-          .localCheckpoint(false)
-        // eager: this batch's pairs are fixed BEFORE its band rows land
-        val pairs = candidatesFromBands(spark, bands, table,
-          MinHashLsh.BucketCap)
-          .select("doc_id_1", "doc_id_2")
-          .localCheckpoint(true)
-        writeSorted(bands, table, SaveMode.Append)
-        pairs
+        ingest(spark, docs.filter(pmod(col("doc_id"), lit(3)) === b), table)
       }.reduce(_ unionAll _)
         .orderBy("doc_id_1", "doc_id_2")
     } finally spark.sql(s"DROP TABLE IF EXISTS $table")
   }
 
-  /** Band rows of a batch: (bkh, bkey, doc_id, sig) — one row per band
-    * per doc, sig carried whole so pair estimation never refetches
-    * docs.
+  /** Band rows of a batch: (bkh, bkey, doc_id) — one row per band
+    * per doc.
     */
   def bandRows(docs: DataFrame): DataFrame = {
     import MinHashLsh.{Bands, RowsPerBand}
     MinHashLsh.signatures(docs)
-      .select(col("doc_id"), col("sig"),
+      .select(col("doc_id"),
         explode(array((0 until Bands).map(b =>
           concat_ws("#", lit(b.toString),
             concat_ws("|", (0 until RowsPerBand).map(r =>
               element_at(col("sig"), b * RowsPerBand + r + 1)): _*))): _*))
           .as("bkey"))
-      .select(xxhash64(col("bkey")).as("bkh"), col("bkey"), col("doc_id"),
-        array_join(col("sig"), "|").as("sig"))
+      .select(xxhash64(col("bkey")).as("bkh"), col("bkey"), col("doc_id"))
   }
 
   /** Range-sorted small-row-group write — every ledger file is one
@@ -194,7 +177,7 @@ object MinHashLedger {
     * drive qDedupIncremental concurrently) into default-128MB ledger
     * runs or 256KB unrelated tables.
     */
-  private[operators] def writeSorted(df: DataFrame, table: String,
+  private def writeSorted(df: DataFrame, table: String,
       mode: SaveMode): Unit = {
     val spark = df.sparkSession
     if (mode == SaveMode.Append) assertLedgerLayout(spark, table)
@@ -236,28 +219,27 @@ object MinHashLedger {
 
   /** Ingest one batch: emit its candidate near-dup pairs against the
     * corpus so far (including itself), then append its band rows. The
-    * returned frame reads the materialized pair parquet at `runDir`,
-    * so it stays valid after the ledger has absorbed the batch.
+    * pairs are an EAGER localCheckpoint computed before the append, so
+    * the returned frame stays valid after the ledger has absorbed the
+    * batch; a crashed ingest is replayed whole (see [[compact]]).
     *
-    * Output: (doc_id_1 < doc_id_2, est_jaccard) — est_jaccard the
-    * matching-signature-slot fraction, rounded 6 dp.
+    * Output: (doc_id_1 < doc_id_2).
     */
   def ingest(spark: SparkSession, batch: DataFrame, ledgerTable: String,
-      runDir: String, bucketCap: Int = MinHashLsh.BucketCap): DataFrame = {
+      bucketCap: Int = MinHashLsh.BucketCap): DataFrame = {
     // one signature pass for both the probe and the append
     val bands = bandRows(batch).localCheckpoint(false)
-    candidatesFromBands(spark, bands, ledgerTable, bucketCap)
-      .write.mode(SaveMode.Overwrite).parquet(s"$runDir/pairs")
+    val pairs = candidatesFromBands(spark, bands, ledgerTable, bucketCap)
+      .localCheckpoint(true)
     writeSorted(bands, ledgerTable, SaveMode.Append)
-    spark.read.parquet(s"$runDir/pairs")
+    pairs
   }
 
   /** Fold the accumulated sorted runs into ONE globally-sorted run
     * without duplicate (bkey, doc_id) rows. A crashed-and-retried
     * batch re-appends its band rows blindly (at-least-once append is
     * the cheap, lock-free contract — pair output stays correct because
-    * emission dedupes per pair, and the signature per (bkey, doc_id)
-    * is deterministic so duplicates are bit-identical, and the
+    * emission dedupes per pair, duplicates are bit-identical, and the
     * hot-bucket cap counts distinct (bkey, doc_id), so duplicates
     * cannot inflate df past `bucketCap`). What duplicates and
     * accumulated runs DO cost is probe fan-out (a probe reads ≤ keys
@@ -270,12 +252,11 @@ object MinHashLedger {
   def compact(spark: SparkSession, ledgerTable: String,
       tmpDir: String): Unit = {
     spark.table(ledgerTable)
-      .groupBy("bkey", "doc_id").agg(min(col("sig")).as("sig"))
+      .select("bkey", "doc_id").distinct()
       .write.mode(SaveMode.Overwrite).parquet(tmpDir)
     writeSorted(
       spark.read.parquet(tmpDir)
-        .select(xxhash64(col("bkey")).as("bkh"), col("bkey"), col("doc_id"),
-          col("sig")),
+        .select(xxhash64(col("bkey")).as("bkh"), col("bkey"), col("doc_id")),
       ledgerTable, SaveMode.Overwrite)
     // the overwrite replaced every file; refresh here (once per
     // compaction, not per probe) so any OTHER session in this JVM —
@@ -307,7 +288,7 @@ object MinHashLedger {
     candidatesFromBands(spark, bandRows(batch).localCheckpoint(false),
       ledgerTable, bucketCap, maxPushdownKeys)
 
-  private[operators] def candidatesFromBands(spark: SparkSession, fresh: DataFrame,
+  private def candidatesFromBands(spark: SparkSession, fresh: DataFrame,
       ledgerTable: String, bucketCap: Int,
       maxPushdownKeys: Int = MaxPushdownKeys): DataFrame = {
     require(bucketCap > 1, "bucketCap must exceed 1")
@@ -320,10 +301,8 @@ object MinHashLedger {
     // point-lookup parquet read happens once per probe (previously
     // twice: cap totals + pair join — it doubled the per-probe floor
     // in SCALING.md's regime table).
-    val all = old.select(col("bkey"), col("doc_id"), col("sig"),
-        lit(false).as("is_new"))
-      .unionAll(fresh.select(col("bkey"), col("doc_id"), col("sig"),
-        lit(true).as("is_new")))
+    val all = old.select(col("bkey"), col("doc_id"), lit(false).as("is_new"))
+      .unionAll(fresh.select(col("bkey"), col("doc_id"), lit(true).as("is_new")))
       .repartition(col("bkey"))
     // hot-bucket guard over the POST-append population, counted as
     // DISTINCT DOCS per bucket, not rows: accumulated LSM runs and
@@ -345,22 +324,15 @@ object MinHashLedger {
       .withColumn("df", count(lit(1)).over(wB))
       .withColumn("has_new", max(col("is_new")).over(wB))
       .filter(col("df") > 1 && col("df") <= bucketCap && col("has_new"))
-    val freshOk = ok.filter(col("is_new")).select("bkey", "doc_id", "sig")
-    val corpusOk = ok.select("bkey", "doc_id", "sig")
-    val estJaccard = round(
-      size(filter(zip_with(
-        split(col("a.sig"), "\\|"), split(col("b.sig"), "\\|"),
-        (x, y) => x === y), m => m)).cast("double") /
-        size(split(col("a.sig"), "\\|")), 6) + lit(0.0)
+    val freshOk = ok.filter(col("is_new")).select("bkey", "doc_id")
+    val corpusOk = ok.select("bkey", "doc_id")
     freshOk.as("a")
       .join(corpusOk.as("b"),
         col("a.bkey") === col("b.bkey") && col("a.doc_id") =!= col("b.doc_id"))
       .select(
         least(col("a.doc_id"), col("b.doc_id")).as("doc_id_1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_id_2"),
-        estJaccard.as("est_jaccard"))
-      .groupBy("doc_id_1", "doc_id_2")
-      .agg(max(col("est_jaccard")).as("est_jaccard"))
+        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_id_2"))
+      .distinct()
   }
 
   /** The ledger, pruned to the batch's touched keys when the batch is

@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object StatsQueries {
 
-  private def cents(c: Column): Column = round(c * 100).cast("long")
-
   /** Exact per-segment median of customer account balances: the mean of
     * the middle one-or-two order statistics, picked by row_number —
     * identical algebra in both engines, no quantile interpolation.

@@ -13,11 +13,14 @@ import graft.operators.{ClusterLedger, MinHashLedger}
   * pairs) and ClusterLedger (patch-append min-label components) one
   * micro-batch at a time via `foreachBatch`.
   *
-  * Semantics per micro-batch b:
+  * Semantics per micro-batch b, through the same two calls every
+  * incremental flow makes:
   *   1. `MinHashLedger.ingest` emits b's candidate near-dup pairs
-  *      against the corpus-so-far (including b itself), materialized
-  *      under `workDir/batch=<id>/pairs`, then appends b's band rows.
-  *   2. `ClusterLedger.ingestPatch` folds those pairs into the
+  *      `(doc_id_1, doc_id_2)` against the corpus-so-far (including b
+  *      itself), then appends b's `(bkh, bkey, doc_id)` band rows; the
+  *      sink writes those pairs to `workDir/batch=<id>/pairs`, the one
+  *      artifact it publishes.
+  *   2. `ClusterLedger.ingestPatch` folds the pairs into the
   *      incremental min-label components (delta-sized patch write).
   * By the append-monotone theorem (MinHashLedgerSpec) the UNION of
   * per-batch pair sets equals the one-shot banded-LSH pair set over
@@ -55,12 +58,12 @@ object LedgerSink {
       clusterTable: String, workDir: String, checkpointDir: String): Unit = {
     val fold: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val spark = batch.sparkSession
-      val pairs = MinHashLedger.ingest(spark, batch, nearTable,
-        s"$workDir/batch=$batchId")
+      val pairs = MinHashLedger.ingest(spark, batch, nearTable)
+      pairs.write.mode("overwrite").parquet(s"$workDir/batch=$batchId/pairs")
       ClusterLedger.ingestPatch(spark,
         batch.select(col("doc_id").as("id")),
         pairs.select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")),
-        clusterTable, s"$workDir/clustertmp$batchId")
+        clusterTable)
       ()
     }
     val q = docs.writeStream

@@ -30,8 +30,7 @@ class ClusterLedgerSpec extends AnyFunSuite {
     try {
       val out1 = ClusterLedger.ingestPatch(spark,
         Seq(1L, 2L, 5L, 6L, 9L).toDF("id"),
-        Seq((1L, 2L), (5L, 6L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("clp_syn1_").toString)
+        Seq((1L, 2L), (5L, 6L)).toDF("src", "dst"), t)
       assert(labelsOf(out1) ==
         Set((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L), (9L, 9L)))
       // first-batch merges land in the base append, NOT the patch map
@@ -43,8 +42,7 @@ class ClusterLedgerSpec extends AnyFunSuite {
       // (5 -> 1), never a base rewrite, though no delta edge touches 6
       val out2 = ClusterLedger.ingestPatch(spark,
         Seq(12L).toDF("id"),
-        Seq((2L, 12L), (12L, 5L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("clp_syn2_").toString)
+        Seq((2L, 12L), (12L, 5L)).toDF("src", "dst"), t)
       assert(labelsOf(out2) ==
         Set((1L, 1L), (2L, 1L), (5L, 1L), (6L, 1L), (9L, 9L), (12L, 1L)))
       // equals the one-shot recompute over all edges + isolated ids
@@ -60,8 +58,7 @@ class ClusterLedgerSpec extends AnyFunSuite {
       // (5 -> 1) entry must follow to (5 -> 0) in the SAME pass
       val out3 = ClusterLedger.ingestPatch(spark,
         Seq(0L).toDF("id"),
-        Seq((0L, 6L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("clp_syn3_").toString)
+        Seq((0L, 6L)).toDF("src", "dst"), t)
       assert(labelsOf(out3) == Set((0L, 0L), (1L, 0L), (2L, 0L),
         (5L, 0L), (6L, 0L), (9L, 9L), (12L, 0L)))
       assert(labelsOf(out3) == oneShotLabels(Set(0L, 1L, 2L, 5L, 6L, 9L, 12L),
@@ -76,8 +73,7 @@ class ClusterLedgerSpec extends AnyFunSuite {
       // collapse the edges to a no-op merge — one row per doc, labels equal
       val out3b = ClusterLedger.ingestPatch(spark,
         Seq(0L).toDF("id"),
-        Seq((0L, 6L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("clp_syn3b_").toString)
+        Seq((0L, 6L)).toDF("src", "dst"), t)
       assert(labelsOf(out3b) == labelsOf(out3))
       assert(spark.table(t).count() == 7, "retry must not duplicate label rows")
     } finally {
@@ -91,11 +87,9 @@ class ClusterLedgerSpec extends AnyFunSuite {
     // routes to the fallback — drive the pushdown regime directly and
     // demand the same adversarial-merge algebra the fallback proves
     val t = "cluster_ledger_push_t"
-    val eph = (df: org.apache.spark.sql.DataFrame, _: String) =>
-      df.localCheckpoint(true)
     def fold(ids: Seq[Long], edges: Seq[(Long, Long)]) =
       ClusterLedger.ingestPatchPushdown(spark, ids.toDF("id"),
-        edges.toDF("src", "dst"), t, eph)
+        edges.toDF("src", "dst"), t)
     ClusterLedger.initPatch(spark, t)
     try {
       val out1 = fold(Seq(1L, 2L, 5L, 6L, 9L), Seq((1L, 2L), (5L, 6L)))
@@ -124,12 +118,10 @@ class ClusterLedgerSpec extends AnyFunSuite {
     try {
       ClusterLedger.ingestPatch(spark,
         Seq(1L, 2L, 5L, 6L, 9L).toDF("id"),
-        Seq((1L, 2L), (5L, 6L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("clc_1_").toString)
+        Seq((1L, 2L), (5L, 6L)).toDF("src", "dst"), t)
       ClusterLedger.ingestPatch(spark,
         Seq(12L).toDF("id"),
-        Seq((2L, 12L), (12L, 5L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("clc_2_").toString)
+        Seq((2L, 12L), (12L, 5L)).toDF("src", "dst"), t)
       val before = labelsOf(ClusterLedger.resolvePatch(spark, t))
       assert(spark.table(s"${t}_patch").count() == 1, "fixture must have a live patch entry")
 
@@ -144,8 +136,7 @@ class ClusterLedgerSpec extends AnyFunSuite {
       // folds after a checkpoint compose: merging the 1-cluster into 0
       // patches exactly the one touched (post-checkpoint) old label
       val out = ClusterLedger.ingestPatch(spark,
-        Seq(0L).toDF("id"), Seq((0L, 6L)).toDF("src", "dst"),
-        t, Files.createTempDirectory("clc_3_").toString)
+        Seq(0L).toDF("id"), Seq((0L, 6L)).toDF("src", "dst"), t)
       assert(labelsOf(out) == Set((0L, 0L), (1L, 0L), (2L, 0L),
         (5L, 0L), (6L, 0L), (9L, 9L), (12L, 0L)))
       assert(spark.table(s"${t}_patch").collect()
@@ -205,12 +196,10 @@ class ClusterLedgerSpec extends AnyFunSuite {
       var edges = Seq.empty[(Long, Long)]
       for (b <- 0 until 3) {
         val batch = docs.filter(pmod(col("doc_id"), lit(3)) === b)
-        val pairs = MinHashLedger.ingest(spark, batch, near,
-          Files.createTempDirectory(s"cl_near${b}_").toString)
+        val pairs = MinHashLedger.ingest(spark, batch, near)
         val out = ClusterLedger.ingestPatch(spark,
           batch.select(col("doc_id").as("id")),
-          pairs.select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")),
-          clus, Files.createTempDirectory(s"cl_lab${b}_").toString)
+          pairs.select(col("doc_id_1").as("src"), col("doc_id_2").as("dst")), clus)
         ids ++= batch.select("doc_id").collect().map(_.getLong(0))
         edges ++= pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
         val got = out.collect().map(r => (r.getLong(0), r.getLong(1)))

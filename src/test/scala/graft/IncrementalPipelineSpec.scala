@@ -27,8 +27,7 @@ class IncrementalPipelineSpec extends AnyFunSuite {
         val admitted = DedupLedger.ingest(spark,
           rows.toDF("doc_id", "text"), "text", "doc_id", exact,
           Files.createTempDirectory(s"incr_${tag}_adm_").toString)
-        val pairs = MinHashLedger.ingest(spark, admitted, near,
-          Files.createTempDirectory(s"incr_${tag}_nd_").toString)
+        val pairs = MinHashLedger.ingest(spark, admitted, near)
         (admitted.select("doc_id").as[Long].collect().toSet,
           pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
       }

@@ -24,10 +24,13 @@ class MinHashLedgerSpec extends AnyFunSuite {
 
       val incremental = (0 until 3).flatMap { b =>
         val batch = docs.filter(pmod(col("doc_id"), lit(3)) === b)
-        MinHashLedger.ingest(spark, batch, ledger,
-          Files.createTempDirectory(s"mh_ledger_run${b}_").toString)
-          .collect().map(r => (r.getLong(0), r.getLong(1)))
+        val pairs = MinHashLedger.ingest(spark, batch, ledger)
+        // the incremental flow emits exactly the one-shot LSH columns
+        assert(pairs.columns.toSeq == MinHashLsh.candidatePairs(batch).columns.toSeq)
+        pairs.collect().map(r => (r.getLong(0), r.getLong(1)))
       }
+      // the ledger holds band rows only: no signature payload
+      assert(spark.table(ledger).columns.toSeq == Seq("bkh", "bkey", "doc_id"))
       // no batch may emit a pair twice across runs (append-monotone)
       assert(incremental.distinct.length == incremental.length,
         "a pair was emitted by more than one batch")
@@ -35,31 +38,25 @@ class MinHashLedgerSpec extends AnyFunSuite {
     } finally spark.sql(s"DROP TABLE IF EXISTS $ledger")
   }
 
-  test("signature-estimated Jaccard: identical docs estimate 1.0; bounds hold") {
+  test("cross-run pairs: disjoint docs emit none; an exact dup pairs via ledger") {
     import spark.implicits._
     val ledger = "minhash_ledger_est_t"
     MinHashLedger.init(spark, ledger)
     try {
       val run1 = Seq((1L, "alpha beta gamma delta"), (2L, "zeta eta theta iota"))
         .toDF("doc_id", "text")
-      val out1 = MinHashLedger.ingest(spark, run1, ledger,
-        Files.createTempDirectory("mh_est_run1_").toString)
+      val out1 = MinHashLedger.ingest(spark, run1, ledger)
       assert(out1.count() == 0, "disjoint docs must not collide")
 
       // run 2: an exact dup of doc 1 and a 3/5-overlap neighbor
       val run2 = Seq(
         (10L, "alpha beta gamma delta"),
         (11L, "alpha beta gamma kappa lambda")).toDF("doc_id", "text")
-      val out2 = MinHashLedger.ingest(spark, run2, ledger,
-        Files.createTempDirectory("mh_est_run2_").toString).collect()
-      val est = out2.map(r =>
-        (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-      assert(est((1L, 10L)) == 1.0,
-        "identical token sets share every minhash slot")
-      est.values.foreach(e => assert(e >= 0.0 && e <= 1.0))
-      // the exact dup must also be found across runs at all, through
-      // the LEDGER (doc 1 was ingested in run 1)
-      assert(est.contains((1L, 10L)))
+      val out2 = MinHashLedger.ingest(spark, run2, ledger).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+      // the exact dup must be found across runs, through the LEDGER
+      // (doc 1 was ingested in run 1)
+      assert(out2.contains((1L, 10L)))
     } finally spark.sql(s"DROP TABLE IF EXISTS $ledger")
   }
 
@@ -70,24 +67,22 @@ class MinHashLedgerSpec extends AnyFunSuite {
     try {
       val run1 = Seq((1L, "alpha beta gamma delta"), (2L, "zeta eta theta"))
         .toDF("doc_id", "text")
-      MinHashLedger.ingest(spark, run1, ledger,
-        Files.createTempDirectory("mh_retry_run1_").toString)
+      MinHashLedger.ingest(spark, run1, ledger)
       val clean = spark.table(ledger).count()
       // simulate a crashed-then-retried batch: blind re-append
-      MinHashLedger.ingest(spark, run1, ledger,
-        Files.createTempDirectory("mh_retry_run1b_").toString)
+      MinHashLedger.ingest(spark, run1, ledger)
       assert(spark.table(ledger).count() == 2 * clean)
 
       val probe = Seq((10L, "alpha beta gamma delta")).toDF("doc_id", "text")
       val before = MinHashLedger.candidatePairsAgainst(spark, probe, ledger)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
       MinHashLedger.compact(spark, ledger,
         Files.createTempDirectory("mh_retry_compact_").toString)
       assert(spark.table(ledger).count() == clean,
         "compaction must restore one row per (bkey, doc_id)")
       val after = MinHashLedger.candidatePairsAgainst(spark, probe, ledger)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(after == before && after.exists(_._1 == 1L))
     } finally spark.sql(s"DROP TABLE IF EXISTS $ledger")
   }
@@ -97,8 +92,7 @@ class MinHashLedgerSpec extends AnyFunSuite {
     MinHashLedger.init(spark, ledger)
     try {
       val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
-      MinHashLedger.ingest(spark, docs, ledger,
-        Files.createTempDirectory("mh_push_seed_").toString)
+      MinHashLedger.ingest(spark, docs, ledger)
       val probe = docs.filter(pmod(col("doc_id"), lit(7)) === 1)
 
       // the point-lookup prune must be IN THE PLAN: every ledger scan
@@ -131,10 +125,8 @@ class MinHashLedgerSpec extends AnyFunSuite {
       // pair-for-pair identical output
       val fallback = MinHashLedger.candidatePairsAgainst(
         spark, probe, ledger, maxPushdownKeys = 0)
-      val a = pushed.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val b = fallback.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val a = pushed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val b = fallback.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(a == b, "pushed and fallback probes diverge")
       assert(a.nonEmpty, "fixture probe should find near-dups")
     } finally spark.sql(s"DROP TABLE IF EXISTS $ledger")

@@ -114,13 +114,12 @@ class StreamingLedgerSpec extends AnyFunSuite {
       // count would let the duplicate rows push buckets over BucketCap
       // and silently suppress pairs.
       val batch1 = docs.filter(pmod(col("doc_id"), lit(3)) === 1)
-      val replayPairs = MinHashLedger.ingest(spark, batch1, near,
-        s"$tmp/replay")
+      val replayPairs = MinHashLedger.ingest(spark, batch1, near)
       ClusterLedger.ingestPatch(spark,
         batch1.select(col("doc_id").as("id")),
         replayPairs.select(col("doc_id_1").as("src"),
           col("doc_id_2").as("dst")),
-        clus, s"$tmp/replay_clus")
+        clus)
       val firstAttempt = spark.read.parquet(s"$work/batch=1/pairs")
         .select("doc_id_1", "doc_id_2").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
