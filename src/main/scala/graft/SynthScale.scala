@@ -27,7 +27,7 @@ object SynthScale {
     val k = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.fromEnv()
 
-    def load(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def load(name: String): DataFrame = Tables.load(spark, src, name)
     // single FILE per table, matching the driver fixtures' layout (the
     // DuckDB oracle globs `<dir>/<table>.parquet` as a file)
     def save(df: DataFrame, name: String): Unit = {
@@ -59,7 +59,8 @@ object SynthScale {
     save(replicate(load("orders"), Seq("o_orderkey", "o_custkey")), "orders")
     save(replicate(load("lineitem"),
       Seq("l_orderkey", "l_partkey", "l_suppkey")), "lineitem")
-    save(replicate(load("events"), Seq("event_id", "user_id")), "events")
+    // through the ts shim, so a nanos-generation source writes micros
+    save(replicate(Tables.events(spark, src), Seq("event_id", "user_id")), "events")
     // n_chars tracks the perturbed text (the fixture invariant
     // n_chars == length(text) holds in the base data)
     save(replicate(load("documents"), Seq("doc_id"),
@@ -74,9 +75,9 @@ object SynthScale {
       (d, i) =>
         (if (i == 0) d
          else d.withColumn("embedding",
+           // back to float: Tables declares embedding ARRAY<FLOAT>
            transform(col("embedding"), (x, j) =>
-             x + Replicas.jitterDelta(col("vec_id"), i, j)
-               .cast("float") / 20000.0f)))
+             (x + Replicas.jitterDelta(col("vec_id"), i, j) / 20000.0).cast("float"))))
           .select("vec_id", "embedding", "label")), "embeddings")
     println(s"[synth] done: $out at ${k}x of $src")
     spark.stop()

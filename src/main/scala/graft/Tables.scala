@@ -1,35 +1,88 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Typed loaders for the synthetic star schema at `$sfDir/<name>.parquet`
   * (see FIXTURES.md §2). Always load via these helpers so every query reads
   * through the same parquet datasource: Catalyst then gets predicate
   * pushdown + column pruning on the scan for free, which is the behavior
   * that matters at 100 TB (the reference instead reads whole files into
-  * memory — `/root/reference/mr/worker.go:111-123`).
+  * memory — `mr/worker.go:111-123`).
+  *
+  * Every table is read with its declared schema ([[Schemas]]), so a load
+  * starts no schema-inference job. `events.ts` is the one column whose
+  * type depends on the fixture generation: the driver reads the ts
+  * annotation from the file footer ([[tsIsNanos]]) and declares
+  * TIMESTAMP(NANOS) files as BIGINT, anything else as TIMESTAMP.
   */
 object Tables {
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** FIXTURES.md §2 as code, every column nullable. `TablesSchemaSpec`
+    * keeps it equal to the schema Spark infers from each fixture file.
+    */
+  val Schemas: Map[String, StructType] = Map(
+    "region"     -> "r_regionkey INT, r_name STRING",
+    "nation"     -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer"   -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+                     "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier"   -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part"       -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+                     "p_size INT, p_retailprice DOUBLE"),
+    "orders"     -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+                     "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"),
+    "lineitem"   -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+                     "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+                     "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+                     "l_linestatus STRING, l_shipdate TIMESTAMP"),
+    "events"     -> ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, " +
+                     "value DOUBLE, props STRING"),
+    "documents"  -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val declared =
+      if (name == "events" && tsIsNanos(spark, path))
+        StructType(Schemas(name).map(f => if (f.name == "ts") f.copy(dataType = LongType) else f))
+      else Schemas(name)
+    spark.read.schema(declared).parquet(path)
+  }
+
+  /** Whether `ts` in the single parquet file at `path` is annotated
+    * TIMESTAMP(NANOS). Reads its footer on the driver; starts no Spark job.
+    */
+  private def tsIsNanos(spark: SparkSession, path: String): Boolean = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
+    val schema = try reader.getFileMetaData.getSchema finally reader.close()
+    schema.getType(schema.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+      case _ => false
+    }
+  }
 
   /** Timestamp normalization across testdata generations. Older fixtures
     * store `ts` as parquet TIMESTAMP(NANOS), which Spark cannot represent
-    * (micros only): sessions set
+    * (micros only): [[load]] declares it BIGINT, sessions set
     * `spark.sql.legacy.parquet.nanosAsLong=true` so the column arrives as
     * nanos-since-epoch LONG, and `ts DIV 1000` truncates to micros — the
     * exact same truncation DuckDB applies reading the file, keeping the
     * oracle comparable (integer division only: a double roundtrip would
     * lose precision above 2^53 ns). Newer fixtures store micros with
-    * `isAdjustedToUTC=false`, which Spark 4 would surface as
-    * TIMESTAMP_NTZ — a type `unix_micros`/`Row.getTimestamp` reject — so
-    * sessions also set `spark.sql.parquet.inferTimestampNTZ.enabled=false`
-    * to read it as the session-UTC TIMESTAMP the whole engine (and the
-    * DuckDB oracle, which treats it as naive) already assumes.
+    * `isAdjustedToUTC=false`, declared TIMESTAMP: the session-UTC
+    * TIMESTAMP the whole engine (and the DuckDB oracle, which treats it
+    * as naive) already assumes, never TIMESTAMP_NTZ, a type
+    * `unix_micros`/`Row.getTimestamp` reject. Declaring BIGINT over
+    * micros would return raw micros that the shim then corrupts.
     */
   private def eventsWithMicrosTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    if (df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    if (df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
     else df
   }

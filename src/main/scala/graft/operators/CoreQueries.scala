@@ -103,9 +103,11 @@ object CoreQueries {
       .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z]+")).as("word"))
       .filter(col("word") =!= "")
       .groupBy("word")
-      .agg(
-        countDistinct(col("doc_id")).as("n_docs"),
-        array_join(sort_array(collect_set(col("doc_id").cast("string"))), ",").as("doc_ids"))
+      .agg(collect_set(col("doc_id").cast("string")).as("ids"))
+      .select(
+        col("word"),
+        size(col("ids")).cast("long").as("n_docs"),
+        array_join(sort_array(col("ids")), ",").as("doc_ids"))
       .orderBy("word")
 
   /** Words appearing in more documents than this keep no posting list

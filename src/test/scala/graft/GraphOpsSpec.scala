@@ -200,7 +200,7 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(lp.map(_._2).toSet.subsetOf(nodes))
     // propagation can never cross a component boundary: rebuild the
     // edge list and check each (node, community) pair co-resides
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+    val li = Tables.lineitem(spark, sfDir)
     val pairs = operators.BehaviorQueries.cooccurPairCounts(li)
       .filter(col("n_orders") >= operators.AnalyticsQueries.PagerankMinCooccur)
       .select("p1", "p2")

@@ -1,8 +1,11 @@
 #!/bin/bash
 # Dev loop: compile, run graft.Verify at $1 (default sf0.01), selfcheck.
-# Bypasses `sbt run` startup by invoking java directly.
+# Compiles with sbt first (a no-op when the classes are current), then
+# runs Verify with java directly to skip `sbt run`'s forked startup.
 set -e
-cd /root/repo
+cd "$(dirname "$0")/.."
+sbt --batch -Dsbt.log.noformat=true compile >/tmp/verify_build.log 2>&1 ||
+  { tail -30 /tmp/verify_build.log; echo "verify.sh: build failed" >&2; exit 1; }
 SF_DIR=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
 shift 2 2>/dev/null || shift $#
