@@ -111,7 +111,7 @@ object Bench {
     // table creates + appends + CC rounds) inside one bench entry.
     // pipeline_sec is the WALL TIME of those pipeline-flow queries
     // (ingest IO dominates it, but probe compute and CC rounds are
-    // included — it is not an IO meter; IoMeter measures bytes), so it
+    // included — it is not an IO meter), so it
     // gets its own named field and an ex-pipeline total that stays
     // comparable round-over-round as more pipeline flows join the
     // surface. The SAME key names appear in bench_full_last.json and

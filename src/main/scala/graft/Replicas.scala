@@ -3,15 +3,15 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The corpus replica transform of [[ScaleSmoke]], [[SynthScale]] and the
+/** The corpus replica transform of [[SynthScale]] and the
   * jittered-replica recall spec. Replica i shifts keys by i·offset (FK
   * pairs by the same offset, so join structure replicates), moves text to
   * its own token space (no token or shingle shared across replicas, so
   * the duplicate rate stays the base corpus's instead of exploding k²),
   * and jitters embeddings by a deterministic integer delta each caller
   * scales in its own precision. Offsets, and whether replica 0 is
-  * perturbed, stay with the call sites: they fix SCALING.md and the sf1
-  * fixtures.
+  * perturbed, stay with the call sites: they fix the k× fixtures that
+  * SCALING.md and the sf1 sweep run on.
   */
 object Replicas {
   /** Two-letter replica tag: aa, ba, …, za, ab, … */

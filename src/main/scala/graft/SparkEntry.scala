@@ -197,7 +197,7 @@ object SparkEntry {
     // ANN scale paths: deterministic end-to-end (fixed hyperplane seed /
     // k-means seed) but approximate in recall, so no SQL oracle — the
     // driver records rows>0; recall is property-tested (ScalePathSpec)
-    // and measured against exact ground truth in SCALING.md.
+    // and timed at 1x/4x/16x in SCALING.md.
     "ann_lsh_topk"      -> ((s: SparkSession, d: String) =>
       LshKnn.approxTopKMultiProbe(s, d, 5, nFlip = 1)),
     "ann_ivf_topk"      -> ((s: SparkSession, d: String) =>

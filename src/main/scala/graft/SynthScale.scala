@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Writes a k×-scaled synthetic copy of a testdata directory (default
@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * ±0.05 float jitter. Replica 0 is the base data, untouched; the
   * fixed-size dimension tables (region, nation) copy verbatim.
   *
-  *   java -cp "target/scala-2.13/classes:<spark jars>" graft.SynthScale \
-  *     /root/testdata/sf0.1 /tmp/sf1synth 10
+  *   sbt "runMain graft.SynthScale <srcDir> <outDir> <k>"
+  *
+  * `tools/scaling.py` runs it for the 4× and 16× points of SCALING.md.
   */
 object SynthScale {
   def main(args: Array[String]): Unit = {
@@ -26,7 +27,12 @@ object SynthScale {
     val out = if (args.length > 1) args(1) else "/tmp/sf1synth"
     val k = if (args.length > 2) args(2).toInt else 10
     val spark = GraftSession.fromEnv()
+    write(spark, src, out, k)
+    spark.stop()
+  }
 
+  /** Writes the k× copy of `src` to `out`, one parquet file per table. */
+  def write(spark: SparkSession, src: String, out: String, k: Int): Unit = {
     def load(name: String): DataFrame = Tables.load(spark, src, name)
     // single FILE per table, matching the driver fixtures' layout (the
     // DuckDB oracle globs `<dir>/<table>.parquet` as a file)
@@ -80,6 +86,5 @@ object SynthScale {
              (x + Replicas.jitterDelta(col("vec_id"), i, j) / 20000.0).cast("float"))))
           .select("vec_id", "embedding", "label")), "embeddings")
     println(s"[synth] done: $out at ${k}x of $src")
-    spark.stop()
   }
 }

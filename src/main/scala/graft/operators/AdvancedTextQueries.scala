@@ -234,8 +234,8 @@ object AdvancedTextQueries {
     // shingle counts as a separate aggregate joined onto the pairs
     // twice — exchange reuse does NOT cover a three-consumer shape, so
     // the executed plan re-ran the whole corpus→shingle pipeline three
-    // times (3 parquet scans, 4 window sorts; measured 22 s at the 16x
-    // ScaleSmoke cell vs 8 s once the recomputation was eliminated).
+    // times (3 parquet scans, 4 window sorts; measured 22 s on a 16x
+    // replicated corpus vs 8 s once the recomputation was eliminated).
     // Instead each shingle row CARRIES its doc's distinct-shingle
     // count n: the dedup groupBy and the n-window both run on the
     // doc_id partitioning the lead-window already established (their
@@ -394,7 +394,7 @@ object AdvancedTextQueries {
   def qDedupKeepBest(spark: SparkSession, sfDir: String): DataFrame =
     keepBestFrom(Tables.documents(spark, sfDir))
 
-  /** DataFrame-core form over (doc_id, text) — ScaleSmoke drives this. */
+  /** DataFrame-core form over any (doc_id, text) frame. */
   def keepBestFrom(docs: DataFrame): DataFrame = {
     val pairs = ngramJaccardPairs(docs, ShingleDfCap)
       .select(col("doc_id_1").as("src"), col("doc_id_2").as("dst"))
@@ -514,8 +514,7 @@ object AdvancedTextQueries {
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_tokens"), sum(col("su_micronats")).as("total_su"))
       .withColumn("avg_surprisal",
-        round(col("total_su").cast("double") / col("n_tokens") / 1000000.0, 6)
-          + lit(0.0))
+        round6(col("total_su").cast("double") / col("n_tokens") / 1000000.0))
       .select("doc_id", "lang", "n_tokens", "avg_surprisal")
       .orderBy(asc_nulls_first("doc_id"))
   }
@@ -559,7 +558,7 @@ object AdvancedTextQueries {
   def qCollocations(spark: SparkSession, sfDir: String): DataFrame =
     collocationsFrom(Tables.documents(spark, sfDir))
 
-  /** DataFrame-core collocation mining — ScaleSmoke entry point. */
+  /** DataFrame-core collocation mining over any (doc_id, text) frame. */
   def collocationsFrom(docs: DataFrame): DataFrame = {
     val pos = docs
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "w")))
@@ -842,7 +841,7 @@ object AdvancedTextQueries {
   def qBpePairs(spark: SparkSession, sfDir: String): DataFrame =
     bpePairsFrom(Tables.documents(spark, sfDir))
 
-  /** Frame-parameterized body of [[qBpePairs]] (ScaleSmoke entry point). */
+  /** Frame-parameterized body of [[qBpePairs]] over any (text) frame. */
   def bpePairsFrom(docs: DataFrame): DataFrame = {
     val vocab = docs
       .select(explode(tokens(col("text"))).as("word"))
@@ -1066,7 +1065,9 @@ object AdvancedTextQueries {
   def qSourceOverlap(spark: SparkSession, sfDir: String): DataFrame =
     sourceOverlapFrom(Tables.documents(spark, sfDir))
 
-  /** Frame-parameterized body of [[qSourceOverlap]] (ScaleSmoke entry point). */
+  /** Frame-parameterized body of [[qSourceOverlap]] over any
+    * (doc_id, source, text) frame.
+    */
   def sourceOverlapFrom(docs: DataFrame): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("pos")
     val srcSh = docs
@@ -1119,7 +1120,7 @@ object AdvancedTextQueries {
   def qDupNgramFrac(spark: SparkSession, sfDir: String): DataFrame =
     dupNgramFracFrom(Tables.documents(spark, sfDir))
 
-  /** Frame-parameterized body of [[qDupNgramFrac]] (ScaleSmoke entry). */
+  /** Frame-parameterized body of [[qDupNgramFrac]]. */
   def dupNgramFracFrom(docs: DataFrame): DataFrame = {
     // ONE pass over the corpus. The previous shape built the 5-gram
     // position stream TWICE — once into the distinct+count doc-freq
@@ -1174,7 +1175,7 @@ object AdvancedTextQueries {
   def qNgramNovelty(spark: SparkSession, sfDir: String): DataFrame =
     ngramNoveltyFrom(Tables.documents(spark, sfDir))
 
-  /** Frame-parameterized body of [[qNgramNovelty]] (ScaleSmoke entry). */
+  /** Frame-parameterized body of [[qNgramNovelty]]. */
   def ngramNoveltyFrom(docs: DataFrame): DataFrame = {
     // same one-pass rewrite as [[dupNgramFracFrom]]: the stream is
     // built once, and first_doc is a min window over the ng partition
@@ -1221,7 +1222,7 @@ object AdvancedTextQueries {
     bigramLmFrom(Tables.documents(spark, sfDir))
 
   /** Frame-parameterized body of [[qBigramLm]] over any
-    * (doc_id, lang, text) frame (ScaleSmoke entry point).
+    * (doc_id, lang, text) frame.
     */
   def bigramLmFrom(docs: DataFrame): DataFrame = {
     val bigrams = docs
@@ -1250,8 +1251,8 @@ object AdvancedTextQueries {
       .groupBy("doc_id", "lang")
       .agg(count(lit(1)).as("n_bigrams"), sum(col("su_micronats")).as("total_su"))
       .select(col("doc_id"), col("lang"), col("n_bigrams"),
-        (round(col("total_su").cast("double") / col("n_bigrams") / 1000000.0, 6)
-          + lit(0.0)).as("avg_surprisal"))
+        round6(col("total_su").cast("double") / col("n_bigrams") / 1000000.0)
+          .as("avg_surprisal"))
       .orderBy(asc_nulls_first("doc_id"))
   }
 
@@ -1554,7 +1555,7 @@ object AdvancedTextQueries {
     charEntropyFrom(Tables.documents(spark, sfDir))
 
   /** DataFrame-core body of [[qCharEntropy]] over any (source, text)
-    * frame — graft.ScaleSmoke drives this on replicated corpora.
+    * frame.
     */
   def charEntropyFrom(docs: DataFrame): DataFrame =
     docs

@@ -304,9 +304,7 @@ object AnalyticsQueries {
   def qBoilerplate(spark: SparkSession, sfDir: String): DataFrame =
     boilerplateFrom(Tables.documents(spark, sfDir), dfMin = 3)
 
-  /** DataFrame-core form — ScaleSmoke drives this on replicated
-    * corpora.
-    */
+  /** DataFrame-core form over any (doc_id, text) frame. */
   def boilerplateFrom(docs: DataFrame, dfMin: Int): DataFrame = {
     // df via count-over-window on the sh-partitioned stream instead of
     // an aggregate joined back: the join form re-ran the whole shingle
@@ -536,9 +534,7 @@ object AnalyticsQueries {
   def qPagerank(spark: SparkSession, sfDir: String): DataFrame =
     pagerankFrom(Tables.lineitem(spark, sfDir))
 
-  /** DataFrame-core form — ScaleSmoke drives this on replicated order
-    * spaces.
-    */
+  /** DataFrame-core form over any (l_orderkey, l_partkey) frame. */
   def pagerankFrom(lineitem: DataFrame): DataFrame = {
     val pairs = BehaviorQueries.cooccurPairCounts(lineitem)
       .filter(col("n_orders") >= PagerankMinCooccur)
@@ -562,9 +558,7 @@ object AnalyticsQueries {
   def qTriangles(spark: SparkSession, sfDir: String): DataFrame =
     trianglesFrom(Tables.lineitem(spark, sfDir))
 
-  /** DataFrame-core form — ScaleSmoke drives this on replicated order
-    * spaces.
-    */
+  /** DataFrame-core form over any (l_orderkey, l_partkey) frame. */
   def trianglesFrom(lineitem: DataFrame): DataFrame = {
     val und = BehaviorQueries.cooccurPairCounts(lineitem)
       .filter(col("n_orders") >= PagerankMinCooccur)
@@ -653,10 +647,7 @@ object AnalyticsQueries {
   def qHeavyHitters(spark: SparkSession, sfDir: String): DataFrame =
     heavyHittersFrom(spark, Tables.documents(spark, sfDir))
 
-  /** DataFrame-core form over any (text) corpus — ScaleSmoke drives
-    * this on replicated token spaces to time the sketch pass against
-    * the full wordcount shuffle it replaces.
-    */
+  /** DataFrame-core form over any (text) corpus. */
   def heavyHittersFrom(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
     val toks = docs.select(explode(TextQueries.tokens(col("text"))).as("token"))
@@ -801,7 +792,7 @@ object AnalyticsQueries {
   def qOverlapKmv(spark: SparkSession, sfDir: String): DataFrame =
     overlapKmvFrom(Tables.events(spark, sfDir))
 
-  /** DataFrame-core KMV overlap — ScaleSmoke entry point. */
+  /** DataFrame-core KMV overlap over any (event_type, user_id) frame. */
   def overlapKmvFrom(events: DataFrame): DataFrame = {
     val K = KmvK
     val pts = events

@@ -45,7 +45,7 @@ object BehaviorQueries {
     funnelFrom(Tables.events(spark, sfDir))
 
   /** DataFrame-core funnel over any (user_id, ts, event_id, event_type)
-    * frame — graft.ScaleSmoke drives this on replicated user spaces.
+    * frame.
     */
   def funnelFrom(events: DataFrame): DataFrame = {
     val ev = events.select("user_id", "ts", "event_id", "event_type")
@@ -172,21 +172,12 @@ object BehaviorQueries {
     * the probability normalization is a window over that tiny grid —
     * nothing after the first exchange scales with the data.
     */
-  def qTransitions(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val t = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"),
-        col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-    t.withColumn("p",
+  def qTransitions(spark: SparkSession, sfDir: String): DataFrame =
+    transitionCounts(spark, sfDir)
+      .withColumn("p",
         round(col("n").cast("double") /
           sum(col("n")).over(Window.partitionBy("from_type")), 6) + lit(0.0))
       .orderBy(asc_nulls_first("from_type"), asc_nulls_first("to_type"))
-  }
 
   /** Rolling 7-day distinct active users per day and event type (the
     * WAU curve). Exact sliding DISTINCT cannot run as a window
@@ -230,7 +221,7 @@ object BehaviorQueries {
     cooccurFrom(Tables.lineitem(spark, sfDir))
 
   /** DataFrame-core co-occurrence over any (l_orderkey, l_partkey)
-    * frame — graft.ScaleSmoke drives this on replicated order spaces.
+    * frame.
     */
   def cooccurFrom(lineitem: DataFrame): DataFrame =
     cooccurPairCounts(lineitem)
@@ -240,8 +231,9 @@ object BehaviorQueries {
   /** Full (p1, p2, n_orders) pair counts — the expensive part of the
     * query, before the top-k truncation (which Spark plans as
     * TakeOrderedAndProject: per-partition top-25 + driver merge, never
-    * a global sort). ScaleSmoke times this form so the measurement
-    * covers the pair explosion + aggregation, not the truncation.
+    * a global sort). The graph queries (q_pagerank, q_kcore,
+    * q_triangles) build on this form: the pair explosion + aggregation,
+    * not the truncation.
     */
   def cooccurPairCounts(lineitem: DataFrame): DataFrame =
     pairCountsFromBaskets(basketParts(lineitem))
@@ -487,10 +479,11 @@ object BehaviorQueries {
     * then run on |types| rows — the iteration cost is independent of
     * corpus size by construction.
     */
-  /** The one corpus fold shared by both q_stationary paths: the event
-    * stream → (from_type, to_type, n) transition-count matrix.
+  /** The one corpus fold of q_transitions, q_entropy_rate and both
+    * q_stationary paths: the event stream → (from_type, to_type, n)
+    * transition-count matrix.
     */
-  private[graft] def stationaryMatrix(spark: SparkSession,
+  private[graft] def transitionCounts(spark: SparkSession,
       sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
@@ -505,7 +498,7 @@ object BehaviorQueries {
 
   def qStationary(spark: SparkSession, sfDir: String): DataFrame = {
     val scale = 1000000000000L
-    val c = stationaryMatrix(spark, sfDir)
+    val c = transitionCounts(spark, sfDir)
     // ONE corpus fold (the lead()+groupBy exchange above) collapses the
     // stream to the |types|² transition matrix — a fixed-size model,
     // bounded by the event-type vocabulary, never by corpus volume. The
@@ -605,15 +598,7 @@ object BehaviorQueries {
     * everything after operates on the |types|² matrix.
     */
   def qEntropyRate(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts").asc, col("event_id").asc)
-    val c = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"),
-        col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
+    val c = transitionCounts(spark, sfDir)
     val rowsum = c.groupBy("from_type").agg(sum(col("n")).as("r"))
     val total = rowsum.agg(sum(col("r")).as("n_total"))
     val p = col("n").cast("double") / col("r")
@@ -793,8 +778,8 @@ object BehaviorQueries {
   def qStickiness(spark: SparkSession, sfDir: String): DataFrame =
     stickinessFrom(Tables.events(spark, sfDir))
 
-  /** DataFrame-core body of [[qStickiness]] — graft.ScaleSmoke drives
-    * this on replicated user spaces.
+  /** DataFrame-core body of [[qStickiness]] over any (user_id, ts)
+    * frame.
     */
   def stickinessFrom(events: DataFrame): DataFrame = {
     val du = events

@@ -40,8 +40,7 @@ import org.apache.spark.sql.functions._
   * broadcast-join: `coalesce(patch[component], component)`.
   * Per-batch write = |delta| appended labels + the (touched-clusters-
   * sized) patch rewrite, where rewriting the whole label table per
-  * batch would write corpus-linear bytes (measured side by side in
-  * SCALING.md's ledger section).
+  * batch would write corpus-linear bytes.
   *
   * Retry-safe: MinHashLedger blesses blind re-append for a
   * crashed-then-retried batch, and the composed pipeline forwards
@@ -282,9 +281,9 @@ object ClusterLedger {
     * delta-sized batches) and empties the map — resolved labels are
     * bit-identical before and after (resolvePatch over an empty map IS
     * the base), proven in ClusterLedgerSpec, which also folds further
-    * batches on top of a checkpoint. Maintenance cost is priced
-    * separately from per-batch folds, exactly like compact vs probe in
-    * SCALING.md's band-ledger section.
+    * batches on top of a checkpoint. Maintenance cost is paid
+    * separately from per-batch folds, exactly like MinHashLedger's
+    * compact vs probe.
     */
   def checkpointPatch(spark: SparkSession, ledgerTable: String,
       tmpDir: String): Unit = {

@@ -55,9 +55,7 @@ object CurationQueries {
   def qScrubCommon(spark: SparkSession, sfDir: String): DataFrame =
     scrubCommonFrom(Tables.documents(spark, sfDir), w = 4, minDf = 2)
 
-  /** DataFrame-core form over any (doc_id, text) frame — ScaleSmoke
-    * entry point.
-    */
+  /** DataFrame-core form over any (doc_id, text) frame. */
   def scrubCommonFrom(docs: DataFrame, w: Int, minDf: Int): DataFrame = {
     val ch = chunked(docs, w)
     // df counts documents, not occurrences: a chunk repeated inside
@@ -209,9 +207,7 @@ object CurationQueries {
   def qJsDivergence(spark: SparkSession, sfDir: String): DataFrame =
     jsDivergenceFrom(Tables.documents(spark, sfDir))
 
-  /** DataFrame-core form over any (source, text) frame — ScaleSmoke
-    * entry point.
-    */
+  /** DataFrame-core form over any (source, text) frame. */
   def jsDivergenceFrom(docs: DataFrame): DataFrame = {
     val counts = docs
       .select(col("source"), explode(tokens(col("text"))).as("t"))

@@ -55,7 +55,7 @@ object EventQueries {
     sessionWindows(Tables.events(spark, sfDir))
 
   /** DataFrame-core sessionization over any (user_id, ts, event_id)
-    * frame — graft.ScaleSmoke drives this on replicated user spaces.
+    * frame.
     */
   def sessionWindows(events: DataFrame): DataFrame = {
     val byTime = Window.partitionBy("user_id")
@@ -246,9 +246,7 @@ object EventQueries {
   def qScd2(spark: SparkSession, sfDir: String): DataFrame =
     scd2From(Tables.events(spark, sfDir))
 
-  /** DataFrame-core SCD2 build — graft.ScaleSmoke drives this on
-    * replicated user spaces.
-    */
+  /** DataFrame-core SCD2 build over any event frame. */
   def scd2From(events: DataFrame): DataFrame = {
     val byTime = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
@@ -290,7 +288,7 @@ object EventQueries {
   def qTimeWeighted(spark: SparkSession, sfDir: String): DataFrame =
     timeWeightedFrom(Tables.events(spark, sfDir))
 
-  /** DataFrame-core time-weighted average — ScaleSmoke entry point. */
+  /** DataFrame-core time-weighted average over any event frame. */
   def timeWeightedFrom(events: DataFrame): DataFrame = {
     val byTime = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)

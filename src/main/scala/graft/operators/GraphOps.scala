@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * round, so total rounds are O(shortcutAfter + log diameter) — the
   * same halving the large-star/small-star formulation buys, with a
   * simpler per-round plan. The common shallow case converges before
-  * the switch and never pays for the extra join; measured on a 20k
-  * path graph in SCALING.md. Correctness is invariant: every label
+  * the switch and never pays for the extra join; GraphOpsSpec's
+  * 2048-vertex path bounds the rounds. Correctness is invariant: every label
   * is always the id of a vertex in the same component and ≤ the
   * vertex's own id (propagation keeps it — a neighbor's label is in
   * the same component; jumping keeps it — l(v)'s label is in l(v)'s
@@ -64,8 +64,8 @@ object GraphOps {
     * and the incremental ledger's three batch folds). Past
     * [[LocalCcMaxEdges]] the distributed pointer-jumping loop runs
     * unchanged — the 100 TB path, proven separately by
-    * [[connectedComponentsWithRounds]] (which ScaleSmoke drives
-    * explicitly for the adversarial-diameter evidence).
+    * [[connectedComponentsWithRounds]] (which GraphOpsSpec drives
+    * for the adversarial-diameter bound).
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 40): DataFrame = {
     val spark = edges.sparkSession
@@ -98,8 +98,8 @@ object GraphOps {
   }
 
   /** connectedComponents plus the number of rounds it took — the
-    * evidence channel ScaleSmoke records for the adversarial-diameter
-    * row. `shortcutAfter` is the round index where pointer jumping
+    * evidence channel GraphOpsSpec asserts on for the adversarial-
+    * diameter path. `shortcutAfter` is the round index where pointer jumping
     * joins the per-round plan (3 covers every near-dup graph observed;
     * deep chains then collapse logarithmically).
     */

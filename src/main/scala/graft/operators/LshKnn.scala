@@ -15,8 +15,8 @@ import graft.operators.SimilarityQueries.{asDoubles, dot, l2Norm}
   * halves — pick ~log2(corpus / desired-candidates). Hyperplanes come
   * from a seeded RNG, so results are deterministic run-to-run; recall is
   * probabilistic by design (property-tested against the brute-force
-  * result and measured at 1x/4x/16x by graft.ScaleSmoke → SCALING.md,
-  * not oracle-checked).
+  * result in ScalePathSpec, timed at 1x/4x/16x in SCALING.md, not
+  * oracle-checked).
   *
   * At 100 TB: bucket the corpus once (cheap projection), then a plain
   * equi-join on the bucket key — one exchange of each side, never a
@@ -104,8 +104,8 @@ object LshKnn {
 
   /** DataFrame-core form: `emb` is (vec_id, array<double> vec); probes
     * are the rows with vec_id % probeModulus = 0. All scale knobs
-    * exposed — graft.ScaleSmoke drives this directly for the
-    * recall/cost curves in SCALING.md.
+    * exposed — ScalePathSpec drives this directly for its recall
+    * gates.
     */
   def approxTopKFrom(emb: DataFrame, k: Int = 5, nFlip: Int = 1,
       probeModulus: Int = 100, dim: Int = Dim,

@@ -46,8 +46,8 @@ import org.apache.spark.sql.functions._
   *     into the ledger scan as an In filter. Parquet row-group
   *     pruning then reads ONLY the row groups whose key range
   *     contains a probed key: probe IO ≈ batch_keys × row-group size,
-  *     FLAT in ledger size — measured as the bytes-read column in
-  *     SCALING.md's ledger section.
+  *     FLAT in ledger size — MinHashLedgerSpec asserts the pushed In
+  *     filter on every ledger scan of the probe plan.
   *   - `bkh` collisions are harmless: the pushed In-set is a superset
   *     filter, and every later step (guard counts, pair join) keys on
   *     the exact `bkey` string, so a collision row can never produce
@@ -60,8 +60,8 @@ import org.apache.spark.sql.functions._
   * blind (at-least-once, crash-retry-safe); `compact` periodically
   * folds the accumulated sorted runs into one globally-sorted run,
   * restoring one row per (bkey, doc_id) and the tightest row-group
-  * ranges — the standard LSM amortization, measured separately in
-  * SCALING.md so probe cost and maintenance cost are not conflated.
+  * ranges — the standard LSM amortization, run separately so probe
+  * cost and maintenance cost are not conflated.
   *
   * Hot-bucket guard semantics, accounted over ledger∪batch: a
   * (band, bucket) whose TOTAL population exceeds `bucketCap` emits no
@@ -244,9 +244,8 @@ object MinHashLedger {
     * cannot inflate df past `bucketCap`). What duplicates and
     * accumulated runs DO cost is probe fan-out (a probe reads ≤ keys
     * row groups PER RUN); periodic compaction restores minimality —
-    * the LSM amortization, priced separately from probes in
-    * SCALING.md. The
-    * distinct fold materializes to `tmpDir` first — a table cannot be
+    * the LSM amortization, paid separately from probes. The distinct
+    * fold materializes to `tmpDir` first — a table cannot be
     * overwritten from a plan that reads it.
     */
   def compact(spark: SparkSession, ledgerTable: String,
@@ -264,18 +263,6 @@ object MinHashLedger {
     // scanning dead files (see ClusterLedger.resolvePatch's note)
     spark.catalog.refreshTable(ledgerTable)
   }
-
-  /** Bulk backfill: append a corpus's band rows as ONE sorted run
-    * WITHOUT emitting candidate pairs — the initial-load path for
-    * standing up a ledger over an already-deduped historical corpus
-    * (its internal pairs are the one-shot MinHashLsh job's business;
-    * the ledger only needs the index rows so FUTURE batches can probe
-    * against it). Same layout contract as ingest's append
-    * (writeSorted: bkh-sorted runs, small row groups).
-    */
-  def bulkLoad(spark: SparkSession, docs: DataFrame,
-      ledgerTable: String): Unit =
-    writeSorted(bandRows(docs), ledgerTable, SaveMode.Append)
 
   /** The pre-append probe plan ingest materializes — exposed so tests
     * can audit it (and its scan set: this batch plus the pruned band
@@ -299,8 +286,8 @@ object MinHashLedger {
     // hot-bucket guard, both join sides) reads THAT exchange — under
     // AQE the duplicated branches reuse the one shuffle stage, so the
     // point-lookup parquet read happens once per probe (previously
-    // twice: cap totals + pair join — it doubled the per-probe floor
-    // in SCALING.md's regime table).
+    // twice: cap totals + pair join — it doubled the per-probe read
+    // floor).
     val all = old.select(col("bkey"), col("doc_id"), lit(false).as("is_new"))
       .unionAll(fresh.select(col("bkey"), col("doc_id"), lit(true).as("is_new")))
       .repartition(col("bkey"))

@@ -768,8 +768,8 @@ object MlEvalQueries {
       .select(col("n_probes"), col("n_correct"),
         (round(col("n_correct").cast("double") / col("n_probes"), 6)
           + lit(0.0)).as("accuracy"),
-        (round(col("brier_sum").cast("double") / col("n_probes") / 1000000.0,
-          6) + lit(0.0)).as("brier"),
-        (round(col("ll_sum").cast("double") / col("n_probes") / 1000000.0, 6)
-          + lit(0.0)).as("log_loss"))
+        round6(col("brier_sum").cast("double") / col("n_probes") / 1000000.0)
+          .as("brier"),
+        round6(col("ll_sum").cast("double") / col("n_probes") / 1000000.0)
+          .as("log_loss"))
 }

@@ -59,7 +59,7 @@ object QuantizedKnn {
   }
 
   /** Core form over an (vec_id, vec array<double>) corpus frame —
-    * the shape ScaleSmoke's recall/cost harness drives directly.
+    * the shape ScalePathSpec's recall spec drives directly.
     */
   def approxTopKFrom(exact: DataFrame, k: Int = 5,
       overfetch: Int = 4, probeModulus: Int = 100): DataFrame = {

@@ -56,8 +56,7 @@ object SetSimJoin {
   def qSetsimPrefix(spark: SparkSession, sfDir: String): DataFrame =
     setsimPrefixFrom(Tables.documents(spark, sfDir))
 
-  /** DataFrame-core form over any (doc_id, text) frame — ScaleSmoke
-    * entry point. tau is fixed at 1/2 so the verify compare stays
+  /** DataFrame-core form over any (doc_id, text) frame. tau is fixed at 1/2 so the verify compare stays
     * integer (3*o >= n1+n2).
     */
   def setsimPrefixFrom(docs: DataFrame): DataFrame = {

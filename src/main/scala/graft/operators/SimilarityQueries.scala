@@ -298,8 +298,7 @@ object SimilarityQueries {
         asDoubles(col("embedding")).as("vec")))
 
   /** DataFrame-core body of [[qJlProject]] over any (vec_id, label,
-    * vec: array<double>) frame — graft.ScaleSmoke drives this on
-    * jittered embedding replicas.
+    * vec: array<double>) frame.
     */
   def jlProjectFrom(spark: SparkSession, emb: DataFrame): DataFrame = {
     val dims = spark.range(1, 65).select(col("id").cast("int").as("dim"))
@@ -331,8 +330,8 @@ object SimilarityQueries {
         sum(col("rm")).as("rsum"), min(col("rm")).as("rmin"),
         max(col("rm")).as("rmax"))
       .select(col("label"), col("n_vecs"),
-        (round(col("rsum").cast("double") / col("n_vecs") / 1000000.0, 6)
-          + lit(0.0)).as("mean_ratio"),
+        round6(col("rsum").cast("double") / col("n_vecs") / 1000000.0)
+          .as("mean_ratio"),
         (round(col("rmin").cast("double") / 1000000.0, 6) + lit(0.0))
           .as("min_ratio"),
         (round(col("rmax").cast("double") / 1000000.0, 6) + lit(0.0))

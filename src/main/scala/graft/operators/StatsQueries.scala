@@ -254,7 +254,20 @@ object StatsQueries {
     * One fact shuffle for the grid counts; row/col/total sums are
     * windows over the |segments|×|priorities| grid, never the data.
     */
-  def qContingency(spark: SparkSession, sfDir: String): DataFrame = {
+  def qContingency(spark: SparkSession, sfDir: String): DataFrame =
+    observedExpected(spark, sfDir)
+      .select(col("segment"), col("priority"), col("observed"),
+        (round(col("e"), 6) + lit(0.0)).as("expected"),
+        (round((col("observed") - col("e")) * (col("observed") - col("e")) /
+          col("e"), 6) + lit(0.0)).as("contribution"))
+      .orderBy(asc_nulls_first("segment"), asc_nulls_first("priority"))
+
+  /** The segment × priority grid of q_contingency and q_cramers_v:
+    * observed order counts and the independence-expected count
+    * e = rowΣ·colΣ/N per cell.
+    */
+  private def observedExpected(spark: SparkSession,
+      sfDir: String): DataFrame = {
     val grid = Tables.customer(spark, sfDir)
       .join(Tables.orders(spark, sfDir),
         col("c_custkey") === col("o_custkey"))
@@ -266,11 +279,6 @@ object StatsQueries {
       sum(col("observed")).over(Window.partitionBy("priority")) /
       sum(col("observed")).over(Window.partitionBy())).as("e")
     grid.select(col("segment"), col("priority"), col("observed"), e)
-      .select(col("segment"), col("priority"), col("observed"),
-        (round(col("e"), 6) + lit(0.0)).as("expected"),
-        (round((col("observed") - col("e")) * (col("observed") - col("e")) /
-          col("e"), 6) + lit(0.0)).as("contribution"))
-      .orderBy(asc_nulls_first("segment"), asc_nulls_first("priority"))
   }
 
   /** Day-over-day revenue change — the period-over-period report every
@@ -637,9 +645,9 @@ object StatsQueries {
   private def twoSampleValueCounts(spark: SparkSession, sfDir: String): DataFrame =
     twoSampleValueCountsFrom(Tables.events(spark, sfDir))
 
-  /** DataFrame-core form — ScaleSmoke replicates the event stream
-    * through this to show the fold's frame is the value DOMAIN (near
-    * scale-invariant on replicated data), not the stream. The running
+  /** DataFrame-core form over any event frame. The fold's frame is the
+    * value DOMAIN (near scale-invariant on replicated data), not the
+    * stream. The running
     * ECDF totals come from [[ScaleOps.partitionedRank]] (parallel
     * range-partitioned windows + broadcast prefix offsets), so even an
     * adversarial corpus whose value domain GROWS with the data never
@@ -704,18 +712,8 @@ object StatsQueries {
     * recipe): micro-longs sum identically under any partitioning, and
     * χ², dof and V derive from that one exact total.
     */
-  def qCramersV(spark: SparkSession, sfDir: String): DataFrame = {
-    val grid = Tables.customer(spark, sfDir)
-      .join(Tables.orders(spark, sfDir),
-        col("c_custkey") === col("o_custkey"))
-      .groupBy(col("c_mktsegment").as("segment"),
-        col("o_orderpriority").as("priority"))
-      .agg(count(lit(1)).as("observed"))
-    val e = (sum(col("observed")).over(Window.partitionBy("segment"))
-        .cast("double") *
-      sum(col("observed")).over(Window.partitionBy("priority")) /
-      sum(col("observed")).over(Window.partitionBy())).as("e")
-    grid.select(col("segment"), col("priority"), col("observed"), e)
+  def qCramersV(spark: SparkSession, sfDir: String): DataFrame =
+    observedExpected(spark, sfDir)
       .select(col("segment"), col("priority"), col("observed"),
         round((col("observed") - col("e")) * (col("observed") - col("e")) /
           col("e") * 1000000, 0).cast("long").as("chi2_micro"))
@@ -730,7 +728,6 @@ object StatsQueries {
         (round(sqrt(col("chi2m").cast("double") / 1000000.0 /
           (col("n") * least(col("n_rows") - 1, col("n_cols") - 1))
             .cast("double")), 6) + lit(0.0)).as("cramers_v"))
-  }
 
   /** Wald–Wolfowitz runs test per event type: is the daily-count
     * series RANDOM around its median, or does it trend/cluster? Rows

@@ -746,7 +746,7 @@ object TextQueries {
   def qVocabCoverage(spark: SparkSession, sfDir: String): DataFrame =
     vocabCoverageFrom(Tables.documents(spark, sfDir))
 
-  /** DataFrame-core form over (text) — ScaleSmoke drives this. */
+  /** DataFrame-core form over any (text) frame. */
   def vocabCoverageFrom(docs: DataFrame, vocabSize: Int = 500): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = docs

@@ -217,44 +217,16 @@ object ValidationQueries {
     * the partial agg: profiling 6 columns of a 100 TB table pushes
     * ~700 TB of row-traffic into the aggregation. That is the price of
     * EXACTNESS; it is the right default below ~1 TB and for
-    * correctness gates. At corpus scale, [[profileApprox]] is the
-    * documented alternative (same report shape, HLL sketches, no
-    * Expand — the same exact→sketch trade q_anomaly_mad documents for
-    * GK percentiles and sketch_distinct makes for global distincts).
+    * correctness gates. At corpus scale the alternative is
+    * `approx_count_distinct` in place of the exact count (same report
+    * shape, HLL sketches, no Expand — the exact→sketch trade
+    * q_anomaly_mad documents for GK percentiles and sketch_distinct
+    * makes for global distincts).
     */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "at least one column required")
     val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
       Seq(count(col(c)).as(s"nn$i"), count_distinct(col(c)).as(s"nd$i"))
-    }
-    val a = df.agg(count(lit(1)).as("n"), aggs: _*)
-    val stackArgs = cols.zipWithIndex
-      .map { case (c, i) => s"'$c', nn$i, nd$i" }.mkString(", ")
-    a.select(
-        expr(s"stack(${cols.size}, $stackArgs) as (column_name, n_present, n_distinct)"),
-        col("n").as("n_rows"))
-      .select(col("column_name"),
-        (col("n_rows") - col("n_present")).as("n_nulls"),
-        col("n_distinct"),
-        (round(col("n_present").cast("double") / col("n_rows"), 6) + lit(0.0))
-          .as("completeness"))
-      .orderBy(asc_nulls_first("column_name"))
-  }
-
-  /** [[profile]]'s at-scale form: `approx_count_distinct` (HyperLogLog++,
-    * default 5% relative error) instead of exact count-distinct. The
-    * plan is a plain two-phase aggregate — NO Expand, so rows flow
-    * through the partial agg ONCE regardless of how many columns are
-    * profiled, and each task's state is one fixed-size HLL sketch per
-    * column. n_distinct is approximate; null counts and completeness
-    * stay exact (they're plain counts). Non-oracle by design (sketch
-    * estimates are engine-specific); ScaleSmoke records both forms'
-    * growth curves side by side.
-    */
-  def profileApprox(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "at least one column required")
-    val aggs = cols.zipWithIndex.flatMap { case (c, i) =>
-      Seq(count(col(c)).as(s"nn$i"), approx_count_distinct(col(c)).as(s"nd$i"))
     }
     val a = df.agg(count(lit(1)).as("n"), aggs: _*)
     val stackArgs = cols.zipWithIndex

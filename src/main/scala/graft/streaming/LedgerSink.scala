@@ -41,8 +41,8 @@ import graft.operators.{ClusterLedger, MinHashLedger}
   * patch table) — at-least-once per sink converges to the
   * exactly-once result.
   *
-  * Scale: each micro-batch costs probe IO ∝ batch keys (SCALING.md's
-  * ledger tables) plus a delta-sized patch write — the state the
+  * Scale: each micro-batch costs probe IO ∝ batch keys (MinHashLedger's
+  * point-lookup prune) plus a delta-sized patch write — the state the
   * stream accumulates lives in the ledger TABLES, not in streaming
   * state, so the query itself is stateless and restarts cold.
   */

@@ -3,9 +3,9 @@ package org.apache.spark.graft
 import org.apache.spark.SparkContext
 
 /** Minimal bridge into `private[spark]` surface (same pattern as
-  * `org.apache.spark.sql.graft.ColumnBridge`): SCALING's IO metering
-  * must drain the async listener bus before reading its accumulators,
-  * or task metrics posted after the job's last action are lost.
+  * `org.apache.spark.sql.graft.ColumnBridge`): a listener-counting
+  * spec (TablesSchemaSpec) must drain the async listener bus before
+  * reading its counts, or events posted after the last action are lost.
   */
 object ListenerBridge {
   def waitUntilListenersProcessed(sc: SparkContext): Unit =

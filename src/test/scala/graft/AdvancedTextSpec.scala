@@ -400,6 +400,17 @@ class AdvancedTextSpec extends AnyFunSuite {
     assert(got.forall(_.getLong(2) == 2L))
   }
 
+  test("round6 rounds a halfway micro-sum the way the oracle's round(x, 6) does") {
+    // 8202803 micro-nats over 2 tokens is 4101401.5 exactly; the double
+    // quotient x prints 4.1014015, which Spark's round(x, 6) takes up to
+    // 4.101402, while x·1e6 = 4101401.4999999995 rounds down to the
+    // oracle's 4.101401
+    val x = lit(8202803.0) / 2 / 1e6
+    val r = spark.range(1).select(operators.round6(x), round(x, 6)).head()
+    assert(r.getDouble(0) == 4.101401)
+    assert(r.getDouble(1) == 4.101402)
+  }
+
   test("substring fingerprints: copied runs pair, disjoint text does not") {
     import spark.implicits._
     val run = "the quick brown fox jumps over the lazy dog again and again"

@@ -382,7 +382,7 @@ class BehaviorSpec extends AnyFunSuite {
   test("q_stationary: distributed fallback is bit-identical to the driver loop") {
     // the branch taken past StationaryMaxCells — drive it directly on
     // the same transition matrix and demand the identical frame
-    val c = operators.BehaviorQueries.stationaryMatrix(spark, sfDir)
+    val c = operators.BehaviorQueries.transitionCounts(spark, sfDir)
       .localCheckpoint(true)
     val dist = operators.BehaviorQueries.qStationaryDistributed(spark, c)
       .collect()

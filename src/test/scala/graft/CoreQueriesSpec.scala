@@ -16,7 +16,7 @@ class CoreQueriesSpec extends AnyFunSuite {
     // oracle by design (DuckDB's approx_count_distinct is a different
     // sketch); their error bound is spec-checked in StatsSpec instead.
     // The ANN paths are approximate in recall (no SQL oracle exists);
-    // deterministic + recall-bounded in ScalePathSpec and SCALING.md.
+    // deterministic + recall-bounded in ScalePathSpec.
     // q_session_percentiles_gk: the GK production swap — DuckDB's
     // approx_quantile is a t-digest (different sketch, different
     // answers); rank-error gated in ScalarEventSpec instead.

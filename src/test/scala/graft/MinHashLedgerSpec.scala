@@ -98,7 +98,7 @@ class MinHashLedgerSpec extends AnyFunSuite {
       // the point-lookup prune must be IN THE PLAN: every ledger scan
       // carries a pushed In filter on bkh (if the translation breaks —
       // conf too low, InSet not converted — this silently degrades to
-      // a full read and the SCALING flat-probe-IO claim dies with it)
+      // a full read and the flat-probe-IO claim dies with it)
       val pushed = MinHashLedger.candidatePairsAgainst(spark, probe, ledger)
       pushed.collect()
       import org.apache.spark.sql.execution.FileSourceScanExec

@@ -130,13 +130,13 @@ class ScalePathSpec extends AnyFunSuite {
 
   test("jittered-replica regime: IVF and multi-probe LSH recall gates") {
     // The base fixture's neighbor structure is weak (top-5 cosines sit
-    // barely above the bulk — SCALING.md's 1x rows score low for ANY
-    // bucketed index); the MEANINGFUL regime is the jittered-replica
-    // corpus where every vector has true near-neighbors, the shape a
-    // near-dup corpus actually has. SCALING.md measures that regime;
-    // this spec ASSERTS it (judge r8: a recall regression must fail
-    // `sbt test`, not drift in a doc). Same Replicas recipe as
-    // ScaleSmoke: 16 replicas, deterministic ±0.05 per-element jitter.
+    // barely above the bulk, so ANY bucketed index scores low on it);
+    // the MEANINGFUL regime is the jittered-replica corpus where every
+    // vector has true near-neighbors, the shape a near-dup corpus
+    // actually has. This spec ASSERTS recall there, so a recall
+    // regression fails `sbt test` instead of drifting in a doc. Same
+    // Replicas recipe as SynthScale: 16 replicas, deterministic ±0.05
+    // per-element jitter.
     val embBase = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"),
         SimilarityQueries.asDoubles(col("embedding")).as("vec"))
@@ -166,6 +166,31 @@ class ScalePathSpec extends AnyFunSuite {
     val rIvf = ivf.intersect(exact).count() / nExact
     assert(rIvf >= 0.6,
       s"IVF (nProbe=4) recall@5 regressed in the jittered regime: $rIvf < 0.6")
+  }
+
+  test("ivf knn: recall rises with nProbe; nProbe = nLists is the exact top-k") {
+    // The jittered gate above cannot see the probe count: a jittered
+    // vector's neighbors are its own replicas, which share its cell. On
+    // the base corpus the neighbors spread over cells, so a probe count
+    // that is ignored, or a default of one cell, loses recall here.
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"),
+        SimilarityQueries.asDoubles(col("embedding")).as("vec"))
+    val mod = 10
+    val exact = SimilarityQueries.blockedTopKFrom(emb, 5, mod)
+      .select("probe_id", "vec_id").localCheckpoint(true)
+    val nExact = exact.count().toDouble
+    val (indexed, centroids) = operators.IvfKnn.buildIndexFrom(emb)
+    val cells = indexed.localCheckpoint(true)
+    def recall(nProbe: Int): Double =
+      operators.IvfKnn.approxTopKFrom(cells, centroids, 5, nProbe, mod)
+        .select("probe_id", "vec_id").intersect(exact).count() / nExact
+    val r1 = recall(1)
+    val rDefault = recall(operators.IvfKnn.NProbe)
+    // every cell scanned: the same cosines and tie-break as brute force
+    assert(recall(operators.IvfKnn.NLists) == 1.0)
+    assert(r1 < rDefault,
+      s"default nProbe=${operators.IvfKnn.NProbe} recall $rDefault is not above one cell's $r1")
   }
 
   test("multimodal: batched decode is deterministic and preserves rows + partitioning") {

@@ -25,14 +25,29 @@ class TablesSchemaSpec extends AnyFunSuite {
   }
 
   test("declared schemas equal the inferred schema of every fixture table") {
-    fixtureDirs.foreach { dir =>
-      val onDisk = new java.io.File(dir).list().filter(_.endsWith(".parquet"))
-        .map(_.stripSuffix(".parquet")).toSet
-      assert(onDisk == Tables.Schemas.keySet, dir)
-      Tables.Schemas.keys.foreach { name =>
-        val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
-        assert(Tables.load(spark, dir, name).schema == inferred, s"$dir/$name")
+    // SynthScale's 2x copy of the smallest fixture is one more input:
+    // the scaled corpora are written by Spark, not by the generator
+    val base = fixtureDirs.head
+    val synth = Files.createTempDirectory("synth2x").toFile
+    try {
+      SynthScale.write(spark, base, synth.getPath, 2)
+      (fixtureDirs :+ synth.getPath).foreach { dir =>
+        val onDisk = new java.io.File(dir).list().filter(_.endsWith(".parquet"))
+          .map(_.stripSuffix(".parquet")).toSet
+        assert(onDisk == Tables.Schemas.keySet, dir)
+        Tables.Schemas.keys.foreach { name =>
+          val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+          assert(Tables.load(spark, dir, name).schema == inferred, s"$dir/$name")
+        }
       }
+      Tables.Schemas.keys.foreach { name =>
+        val k = if (name == "region" || name == "nation") 1 else 2
+        assert(Tables.load(spark, synth.getPath, name).count() ==
+          k * Tables.load(spark, base, name).count(), name)
+      }
+    } finally {
+      synth.listFiles().foreach(_.delete())
+      synth.delete()
     }
   }
 
