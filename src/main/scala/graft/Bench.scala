@@ -121,11 +121,15 @@ object Bench {
       .filter(r => pipelineQueries(r._1) && r._2 >= 0).map(_._2).sum
     val totalExPipeline = total - pipelineIo
     val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
+    // Stop Spark BEFORE the summary line so no shutdown logging can land
+    // after it — the JSON must be the final bytes of the captured tail.
+    spark.stop()
     // The recorder keeps only a 2000-char stdout tail, so the per-query
     // map is also persisted to a file in the working tree — committed
     // next session, it gives every round a full timing history that no
-    // tail window can clip.
-    if (ordered.size == SparkEntry.queries.size) try {
+    // tail window can clip. A failed write throws: the run exits non-zero
+    // rather than leave an old file looking current.
+    if (ordered.size == SparkEntry.queries.size) {
       val qjson = results
         .map { case (n, mn, md) => f""""$n":{"min":$mn%.3f,"med":$md%.3f}""" }
         .mkString("{", ",", "}")
@@ -137,10 +141,7 @@ object Bench {
           f""""total_ex_pipeline":$totalExPipeline%.3f,"failed":$failedJson,""" +
           f""""queries":$qjson}""")
       finally w.close()
-    } catch { case _: Throwable => () }
-    // Stop Spark BEFORE the summary line so no shutdown logging can land
-    // after it — the JSON must be the final bytes of the captured tail.
-    spark.stop()
+    }
     // Two summary lines. The recorder keeps a 2000-char tail (measured:
     // BENCH_r05.json's "tail" is exactly 2000 chars), and at 110 queries
     // the full inline map is ~2.5 KB — it can never survive the window.

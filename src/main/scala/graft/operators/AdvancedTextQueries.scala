@@ -555,12 +555,8 @@ object AdvancedTextQueries {
     * broadcast over the post-limit 50 rows (q_tfidf's declared shape);
     * unigram joins attach to the 50 survivors, not the vocabulary.
     */
-  def qCollocations(spark: SparkSession, sfDir: String): DataFrame =
-    collocationsFrom(Tables.documents(spark, sfDir))
-
-  /** DataFrame-core collocation mining over any (doc_id, text) frame. */
-  def collocationsFrom(docs: DataFrame): DataFrame = {
-    val pos = docs
+  def qCollocations(spark: SparkSession, sfDir: String): DataFrame = {
+    val pos = Tables.documents(spark, sfDir)
       .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "w")))
     val byPos = Window.partitionBy("doc_id").orderBy(col("pos").asc)
     val bi = pos.withColumn("w2", lead(col("w"), 1).over(byPos))
@@ -838,12 +834,8 @@ object AdvancedTextQueries {
     * matter how big the input. Pure column algebra (sequence +
     * substring), fully codegen'd.
     */
-  def qBpePairs(spark: SparkSession, sfDir: String): DataFrame =
-    bpePairsFrom(Tables.documents(spark, sfDir))
-
-  /** Frame-parameterized body of [[qBpePairs]] over any (text) frame. */
-  def bpePairsFrom(docs: DataFrame): DataFrame = {
-    val vocab = docs
+  def qBpePairs(spark: SparkSession, sfDir: String): DataFrame = {
+    val vocab = Tables.documents(spark, sfDir)
       .select(explode(tokens(col("text"))).as("word"))
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
@@ -1062,15 +1054,9 @@ object AdvancedTextQueries {
     * set sizes re-enter as a broadcast to finish the union algebra
     * |A∪B| = |A|+|B|−|A∩B| without a second pass.
     */
-  def qSourceOverlap(spark: SparkSession, sfDir: String): DataFrame =
-    sourceOverlapFrom(Tables.documents(spark, sfDir))
-
-  /** Frame-parameterized body of [[qSourceOverlap]] over any
-    * (doc_id, source, text) frame.
-    */
-  def sourceOverlapFrom(docs: DataFrame): DataFrame = {
+  def qSourceOverlap(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("pos")
-    val srcSh = docs
+    val srcSh = Tables.documents(spark, sfDir)
       .select(col("source"), col("doc_id"),
         posexplode(tokens(col("text"))).as(Seq("pos", "t")))
       .withColumn("t1", lead(col("t"), 1).over(w))
@@ -1172,16 +1158,12 @@ object AdvancedTextQueries {
     * doc_id) model is vocabulary-bounded and map-side combinable
     * (min combines), joined back to the position stream once.
     */
-  def qNgramNovelty(spark: SparkSession, sfDir: String): DataFrame =
-    ngramNoveltyFrom(Tables.documents(spark, sfDir))
-
-  /** Frame-parameterized body of [[qNgramNovelty]]. */
-  def ngramNoveltyFrom(docs: DataFrame): DataFrame = {
+  def qNgramNovelty(spark: SparkSession, sfDir: String): DataFrame = {
     // same one-pass rewrite as [[dupNgramFracFrom]]: the stream is
     // built once, and first_doc is a min window over the ng partition
     // on the stream's own exchange instead of an aggregate joined back
     // to a second copy of the stream (min needs no dedup pre-fold)
-    val grams = graft.Tables.spread(docs, col("doc_id"))
+    val grams = graft.Tables.spread(Tables.documents(spark, sfDir), col("doc_id"))
       .select(col("doc_id"), tokens(col("text")).as("__ts"))
       .select(col("doc_id"), TextQueries.ngrams(col("__ts"), 5).as("ngs"))
       .select(col("doc_id"), explode_outer(col("ngs")).as("ng"))
@@ -1218,14 +1200,8 @@ object AdvancedTextQueries {
     * frames; scoring joins the model to the bigram stream on
     * (lang, bigram). One bigram-stream exchange, no driver state.
     */
-  def qBigramLm(spark: SparkSession, sfDir: String): DataFrame =
-    bigramLmFrom(Tables.documents(spark, sfDir))
-
-  /** Frame-parameterized body of [[qBigramLm]] over any
-    * (doc_id, lang, text) frame.
-    */
-  def bigramLmFrom(docs: DataFrame): DataFrame = {
-    val bigrams = docs
+  def qBigramLm(spark: SparkSession, sfDir: String): DataFrame = {
+    val bigrams = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("lang"), tokens(col("text")).as("ts"))
       .filter(size(col("ts")) >= 2)
       .select(col("doc_id"), col("lang"),
@@ -1552,13 +1528,7 @@ object AdvancedTextQueries {
     * crosses the exchange.
     */
   def qCharEntropy(spark: SparkSession, sfDir: String): DataFrame =
-    charEntropyFrom(Tables.documents(spark, sfDir))
-
-  /** DataFrame-core body of [[qCharEntropy]] over any (source, text)
-    * frame.
-    */
-  def charEntropyFrom(docs: DataFrame): DataFrame =
-    docs
+    Tables.documents(spark, sfDir)
       .select(col("source"), explode(split(col("text"), "")).as("ch"))
       .filter(col("ch") =!= "")
       .groupBy("source", "ch")

@@ -531,12 +531,8 @@ object AnalyticsQueries {
     * the oracle checks every node's exact integer rank, not just a
     * head.
     */
-  def qPagerank(spark: SparkSession, sfDir: String): DataFrame =
-    pagerankFrom(Tables.lineitem(spark, sfDir))
-
-  /** DataFrame-core form over any (l_orderkey, l_partkey) frame. */
-  def pagerankFrom(lineitem: DataFrame): DataFrame = {
-    val pairs = BehaviorQueries.cooccurPairCounts(lineitem)
+  def qPagerank(spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
       .filter(col("n_orders") >= PagerankMinCooccur)
       .select("p1", "p2")
     val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
@@ -555,12 +551,8 @@ object AnalyticsQueries {
     * triangles with the textbook three-way self-join, so the exact
     * per-node counts (not just the total) are hash-checked.
     */
-  def qTriangles(spark: SparkSession, sfDir: String): DataFrame =
-    trianglesFrom(Tables.lineitem(spark, sfDir))
-
-  /** DataFrame-core form over any (l_orderkey, l_partkey) frame. */
-  def trianglesFrom(lineitem: DataFrame): DataFrame = {
-    val und = BehaviorQueries.cooccurPairCounts(lineitem)
+  def qTriangles(spark: SparkSession, sfDir: String): DataFrame = {
+    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
       .filter(col("n_orders") >= PagerankMinCooccur)
       .select(col("p1").as("u"), col("p2").as("v"))
     GraphOps.triangleCounts(und)
@@ -789,13 +781,9 @@ object AnalyticsQueries {
     * cross join, declared in SurfaceSweepSpec's dimensionGridBroadcasts.
     */
   val KmvK = 64
-  def qOverlapKmv(spark: SparkSession, sfDir: String): DataFrame =
-    overlapKmvFrom(Tables.events(spark, sfDir))
-
-  /** DataFrame-core KMV overlap over any (event_type, user_id) frame. */
-  def overlapKmvFrom(events: DataFrame): DataFrame = {
+  def qOverlapKmv(spark: SparkSession, sfDir: String): DataFrame = {
     val K = KmvK
-    val pts = events
+    val pts = Tables.events(spark, sfDir)
       .select(col("event_type"), col("user_id")).distinct()
       .select(col("event_type"),
         conv(substring(md5(concat(lit("kmv:"), col("user_id").cast("string"))),

@@ -41,14 +41,8 @@ object BehaviorQueries {
     * deliberately derives the same result the other way (three chained
     * join-aggregates) so the two formulations check each other.
     */
-  def qFunnel(spark: SparkSession, sfDir: String): DataFrame =
-    funnelFrom(Tables.events(spark, sfDir))
-
-  /** DataFrame-core funnel over any (user_id, ts, event_id, event_type)
-    * frame.
-    */
-  def funnelFrom(events: DataFrame): DataFrame = {
-    val ev = events.select("user_id", "ts", "event_id", "event_type")
+  def qFunnel(spark: SparkSession, sfDir: String): DataFrame = {
+    val ev = Tables.events(spark, sfDir).select("user_id", "ts", "event_id", "event_type")
     val w = Window.partitionBy("user_id").orderBy(col("ts").asc, col("event_id").asc)
 
     val staged = ev
@@ -218,13 +212,7 @@ object BehaviorQueries {
     * same result.
     */
   def qCooccur(spark: SparkSession, sfDir: String): DataFrame =
-    cooccurFrom(Tables.lineitem(spark, sfDir))
-
-  /** DataFrame-core co-occurrence over any (l_orderkey, l_partkey)
-    * frame.
-    */
-  def cooccurFrom(lineitem: DataFrame): DataFrame =
-    cooccurPairCounts(lineitem)
+    cooccurPairCounts(Tables.lineitem(spark, sfDir))
       .orderBy(desc("n_orders"), asc_nulls_first("p1"), asc_nulls_first("p2"))
       .limit(25)
 
@@ -301,20 +289,16 @@ object BehaviorQueries {
     * the shuffles are user_id then path — both key-partitioned; the
     * final top-100 is a TakeOrdered, never a global sort.
     */
-  def qSessionpath(spark: SparkSession, sfDir: String): DataFrame =
-    sessionPathsFrom(Tables.events(spark, sfDir))
-
-  def sessionPathsFrom(events: DataFrame, gapUs: Long = 1800000000L,
-      topK: Int = 100): DataFrame = {
+  def qSessionpath(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("us").asc, col("event_id").asc)
     val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
+    Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .withColumn("brk",
         when(lag(col("us"), 1).over(w).isNull ||
-          col("us") - lag(col("us"), 1).over(w) > gapUs, 1).otherwise(0))
+          col("us") - lag(col("us"), 1).over(w) > 1800000000L, 1).otherwise(0))
       .withColumn("sess", sum(col("brk")).over(cum))
       .groupBy("user_id", "sess")
       .agg(array_join(
@@ -324,7 +308,7 @@ object BehaviorQueries {
           x => x.getField("event_type")), ">").as("path"))
       .groupBy("path").agg(count(lit(1)).as("n_sessions"))
       .orderBy(col("n_sessions").desc, asc_nulls_first("path"))
-      .limit(topK)
+      .limit(100)
   }
 
   /** Last-touch attribution: each purchase is credited to the user's
@@ -336,15 +320,11 @@ object BehaviorQueries {
     * Purchases with no preceding click attribute to nothing (null) and
     * report a null gap.
     */
-  def qAttribution(spark: SparkSession, sfDir: String): DataFrame =
-    attributionFrom(Tables.events(spark, sfDir))
-
-  /** DataFrame-core form over (user_id, event_id, event_type, ts). */
-  def attributionFrom(events: DataFrame): DataFrame = {
+  def qAttribution(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Window.partitionBy("user_id")
       .orderBy(col("us").asc, col("event_id").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    events
+    Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
       .withColumn("click_us",
@@ -461,6 +441,23 @@ object BehaviorQueries {
     */
   val StationaryMaxCells = 65536
 
+  /** The one corpus fold of q_transitions, q_entropy_rate and both
+    * q_stationary paths: the event stream → (from_type, to_type, n)
+    * transition-count matrix.
+    */
+  private[graft] def transitionCounts(spark: SparkSession,
+      sfDir: String): DataFrame = {
+    val w = Window.partitionBy("user_id")
+      .orderBy(col("ts").asc, col("event_id").asc)
+    Tables.events(spark, sfDir)
+      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(w))
+      .filter(col("next_type").isNotNull)
+      .groupBy(col("event_type").as("from_type"),
+        col("next_type").as("to_type"))
+      .agg(count(lit(1)).as("n"))
+  }
+
   /** Stationary distribution of the event-type Markov chain: where
     * does a user's session settle long-run? — the asymptotic summary
     * on top of q_transitions' one-step matrix. 20 power-iteration
@@ -479,23 +476,6 @@ object BehaviorQueries {
     * then run on |types| rows — the iteration cost is independent of
     * corpus size by construction.
     */
-  /** The one corpus fold of q_transitions, q_entropy_rate and both
-    * q_stationary paths: the event stream → (from_type, to_type, n)
-    * transition-count matrix.
-    */
-  private[graft] def transitionCounts(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val w = Window.partitionBy("user_id")
-      .orderBy(col("ts").asc, col("event_id").asc)
-    Tables.events(spark, sfDir)
-      .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(w))
-      .filter(col("next_type").isNotNull)
-      .groupBy(col("event_type").as("from_type"),
-        col("next_type").as("to_type"))
-      .agg(count(lit(1)).as("n"))
-  }
-
   def qStationary(spark: SparkSession, sfDir: String): DataFrame = {
     val scale = 1000000000000L
     val c = transitionCounts(spark, sfDir)
@@ -775,14 +755,8 @@ object BehaviorQueries {
     * tiny day dimension. No data-sized window, fan-out fixed at 28
     * applied post-collapse.
     */
-  def qStickiness(spark: SparkSession, sfDir: String): DataFrame =
-    stickinessFrom(Tables.events(spark, sfDir))
-
-  /** DataFrame-core body of [[qStickiness]] over any (user_id, ts)
-    * frame.
-    */
-  def stickinessFrom(events: DataFrame): DataFrame = {
-    val du = events
+  def qStickiness(spark: SparkSession, sfDir: String): DataFrame = {
+    val du = Tables.events(spark, sfDir)
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .distinct()
     val days = du.select(col("day").as("target_day")).distinct()

@@ -77,11 +77,6 @@ object CoreQueries {
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
 
-  /** Inverted index (`mrapps/indexer.go`): per word, the count of distinct
-    * docs containing it plus the sorted comma-joined doc id list. The
-    * per-doc distinct (the reference's `map[string]bool`) falls out of
-    * `collect_set`.
-    */
   /** The wordcount again, but the counting runs through a custom typed
     * `Aggregator` (graft.functions.CountOccurrences) registered as a
     * UDAF — proving the reference's `reducef` plugin surface
@@ -98,6 +93,11 @@ object CoreQueries {
       .orderBy("word")
   }
 
+  /** Inverted index (`mrapps/indexer.go`): per word, the count of distinct
+    * docs containing it plus the sorted comma-joined doc id list. The
+    * per-doc distinct (the reference's `map[string]bool`) falls out of
+    * `collect_set`.
+    */
   def qInvertedIndex(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
       .select(col("doc_id"), explode(split(lower(col("text")), "[^a-z]+")).as("word"))

@@ -204,12 +204,8 @@ object CurationQueries {
     * counts once. Everything after the first agg is vocab-sized, not
     * corpus-sized; the final fold is |sources|² rows.
     */
-  def qJsDivergence(spark: SparkSession, sfDir: String): DataFrame =
-    jsDivergenceFrom(Tables.documents(spark, sfDir))
-
-  /** DataFrame-core form over any (source, text) frame. */
-  def jsDivergenceFrom(docs: DataFrame): DataFrame = {
-    val counts = docs
+  def qJsDivergence(spark: SparkSession, sfDir: String): DataFrame = {
+    val counts = Tables.documents(spark, sfDir)
       .select(col("source"), explode(tokens(col("text"))).as("t"))
       .groupBy("source", "t")
       .agg(count(lit(1)).as("c"))

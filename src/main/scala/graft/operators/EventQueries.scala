@@ -243,14 +243,10 @@ object EventQueries {
     * orders of magnitude smaller than the log, which is exactly the side
     * you want re-shuffled. No global sort; per-user state is bounded.
     */
-  def qScd2(spark: SparkSession, sfDir: String): DataFrame =
-    scd2From(Tables.events(spark, sfDir))
-
-  /** DataFrame-core SCD2 build over any event frame. */
-  def scd2From(events: DataFrame): DataFrame = {
+  def qScd2(spark: SparkSession, sfDir: String): DataFrame = {
     val byTime = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
-    val runs = events
+    val runs = Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
       .withColumn("chg",
         when(lag(col("event_type"), 1).over(byTime).isNull ||
@@ -285,14 +281,10 @@ object EventQueries {
     * a single exchange; decimal(38,0) accumulation cannot overflow below
     * ~10^24 cent-micros per user (≫ any real stream).
     */
-  def qTimeWeighted(spark: SparkSession, sfDir: String): DataFrame =
-    timeWeightedFrom(Tables.events(spark, sfDir))
-
-  /** DataFrame-core time-weighted average over any event frame. */
-  def timeWeightedFrom(events: DataFrame): DataFrame = {
+  def qTimeWeighted(spark: SparkSession, sfDir: String): DataFrame = {
     val byTime = Window.partitionBy("user_id")
       .orderBy(col("ts").asc, col("event_id").asc)
-    events
+    Tables.events(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("ts"), col("value"))
       .withColumn("us", unix_micros(col("ts")))
       .withColumn("next_us", lead(col("us"), 1).over(byTime))

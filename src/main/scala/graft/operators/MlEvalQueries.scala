@@ -133,17 +133,27 @@ object MlEvalQueries {
       .orderBy(asc_nulls_first("true_label"), asc_nulls_first("pred_label"))
   }
 
+  /** The kNN(5) retrieval every labeled-embedding metric reads: the
+    * blocked grid top-k of every `probeModulus`-th vector, and the
+    * (vec_id, label) lookup its rows join back to.
+    */
+  private def labeledTopK(spark: SparkSession, sfDir: String,
+      probeModulus: Int = 100): (DataFrame, DataFrame) = {
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), SimilarityQueries.asDoubles(col("embedding")).as("vec"))
+      .repartition(spark.sparkContext.defaultParallelism)
+    val labels = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
+    (SimilarityQueries.blockedTopKFrom(emb, k = 5, probeModulus = probeModulus),
+      labels)
+  }
+
   /** (probe_id, pred_label, votes, true_label) for every probe — the
     * shared kNN(5) majority-vote labeling qKnnConfusion, qPrf, and
     * qCalibration all read; `votes` (1..5) is the winning label's
     * neighbor count, the labeler's native confidence signal.
     */
   private def knnPredictions(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), SimilarityQueries.asDoubles(col("embedding")).as("vec"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val labels = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
-    val nn = SimilarityQueries.blockedTopKFrom(emb, k = 5)
+    val (nn, labels) = labeledTopK(spark, sfDir)
     val votes = nn.join(labels, Seq("vec_id"))
       .groupBy(col("probe_id"), col("label"))
       .agg(count(lit(1)).as("votes"))
@@ -261,11 +271,7 @@ object MlEvalQueries {
     * it.
     */
   def qMrr(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), SimilarityQueries.asDoubles(col("embedding")).as("vec"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val labels = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
-    val nn = SimilarityQueries.blockedTopKFrom(emb, k = 5)
+    val (nn, labels) = labeledTopK(spark, sfDir)
     val firstHit = nn
       .join(labels, Seq("vec_id"))
       .join(labels.select(col("vec_id").as("probe_id"),
@@ -497,12 +503,7 @@ object MlEvalQueries {
     * this is probe-linear. Rank windows partition by class.
     */
   def qAuc(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), SimilarityQueries.asDoubles(col("embedding")).as("vec"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val labels = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
-    val nn = SimilarityQueries.blockedTopKFrom(emb, k = 5,
-      probeModulus = RankProbeModulus)
+    val (nn, labels) = labeledTopK(spark, sfDir, RankProbeModulus)
     val votes = nn.join(labels, Seq("vec_id"))
       .groupBy(col("probe_id"), col("label"))
       .agg(count(lit(1)).as("votes"))
@@ -554,12 +555,7 @@ object MlEvalQueries {
     * windows over ≤k rows per probe.
     */
   def qNdcg(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), SimilarityQueries.asDoubles(col("embedding")).as("vec"))
-      .repartition(spark.sparkContext.defaultParallelism)
-    val labels = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("label"))
-    val nn = SimilarityQueries.blockedTopKFrom(emb, k = 5,
-      probeModulus = RankProbeModulus)
+    val (nn, labels) = labeledTopK(spark, sfDir, RankProbeModulus)
     val rel = nn.join(labels, Seq("vec_id"))
       .join(labels.select(col("vec_id").as("probe_id"),
         col("label").as("true_label")), Seq("probe_id"))

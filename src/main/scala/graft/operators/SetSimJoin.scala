@@ -51,16 +51,11 @@ object SetSimJoin {
   }
 
   /** All doc pairs with word-bigram-shingle Jaccard >= 1/2, found via
-    * the prefix filter and verified exactly.
+    * the prefix filter and verified exactly. tau is fixed at 1/2 so the
+    * verify compare stays integer (3*o >= n1+n2).
     */
-  def qSetsimPrefix(spark: SparkSession, sfDir: String): DataFrame =
-    setsimPrefixFrom(Tables.documents(spark, sfDir))
-
-  /** DataFrame-core form over any (doc_id, text) frame. tau is fixed at 1/2 so the verify compare stays
-    * integer (3*o >= n1+n2).
-    */
-  def setsimPrefixFrom(docs: DataFrame): DataFrame = {
-    val sh = shingles(docs)
+  def qSetsimPrefix(spark: SparkSession, sfDir: String): DataFrame = {
+    val sh = shingles(Tables.documents(spark, sfDir))
 
     // Global total order: (df asc, shingle asc). The order key is the
     // (df, s) pair itself — no global rank assignment, so no

@@ -292,15 +292,7 @@ object SimilarityQueries {
     * projection (no shuffle at all) — this is the audit that
     * validates the matrix, so it keeps the grid explicit.
     */
-  def qJlProject(spark: SparkSession, sfDir: String): DataFrame =
-    jlProjectFrom(spark, Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("label"),
-        asDoubles(col("embedding")).as("vec")))
-
-  /** DataFrame-core body of [[qJlProject]] over any (vec_id, label,
-    * vec: array<double>) frame.
-    */
-  def jlProjectFrom(spark: SparkSession, emb: DataFrame): DataFrame = {
+  def qJlProject(spark: SparkSession, sfDir: String): DataFrame = {
     val dims = spark.range(1, 65).select(col("id").cast("int").as("dim"))
     val outs = spark.range(1, 17).select(col("id").cast("int").as("j"))
     val signs = dims.crossJoin(broadcast(outs))
@@ -308,7 +300,8 @@ object SimilarityQueries {
         when(conv(substring(md5(concat(lit("jl:"), col("j").cast("string"),
           lit("_"), col("dim").cast("string"))), 1, 4), 16, 10)
           .cast("long") % 2 === 1, lit(1L)).otherwise(lit(-1L)).as("s"))
-    val e = emb
+    val e = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("label"), asDoubles(col("embedding")).as("vec"))
       .select(col("vec_id"), col("label"),
         posexplode(col("vec")).as(Seq("pos", "v")))
       .select(col("vec_id"), col("label"), (col("pos") + 1).as("dim"),

@@ -640,23 +640,17 @@ object StatsQueries {
     * value, c_a/c_b at the value and p (rows strictly below it across
     * both samples). The corpus folds to |distinct values| rows in one
     * groupBy BEFORE the ordered window runs, so the running sums
-    * iterate the value axis, not the event stream.
+    * iterate the value axis, not the event stream. The fold's frame is
+    * the value DOMAIN (near scale-invariant on replicated data). The
+    * running ECDF totals come from [[ScaleOps.partitionedRank]]
+    * (parallel range-partitioned windows + broadcast prefix offsets),
+    * so even an adversarial corpus whose value domain GROWS with the
+    * data never sees a single-partition window; `rn`/`n_total` ride
+    * along for consumers that need rank arithmetic on the same axis
+    * (q_emd's segment widths).
     */
-  private def twoSampleValueCounts(spark: SparkSession, sfDir: String): DataFrame =
-    twoSampleValueCountsFrom(Tables.events(spark, sfDir))
-
-  /** DataFrame-core form over any event frame. The fold's frame is the
-    * value DOMAIN (near scale-invariant on replicated data), not the
-    * stream. The running
-    * ECDF totals come from [[ScaleOps.partitionedRank]] (parallel
-    * range-partitioned windows + broadcast prefix offsets), so even an
-    * adversarial corpus whose value domain GROWS with the data never
-    * sees a single-partition window; `rn`/`n_total` ride along for
-    * consumers that need rank arithmetic on the same axis (q_emd's
-    * segment widths).
-    */
-  def twoSampleValueCountsFrom(events: DataFrame): DataFrame = {
-    val ev = events
+  private def twoSampleValueCounts(spark: SparkSession, sfDir: String): DataFrame = {
+    val ev = Tables.events(spark, sfDir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("value"),
         when(col("event_type") === "click", 1L).otherwise(0L).as("ia"),
@@ -696,13 +690,6 @@ object StatsQueries {
             (col("n_a") * col("n_b")).cast("double"), 6) + lit(0.0))
           .as("rank_biserial"))
 
-  /** Kolmogorov–Smirnov D between the same two samples: the maximum
-    * ECDF gap, located. The scaled gap |cum_a·n_b − cum_b·n_a| is an
-    * EXACT integer at every distinct value, so the argmax (gap desc,
-    * value asc on ties) never compares floats; D divides once at the
-    * end. Complements Mann–Whitney: KS sees shape/spread differences a
-    * location test misses.
-    */
   /** Cramér's V — the one-number effect size on top of q_contingency's
     * per-cell grid: V = √(χ²/(N·min(R−1, C−1))). The cross-cell χ²
     * total q_contingency deliberately leaves to the reader (a double
@@ -775,6 +762,13 @@ object StatsQueries {
       .orderBy(asc_nulls_first("event_type"))
   }
 
+  /** Kolmogorov–Smirnov D between the same two samples: the maximum
+    * ECDF gap, located. The scaled gap |cum_a·n_b − cum_b·n_a| is an
+    * EXACT integer at every distinct value, so the argmax (gap desc,
+    * value asc on ties) never compares floats; D divides once at the
+    * end. Complements Mann–Whitney: KS sees shape/spread differences a
+    * location test misses.
+    */
   def qKsTest(spark: SparkSession, sfDir: String): DataFrame = {
     val counts = twoSampleValueCounts(spark, sfDir)
     val totals = counts.agg(sum(col("c_a")).as("n_a"), sum(col("c_b")).as("n_b"))

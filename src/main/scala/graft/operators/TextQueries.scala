@@ -458,16 +458,26 @@ object TextQueries {
     * identically under Java regex and RE2. Pure projection — codegen'd,
     * no shuffle, safe at any scale.
     */
-  def redactPii(text: Column): Column = {
-    val email = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
-    val ip = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
-    val digits = "\\+?[0-9][0-9 ()+._-]{5,}[0-9]"
+  def redactPii(text: Column): Column =
     regexp_replace(
       regexp_replace(
-        regexp_replace(text, email, "<EMAIL>"),
-        ip, "<IP>"),
-      digits, "<NUMBER>")
-  }
+        regexp_replace(text, PiiEmail, "<EMAIL>"),
+        PiiIp, "<IP>"),
+      PiiDigits, "<NUMBER>")
+
+  private val PiiEmail = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
+  private val PiiIp = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
+  private val PiiDigits = "\\+?[0-9][0-9 ()+._-]{5,}[0-9]"
+
+  /** The text of q_redact_pii and q_pii_count: each doc plus an email,
+    * an IPv4 and a phone number derived from doc_id.
+    */
+  private def piiAugmented: Column = concat(
+    col("text"),
+    lit(" contact user"), col("doc_id"), lit("@mail.example.com or 10."),
+    col("doc_id") % 200, lit(".0."), col("doc_id") % 250,
+    lit(" tel +1 (555) 01"), col("doc_id") % 10, lit("-"),
+    col("doc_id") % 9000 + 1000)
 
   /** Oracle form of redactPii. The corpus text itself is letters-only,
     * so each doc is first augmented with deterministic PII-shaped spans
@@ -476,17 +486,10 @@ object TextQueries {
     * exactly reproducible in DuckDB (same augmentation, same patterns,
     * global replace). Pure projection both sides.
     */
-  def qRedactPii(spark: SparkSession, sfDir: String): DataFrame = {
-    val aug = concat(
-      col("text"),
-      lit(" contact user"), col("doc_id"), lit("@mail.example.com or 10."),
-      col("doc_id") % 200, lit(".0."), col("doc_id") % 250,
-      lit(" tel +1 (555) 01"), col("doc_id") % 10, lit("-"),
-      col("doc_id") % 9000 + 1000)
+  def qRedactPii(spark: SparkSession, sfDir: String): DataFrame =
     Tables.documents(spark, sfDir)
-      .select(col("doc_id"), redactPii(aug).as("redacted"))
+      .select(col("doc_id"), redactPii(piiAugmented).as("redacted"))
       .orderBy(asc_nulls_first("doc_id"))
-  }
 
   /** PII exposure report — the observability side of [[qRedactPii]]:
     * per pattern class (email, IPv4, free-form number), how many
@@ -502,22 +505,14 @@ object TextQueries {
     * to 3 rows — no shuffle of text.
     */
   def qPiiCount(spark: SparkSession, sfDir: String): DataFrame = {
-    val email = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
-    val ip = "[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}"
-    val digits = "\\+?[0-9][0-9 ()+._-]{5,}[0-9]"
-    val aug = concat(
-      col("text"),
-      lit(" contact user"), col("doc_id"), lit("@mail.example.com or 10."),
-      col("doc_id") % 200, lit(".0."), col("doc_id") % 250,
-      lit(" tel +1 (555) 01"), col("doc_id") % 10, lit("-"),
-      col("doc_id") % 9000 + 1000)
-    val t1 = regexp_replace(aug, email, "<EMAIL>")
-    val t2 = regexp_replace(t1, ip, "<IP>")
+    val aug = piiAugmented
+    val t1 = regexp_replace(aug, PiiEmail, "<EMAIL>")
+    val t2 = regexp_replace(t1, PiiIp, "<IP>")
     def cnt(t: Column, p: String): Column =
       size(regexp_extract_all(t, lit(p), lit(0)))
     Tables.documents(spark, sfDir)
-      .select(cnt(aug, email).as("c_email"), cnt(t1, ip).as("c_ip"),
-        cnt(t2, digits).as("c_num"))
+      .select(cnt(aug, PiiEmail).as("c_email"), cnt(t1, PiiIp).as("c_ip"),
+        cnt(t2, PiiDigits).as("c_num"))
       .agg(
         sum(when(col("c_email") > 0, 1L).otherwise(0L)).as("d_email"),
         sum(col("c_email").cast("long")).as("m_email"),
@@ -692,22 +687,19 @@ object TextQueries {
     * before ranking, doc_id breaks ties, and the presence filter is
     * the INTEGER tf sum, never a float compare.
     */
-  def qBm25(spark: SparkSession, sfDir: String): DataFrame =
-    bm25From(Tables.documents(spark, sfDir), Bm25Terms)
-
-  /** DataFrame-core form over any (doc_id, text) corpus. */
-  def bm25From(docs: DataFrame, terms: Seq[String], k: Int = 20): DataFrame = {
+  def qBm25(spark: SparkSession, sfDir: String): DataFrame = {
+    val docs = Tables.documents(spark, sfDir)
     val base = docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(
         col("doc_id") +: size(col("toks")).as("dl") +:
-          terms.zipWithIndex.map { case (t, i) =>
+          Bm25Terms.zipWithIndex.map { case (t, i) =>
             size(filter(col("toks"), x => x === lit(t))).as(s"tf$i")
           }: _*)
     val stats = base.agg(
       count(lit(1)).as("n_docs"),
       sum(col("dl").cast("long")).as("sum_dl") +:
-        terms.indices.map(i =>
+        Bm25Terms.indices.map(i =>
           count(when(col(s"tf$i") > 0, 1)).as(s"df$i")): _*)
     def termScore(i: Int): Column = {
       val tf = col(s"tf$i").cast("double")
@@ -721,15 +713,15 @@ object TextQueries {
     }
     base.crossJoin(broadcast(stats))
       .withColumn("avgdl", col("sum_dl").cast("double") / col("n_docs"))
-      .filter(terms.indices.map(i => col(s"tf$i")).reduce(_ + _) > 0)
+      .filter(Bm25Terms.indices.map(i => col(s"tf$i")).reduce(_ + _) > 0)
       .select(
         col("doc_id"),
-        terms.indices.map(i => (col(s"tf$i") > 0).cast("int")).reduce(_ + _)
+        Bm25Terms.indices.map(i => (col(s"tf$i") > 0).cast("int")).reduce(_ + _)
           .as("n_hits"),
-        (round(terms.indices.map(termScore).reduce(_ + _), 6) + lit(0.0))
+        (round(Bm25Terms.indices.map(termScore).reduce(_ + _), 6) + lit(0.0))
           .as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+      .limit(20)
   }
 
   /** Vocabulary construction with coverage accounting: the top-500
@@ -743,17 +735,13 @@ object TextQueries {
     * re-enters as a scalar broadcast. Integer count sums; one division
     * per row, rounded 6 dp.
     */
-  def qVocabCoverage(spark: SparkSession, sfDir: String): DataFrame =
-    vocabCoverageFrom(Tables.documents(spark, sfDir))
-
-  /** DataFrame-core form over any (text) frame. */
-  def vocabCoverageFrom(docs: DataFrame, vocabSize: Int = 500): DataFrame = {
+  def qVocabCoverage(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val counts = docs
+    val counts = Tables.documents(spark, sfDir)
       .select(explode(tokens(col("text"))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("cnt"))
     val total = counts.agg(sum(col("cnt")).as("n_total"))
-    val top = counts.orderBy(col("cnt").desc, col("token").asc).limit(vocabSize)
+    val top = counts.orderBy(col("cnt").desc, col("token").asc).limit(500)
     val w = Window.orderBy(col("cnt").desc, col("token").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     top.crossJoin(broadcast(total))
