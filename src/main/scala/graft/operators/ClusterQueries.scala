@@ -54,20 +54,22 @@ object ClusterQueries {
   private def vecDot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.vecDot(a, b)
 
-  /** vec_id, label, and the micro-quantized (integer-valued double)
-    * vector — the only form any arithmetic below touches.
+  /** A vector on the exact 1e-6 integer grid (integer-valued
+    * doubles) — the only form any arithmetic below touches.
     */
+  def quantize(v: Column): Column =
+    transform(v, x => round(x.cast("double") * 1000000, 0))
+
   private def quantized(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("label"),
-      transform(col("embedding"),
-        x => round(x.cast("double") * 1000000, 0)).as("qv"))
+      quantize(col("embedding")).as("qv"))
 
   /** Initial model: the embeddings of the k smallest vec_ids, cluster
     * id = rank order. Deterministic, matches the oracle's LIMIT k.
     */
   private def initModel(q: DataFrame, k: Int): Seq[(Int, Array[Double])] =
     q.orderBy("vec_id").limit(k).collect().toSeq.zipWithIndex.map {
-      case (r, i) => (i, r.getSeq[Double](2).toArray)
+      case (r, i) => (i, r.getAs[Seq[Double]]("qv").toArray)
     }
 
   /** Per-centroid distance structs (dist, cid) with the model inlined
@@ -87,14 +89,14 @@ object ClusterQueries {
 
   /** Nearest-centroid assignment as a pure projection: array_min's
     * lexicographic struct order gives argmin with the smaller-cid
-    * tie-break.
+    * tie-break. Every column of `q` is carried through, followed by
+    * `cluster` and `dist_sq`.
     */
-  private def assignWith(q: DataFrame,
+  def assignWith(q: DataFrame,
       centroids: Seq[(Int, Array[Double])]): DataFrame =
-    q.select(col("vec_id"), col("label"), col("qv"),
-        array_min(array(distCands(centroids): _*)).as("best"))
-      .select(col("vec_id"), col("label"), col("qv"),
-        col("best.cid").as("cluster"), col("best.d").as("dist_sq"))
+    q.withColumn("best", array_min(array(distCands(centroids): _*)))
+      .select(q.columns.toSeq.map(col) ++ Seq(
+        col("best.cid").as("cluster"), col("best.d").as("dist_sq")): _*)
 
   /** New model from an assignment: per-(cluster, dim) mean on the 1e-6
     * grid. The agg output is ≤ k·dim rows — a fixed-size model, the
@@ -116,18 +118,22 @@ object ClusterQueries {
     }.sortBy(_._1)
   }
 
-  /** Lloyd's k-means: `iters` (assign → update) rounds, then the final
-    * assignment under the last model. Returns one row per vector:
+  /** The engine's one k-means: `rounds` Lloyd rounds over a
+    * `(vec_id, qv, …)` frame (`qv` from [[quantize]]). Returns the
+    * model, (cluster id, centroid on the 1e-6 grid) sorted by id.
+    */
+  def lloyd(q: DataFrame, k: Int, rounds: Int): Seq[(Int, Array[Double])] =
+    (1 to rounds).foldLeft(initModel(q, k))((m, _) => updateModel(assignWith(q, m)))
+
+  /** Lloyd's k-means: `iters` rounds, then the final assignment under
+    * the last model. Returns one row per vector:
     * (vec_id, label, cluster, dist_sq) with dist_sq in squared
     * micro-units (exact integer).
     */
   def kmeansAssign(spark: SparkSession, emb: DataFrame,
       k: Int = K, iters: Int = Iters): DataFrame = {
     val q = quantized(emb).localCheckpoint(false)
-    var centroids = initModel(q, k)
-    for (_ <- 1 to iters)
-      centroids = updateModel(assignWith(q, centroids))
-    assignWith(q, centroids).drop("qv")
+    assignWith(q, lloyd(q, k, iters)).drop("qv")
   }
 
   /** Oracle-checked k-means: final cluster and squared distance per
@@ -200,8 +206,7 @@ object ClusterQueries {
     */
   def qSilhouette(spark: SparkSession, sfDir: String): DataFrame = {
     val q = quantized(Tables.embeddings(spark, sfDir)).localCheckpoint(false)
-    var centroids = initModel(q, K)
-    for (_ <- 1 to Iters) centroids = updateModel(assignWith(q, centroids))
+    val centroids = lloyd(q, K, Iters)
     q.select(col("vec_id"),
         array_sort(array(distCands(centroids): _*)).as("ds"))
       .select(col("vec_id"),

@@ -268,8 +268,10 @@ object GraphOps {
     // orientation join, the closing lookup) and `oriented` two (each
     // wedge-join side) — unpinned, the caller's pair-generation
     // pipeline executed up to 8x (before-plan: 22 parquet scans in
-    // q_triangles, 26 in q_clustering_coef); pinned it executes once
-    val e = und.select(col("u"), col("v")).localCheckpoint(false)
+    // q_triangles, 26 in q_clustering_coef); pinned it executes once.
+    // Eager: the consumers' AQE stages run concurrently, and a lazy pin
+    // truncates its lineage under them (`Failed to update accumulator`).
+    val e = und.select(col("u"), col("v")).localCheckpoint()
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -281,7 +283,7 @@ object GraphOps {
     val oriented = withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("src"),
       when(uFirst, col("v")).otherwise(col("u")).as("dst"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // wedges at the orientation-minimum vertex; the out-neighbor pair
     // {b, c} is normalized b < c by ID so the closing lookup hits the
     // undirected edge list's native (u < v) form directly

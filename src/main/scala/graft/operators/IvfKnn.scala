@@ -1,8 +1,5 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,16 +12,10 @@ import graft.operators.SimilarityQueries.{asDoubles, dot, l2Norm}
   * its `nProbe` nearest cells. Recall/cost trades off via nProbe
   * (nProbe = nLists degenerates to exact brute force).
   *
-  * Deterministic under any input partitioning: k-means|| seeds its
-  * sampling per partition index, so a fixed seed alone would tie the
-  * index to the scan's split layout. The training set is therefore
-  * keyed by `vec_id` before fitting — a hash sample, then a fixed
-  * `nLists`-way hash partitioning sorted within partitions — so the
-  * same corpus yields the same index whatever the file splits,
+  * The cells come from [[ClusterQueries.lloyd]], the engine's one
+  * k-means, fit on a bounded hash sample ([[MaxTrainRows]]). It is
+  * exact, so the index is the same whatever the file splits,
   * shuffle-partition count or task retries.
-  * Training SAMPLES the corpus (k-means is iterative); at 100 TB you
-  * train on a ~1M-row sample, then a single broadcast-join pass assigns
-  * cells — the big side never shuffles for the index build.
   */
 object IvfKnn {
 
@@ -39,6 +30,11 @@ object IvfKnn {
     * byte-identical to full-corpus training.
     */
   val MaxTrainRows = 100000L
+
+  /** Lloyd rounds of the cell training: on the sf0.001 base corpus, 3
+    * rounds lose top-5 recall that 5 keep; each round is one scan.
+    */
+  val TrainRounds = 5
 
   /** (vec_id, vec, cell) — corpus with IVF cell assignment, plus the
     * centroid table (cell, centroid array).
@@ -56,26 +52,22 @@ object IvfKnn {
     * the classic IVF balance.
     */
   def buildIndexFrom(emb: DataFrame, nLists: Int = NLists): (DataFrame, DataFrame) = {
-    val spark = emb.sparkSession
-    val featured = emb.withColumn("features", array_to_vector(col("vec")))
-    // Fit on a bounded hash sample; the one pass that touches every
-    // vector is model.transform below — a narrow map against broadcast
-    // centroids, no shuffle of the corpus.
-    val n = featured.count()
-    val sampled =
-      if (n <= MaxTrainRows) featured
-      else featured.filter(pmod(xxhash64(col("vec_id")), lit(1000000L)) <
-        lit(MaxTrainRows * 1000000L / n))
-    val train = sampled.repartition(nLists, col("vec_id"))
-      .sortWithinPartitions("vec_id")
-    val model = new KMeans()
-      .setK(nLists).setSeed(42L).setMaxIter(10)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(train)
-    val indexed = model.transform(featured).select(col("vec_id"), col("vec"), col("cell"))
-    import spark.implicits._
-    val centroids = model.clusterCenters.zipWithIndex.toSeq
-      .map { case (c: Vector, i: Int) => (i, c.toArray) }
+    val q = emb.select(col("vec_id"), col("vec"),
+      ClusterQueries.quantize(col("vec")).as("qv"))
+    val n = q.count()
+    // pinned: each Lloyd round scans the hash sample; re-reading and
+    // re-quantizing it per round doubled ann_ivf_topk's time at sf0.1
+    val train = (if (n <= MaxTrainRows) q
+      else q.filter(pmod(xxhash64(col("vec_id")), lit(1000000L)) <
+        lit(MaxTrainRows * 1000000L / n)))
+      .select("vec_id", "qv").localCheckpoint(false)
+    val model = ClusterQueries.lloyd(train, nLists, TrainRounds)
+    // the one pass over every vector: centroids inlined as literals, no
+    // shuffle of the corpus
+    val indexed = ClusterQueries.assignWith(q, model)
+      .select(col("vec_id"), col("vec"), col("cluster").as("cell"))
+    val centroids = emb.sparkSession
+      .createDataFrame(model.map { case (cell, c) => (cell, c.map(_ / 1e6)) })
       .toDF("cell", "centroid")
     (indexed, centroids)
   }

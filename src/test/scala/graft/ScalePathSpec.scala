@@ -126,6 +126,21 @@ class ScalePathSpec extends AnyFunSuite {
     val again = operators.IvfKnn.approxTopK(spark, sfDir, 5)
       .select("probe_id", "vec_id")
     assert(ivf.exceptAll(again).count() == 0 && again.exceptAll(ivf).count() == 0)
+    // layout independence: one partition and a 7-way hash layout give
+    // the same centroids and the same cell per vector
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"),
+        SimilarityQueries.asDoubles(col("embedding")).as("vec"))
+    def index(layout: org.apache.spark.sql.DataFrame) = {
+      val (indexed, centroids) = operators.IvfKnn.buildIndexFrom(layout)
+      (centroids.collect().map(r => (r.getInt(0), r.getSeq[Double](1))).toSet,
+        indexed.select("vec_id", "cell").collect().toSet)
+    }
+    val (c1, cells1) = index(emb.coalesce(1))
+    val (c7, cells7) = index(emb.repartition(7, col("vec_id")))
+    val (sameCentroids, sameCells) = (c1 == c7, cells1 == cells7)
+    assert(c1.nonEmpty && sameCentroids, "centroid tables differ across input layouts")
+    assert(sameCells, "cell assignments differ across input layouts")
   }
 
   test("jittered-replica regime: IVF and multi-probe LSH recall gates") {

@@ -11,6 +11,7 @@ This is a dev tool only — NOT part of the Scala library.
 import json
 import math
 import sys
+import time
 
 import duckdb
 import pyarrow.parquet as pq
@@ -181,13 +182,61 @@ def cc_iterative(con, sql):
     return tbl
 
 
+def judge(con, name, sql, out_dir, skip_unrolled):
+    """Compare one query's Spark dump <out_dir>/<name>/ with its oracle
+    SQL run on `con`. Returns {"status": "ok", "rows", "oracle_sec"} or
+    {"status": "fail", "reason"[, "detail"]}; "detail" holds the first
+    differing rows.
+
+    Queries with an ITERATIVE or CC_ITERATIVE hook are judged against
+    the hook. Unless `skip_unrolled` (pass it EXPLICITLY when the data
+    is too large for the unrolled form to spill-fit, as in the synthetic
+    10x/100x sweeps), the unrolled oracle SQL also runs and must agree
+    with the hook, so the iterative form can never drift from the
+    contract SQL it stands in for.
+    """
+    t0 = time.time()
+    try:
+        spark_tbl = ds.dataset(f"{out_dir}/{name}").to_table()
+    except Exception as e:
+        return {"status": "fail", "reason": f"no spark output ({e})"}
+    try:
+        if name in ITERATIVE or name in CC_ITERATIVE:
+            duck = (ITERATIVE[name](con) if name in ITERATIVE
+                    else cc_iterative(con, sql))
+            if not skip_unrolled:
+                unrolled = con.execute(sql).fetch_arrow_table()
+                if not duck.equals(unrolled):
+                    return {"status": "fail", "reason": "iterative hook "
+                            "diverges from the unrolled oracle SQL"}
+        else:
+            duck = con.execute(sql).fetch_arrow_table()
+    except Exception as e:
+        return {"status": "fail", "reason": f"oracle sql error: {e}"}
+    s_cols, d_cols = sorted(spark_tbl.column_names), sorted(duck.column_names)
+    if s_cols != d_cols:
+        return {"status": "fail",
+                "reason": f"schema spark={s_cols} duck={d_cols}"}
+    s_rows = table_rows(spark_tbl, s_cols)
+    d_rows = table_rows(duck, s_cols)
+    if s_rows == d_rows:
+        return {"status": "ok", "rows": len(s_rows),
+                "oracle_sec": round(time.time() - t0, 1)}
+    reason = f"rows spark={len(s_rows)} duck={len(d_rows)}"
+    for i, (a, b) in enumerate(zip(s_rows, d_rows)):
+        if a != b:
+            return {"status": "fail", "reason": reason, "detail":
+                    f"  first diff at row {i}:\n    spark={a}\n    duck ={b}"}
+    n = min(len(s_rows), len(d_rows))
+    return {"status": "fail", "reason": reason, "detail":
+            f"  common prefix equal; extra rows from {n}:\n"
+            f"    spark={s_rows[n:n+2]}\n    duck ={d_rows[n:n+2]}"}
+
+
 def main():
-    # --skip-unrolled: skip the iterative-pagerank faithfulness
-    # cross-check (the unrolled 10-round CTE SQL) — pass it EXPLICITLY
-    # when the data is too large for the unrolled form to spill-fit
-    # (the synthetic 10x/100x sweeps). An explicit flag, not path
-    # sniffing: "sf1" as a substring also matched sf10 and any
-    # directory containing it, silently skipping the check.
+    # --skip-unrolled: see judge.  An explicit flag, not path sniffing:
+    # "sf1" as a substring also matched sf10 and any directory
+    # containing it, silently skipping the check.
     argv = [a for a in sys.argv[1:] if a != "--skip-unrolled"]
     skip_unrolled = "--skip-unrolled" in sys.argv[1:]
     sf_dir, out_dir = argv[0], argv[1]
@@ -203,53 +252,14 @@ def main():
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
-        try:
-            spark_tbl = ds.dataset(f"{out_dir}/{name}").to_table()
-        except Exception as e:
-            print(f"FAIL {name}: no spark output ({e})")
-            failures += 1
-            continue
-        try:
-            if name in ITERATIVE or name in CC_ITERATIVE:
-                duck = (ITERATIVE[name](con) if name in ITERATIVE
-                        else cc_iterative(con, sql))
-                # faithfulness cross-check: at driver-fixture scales the
-                # unrolled oracle_sql.json SQL is also feasible — run it
-                # and require the hook to agree, so the iterative form
-                # can never drift from the contract SQL it stands in for
-                if not skip_unrolled:
-                    unrolled = con.execute(sql).fetch_arrow_table()
-                    if not duck.equals(unrolled):
-                        print(f"FAIL {name}: iterative hook diverges "
-                              "from the unrolled oracle SQL")
-                        failures += 1
-                        continue
-            else:
-                duck = con.execute(sql).fetch_arrow_table()
-        except Exception as e:
-            print(f"FAIL {name}: oracle sql error: {e}")
-            failures += 1
-            continue
-        s_cols, d_cols = sorted(spark_tbl.column_names), sorted(duck.column_names)
-        if s_cols != d_cols:
-            print(f"FAIL {name}: schema spark={s_cols} duck={d_cols}")
-            failures += 1
-            continue
-        s_rows = table_rows(spark_tbl, s_cols)
-        d_rows = table_rows(duck, s_cols)
-        if s_rows == d_rows:
-            print(f"OK   {name}: {len(s_rows)} rows")
+        r = judge(con, name, sql, out_dir, skip_unrolled)
+        if r["status"] == "ok":
+            print(f"OK   {name}: {r['rows']} rows")
         else:
             failures += 1
-            print(f"FAIL {name}: rows spark={len(s_rows)} duck={len(d_rows)}")
-            for i, (a, b) in enumerate(zip(s_rows, d_rows)):
-                if a != b:
-                    print(f"  first diff at row {i}:\n    spark={a}\n    duck ={b}")
-                    break
-            else:
-                n = min(len(s_rows), len(d_rows))
-                print(f"  common prefix equal; extra rows from {n}:")
-                print(f"    spark={s_rows[n:n+2]}\n    duck ={d_rows[n:n+2]}")
+            print(f"FAIL {name}: {r['reason']}")
+            if "detail" in r:
+                print(r["detail"])
     sys.exit(1 if failures else 0)
 
 

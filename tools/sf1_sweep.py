@@ -28,43 +28,11 @@ import hashlib
 import json
 import os
 import sys
-import time
 
 import duckdb
-import pyarrow.dataset as ds
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-from selfcheck import CC_ITERATIVE, ITERATIVE, cc_iterative, table_rows  # noqa: E402
-
-
-def judge(con, name, sql, out_dir, skip_unrolled):
-    t0 = time.time()
-    spark_tbl = ds.dataset(f"{out_dir}/{name}").to_table()
-    if name in ITERATIVE or name in CC_ITERATIVE:
-        duck = (ITERATIVE[name](con) if name in ITERATIVE
-                else cc_iterative(con, sql))
-        if not skip_unrolled:
-            unrolled = con.execute(sql).fetch_arrow_table()
-            if not duck.equals(unrolled):
-                return {"status": "fail",
-                        "reason": "iterative hook != unrolled SQL"}
-    else:
-        duck = con.execute(sql).fetch_arrow_table()
-    s_cols = sorted(spark_tbl.column_names)
-    d_cols = sorted(duck.column_names)
-    if s_cols != d_cols:
-        return {"status": "fail",
-                "reason": f"schema spark={s_cols} duck={d_cols}"}
-    s_rows = table_rows(spark_tbl, s_cols)
-    d_rows = table_rows(duck, s_cols)
-    if s_rows != d_rows:
-        diff = next((i for i, (a, b) in enumerate(zip(s_rows, d_rows))
-                     if a != b), min(len(s_rows), len(d_rows)))
-        return {"status": "fail",
-                "reason": f"rows spark={len(s_rows)} duck={len(d_rows)} "
-                          f"first_diff_at={diff}"}
-    return {"status": "ok", "rows": len(s_rows),
-            "oracle_sec": round(time.time() - t0, 1)}
+from selfcheck import judge  # noqa: E402
 
 
 def main():
@@ -111,12 +79,7 @@ def main():
     for name in pending:
         if not os.path.exists(f"{out_dir}/{name}/_SUCCESS"):
             continue
-        try:
-            state[name] = judge(con, name, oracle[name], out_dir,
-                                skip_unrolled)
-        except Exception as e:
-            state[name] = {"status": "fail",
-                           "reason": f"error: {str(e)[:300]}"}
+        state[name] = judge(con, name, oracle[name], out_dir, skip_unrolled)
         n_round += 1
         print(f"{state[name]['status'].upper():4s} {name}: "
               f"{state[name].get('rows', state[name].get('reason'))}",
