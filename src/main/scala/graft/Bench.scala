@@ -16,6 +16,7 @@ object Bench {
     // the run exit 1 — a crash must never read as a faster total.
     val failed = scala.collection.mutable.SortedSet.empty[String]
     def run(name: String): Double = {
+      System.err.println(s"[bench] run $name")
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>

@@ -1064,9 +1064,8 @@ object AdvancedTextQueries {
       .filter(col("t2").isNotNull)
       .select(col("source"), concat_ws(" ", col("t"), col("t1"), col("t2")).as("sh"))
       .distinct()
-      // pinned: consumed by the size fold and both self-join sides —
-      // one shingle pass instead of three
-      .localCheckpoint(false)
+      // pinned: three consumers (the size fold, both self-join sides)
+      .localCheckpoint()
     val sizes = srcSh.groupBy(col("source").as("sz_source"))
       .agg(count(lit(1)).as("n_sh"))
     srcSh.as("a").join(srcSh.as("b"),

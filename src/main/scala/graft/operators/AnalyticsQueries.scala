@@ -523,6 +523,16 @@ object AnalyticsQueries {
     */
   val PagerankMinCooccur = 2
 
+  /** The co-purchase graph every graph query here reads: one (u, v)
+    * row per part pair (u < v) co-occurring in ≥ [[PagerankMinCooccur]]
+    * orders. Unpinned: each caller pins it, or its GraphOps operator
+    * pins its own input.
+    */
+  def copurchaseEdges(spark: SparkSession, sfDir: String): DataFrame =
+    BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
+      .filter(col("n_orders") >= PagerankMinCooccur)
+      .select(col("p1").as("u"), col("p2").as("v"))
+
   /** PageRank over the co-purchase part graph (parts are linked when
     * they appear together in ≥ [[PagerankMinCooccur]] orders — the
     * thresholded, symmetrized `q_cooccur` pair set), 10 fixed-point
@@ -532,11 +542,9 @@ object AnalyticsQueries {
     * head.
     */
   def qPagerank(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select("p1", "p2")
-    val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(pairs.select(col("p2").as("src"), col("p1").as("dst")))
+    val und = copurchaseEdges(spark, sfDir)
+    val edges = und.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
     GraphOps.pageRank(edges, iters = 10)
       .orderBy(desc("rank"), asc_nulls_first("node"))
   }
@@ -551,12 +559,8 @@ object AnalyticsQueries {
     * triangles with the textbook three-way self-join, so the exact
     * per-node counts (not just the total) are hash-checked.
     */
-  def qTriangles(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select(col("p1").as("u"), col("p2").as("v"))
-    GraphOps.triangleCounts(und)
-  }
+  def qTriangles(spark: SparkSession, sfDir: String): DataFrame =
+    GraphOps.triangleCounts(copurchaseEdges(spark, sfDir))
 
   /** Local clustering coefficient per node of the same co-purchase
     * graph: 2·triangles / (deg·(deg−1)) for every node of degree ≥ 2 —
@@ -574,12 +578,8 @@ object AnalyticsQueries {
     * node-count rows only.
     */
   def qClusteringCoef(spark: SparkSession, sfDir: String): DataFrame = {
-    // pinned: consumed by its own degree union (twice) and by
-    // triangleCounts — one pair-explode execution instead of three
-    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select(col("p1").as("u"), col("p2").as("v"))
-      .localCheckpoint(false)
+    // pinned: three consumers, read first by triangleCounts' eager pin
+    val und = copurchaseEdges(spark, sfDir).localCheckpoint(false)
     val deg = und.select(col("u").as("node"))
       .unionAll(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -603,10 +603,8 @@ object AnalyticsQueries {
     * depth-capped recursive CTE and takes min(depth) per node.
     */
   def qBfsDepth(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select(col("p1").as("src"), col("p2").as("dst"))
-    val (labels, _) = GraphOps.bfsDepths(und)
+    val (labels, _) = GraphOps.bfsDepths(copurchaseEdges(spark, sfDir)
+      .select(col("u").as("src"), col("v").as("dst")))
     labels.groupBy("depth")
       .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"))
       .orderBy(asc_nulls_first("depth"))
@@ -799,9 +797,9 @@ object AnalyticsQueries {
         Window.partitionBy("event_type").orderBy(col("h").asc)))
       .filter(col("rn") <= K)
       .select(col("event_type"), col("h"))
-      // pinned: consumed by the type dimension (twice, via the pair
-      // grid) and the pooled join — one sketch build instead of three
-      .localCheckpoint(false)
+      // pinned: three consumers (the pair grid's two type sides and
+      // the pooled join)
+      .localCheckpoint()
     val types = sk.select(col("event_type")).distinct()
     val pairs = types.select(col("event_type").as("t1"))
       .crossJoin(broadcast(types.select(col("event_type").as("t2"))))
@@ -889,17 +887,13 @@ object AnalyticsQueries {
     * computation; rounds past the fixpoint are no-ops.
     *
     * Scale: per round one map-combinable degree agg + two semi-joins,
-    * all on a monotonically SHRINKING edge set; no driver action in
-    * the loop.
+    * all on a monotonically SHRINKING edge set; one eager pin per
+    * round.
     */
-  def qKcore(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select(col("p1").as("u"), col("p2").as("v"))
-    GraphOps.kCore(und, k = KcoreK, rounds = KcoreRounds)
+  def qKcore(spark: SparkSession, sfDir: String): DataFrame =
+    GraphOps.kCore(copurchaseEdges(spark, sfDir), k = KcoreK, rounds = KcoreRounds)
       .select(col("node"), col("degree"))
       .orderBy(asc_nulls_first("node"))
-  }
 
   /** Wedge-center degree cap for q_linkpred — bounds the per-center
     * pair fan-out to C(cap,2); the oracle applies the same cut.
@@ -928,10 +922,7 @@ object AnalyticsQueries {
     * is equi-joins and one anti-join against the edge list.
     */
   def qLinkpred(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select(col("p1").as("u"), col("p2").as("v"))
-      .localCheckpoint(true)
+    val und = copurchaseEdges(spark, sfDir).localCheckpoint(true)
     val sym = und.select(col("u").as("z"), col("v").as("nbr"))
       .unionAll(und.select(col("v").as("z"), col("u").as("nbr")))
     val deg = sym.groupBy("z").agg(count(lit(1)).as("degree"))
@@ -1023,15 +1014,13 @@ object AnalyticsQueries {
     *
     * Scale: each round ships one label per directed edge (O(E),
     * map-side combinable) and folds the argmax with a struct-max
-    * aggregate — no window, no driver action, state is one row per
-    * node.
+    * aggregate — no window, one eager pin per round, state is one row
+    * per node.
     */
   def qLabelProp(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select("p1", "p2")
-    val edges = pairs.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(pairs.select(col("p2").as("src"), col("p1").as("dst")))
+    val und = copurchaseEdges(spark, sfDir)
+    val edges = und.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
     GraphOps.labelPropagation(edges, rounds = LabelPropRounds)
       .select(col("id").as("node"), col("label").as("community"))
       .orderBy(asc_nulls_first("community"), asc_nulls_first("node"))
@@ -1055,10 +1044,7 @@ object AnalyticsQueries {
     * brands an explicit error, not a wrap (q_gini's convention).
     */
   def qModularity(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select(col("p1").as("u"), col("p2").as("v"))
-      .localCheckpoint(true)
+    val und = copurchaseEdges(spark, sfDir).localCheckpoint(true)
     val brand = broadcast(Tables.part(spark, sfDir)
       .select(col("p_partkey"), col("p_brand")))
     val m = und.agg(count(lit(1)).as("m"))
@@ -1103,11 +1089,9 @@ object AnalyticsQueries {
     * scalar aggregate. Nothing global but the final 1-row result.
     */
   def qAssortativity(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= PagerankMinCooccur)
-      .select("p1", "p2")
-    val sym = pairs.select(col("p1").as("src"), col("p2").as("dst"))
-      .unionAll(pairs.select(col("p2").as("src"), col("p1").as("dst")))
+    val und = copurchaseEdges(spark, sfDir)
+    val sym = und.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint(true)
     val deg = sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
     val withDeg = sym

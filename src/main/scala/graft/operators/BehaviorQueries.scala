@@ -402,7 +402,7 @@ object BehaviorQueries {
     // (order, part), so exploding the arrays is the same distinct, and
     // the distinct order count is simply the basket row count.
     val baskets = basketParts(Tables.lineitem(spark, sfDir))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val partCounts = baskets
       .select(explode(col("parts")).as("part"))
       .groupBy(col("part")).agg(count(lit(1)).as("n_part"))
@@ -680,16 +680,15 @@ object BehaviorQueries {
     */
   def qItemCf(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)
-    // the two direction branches of the union below would otherwise
-    // each re-run the bounded pair explode — the query's heaviest
-    // stage — from scratch; the lazy checkpoint computes it once.
+    // pinned: two consumers (the union's direction branches), each of
+    // which would re-run the bounded pair explode, the heaviest stage.
     // (Two single-basket-fold variants — n_i derived from a pinned
     // basket-array frame, and a both-directions explode over it — were
     // tried this round and BOTH measured ~0.5x on the sf0.1 A/B
     // (2.77 s → 5.2-5.8 s): re-exploding checkpointed array rows costs
     // more than the columnar re-scan + distinct it saved, so the r12
     // shape stands.)
-    val pairs = cooccurPairCounts(li).localCheckpoint(false)
+    val pairs = cooccurPairCounts(li).localCheckpoint()
     val both = pairs.select(col("p1").as("part"), col("p2").as("rec"),
         col("n_orders"))
       .unionAll(pairs.select(col("p2").as("part"), col("p1").as("rec"),
@@ -812,7 +811,7 @@ object BehaviorQueries {
     val byDecile = deciled.groupBy("decile")
       .agg(count(lit(1)).as("n_users"), sum(col("buyer")).as("n_buyers"),
         max(col("n_total")).as("tot_users"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val tot = byDecile.agg(sum(col("n_buyers")).as("tot_buyers"))
     byDecile
       .crossJoin(broadcast(tot))

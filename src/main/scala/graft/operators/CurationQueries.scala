@@ -209,9 +209,8 @@ object CurationQueries {
       .select(col("source"), explode(tokens(col("text"))).as("t"))
       .groupBy("source", "t")
       .agg(count(lit(1)).as("c"))
-      // pinned: consumed by the totals fold, the KL main side and the
-      // KL lookup side — one tokenize+count pass instead of three
-      .localCheckpoint(false)
+      // pinned: three consumers (the totals fold, both KL join sides)
+      .localCheckpoint()
     val totals = counts.groupBy("source")
       .agg(sum(col("c")).as("tot"))
     val sources = totals.select(col("source").as("s2"),
@@ -231,9 +230,6 @@ object CurationQueries {
                 col("tot").cast("double")))).as("term"))
       .groupBy("source", "s2")
       .agg(sum(col("term")).as("kl"))
-      // pinned: the symmetrizing self-join reads both orders of the
-      // |sources|² KL table — one KL pass instead of two
-      .localCheckpoint(false)
     kl.as("f")
       .join(kl.as("r"),
         col("f.source") === col("r.s2") && col("f.s2") === col("r.source") &&

@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * component), so the joint fixpoint is the plain-propagation
   * fixpoint: the component minimum.
   *
-  * The driver loop's only per-round action is a change COUNT —
-  * nothing else leaves the executors.
+  * The driver loop's only per-round action is the label sum, one
+  * decimal scalar — nothing else leaves the executors.
   */
 object GraphOps {
 
@@ -115,10 +115,11 @@ object GraphOps {
   private def ccRoundsPreSym(sym: DataFrame, maxIter: Int,
       shortcutAfter: Int): (DataFrame, Int) = {
     // seed with min(id, neighbors) straight from the edge aggregation —
-    // the first propagation round for free, no join
+    // the first propagation round for free, no join; pinned: two
+    // consumers (both sides of the first step)
     var labels = sym.groupBy(col("src").as("id"))
       .agg(least(col("src"), min(col("dst"))).as("component"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // One propagation step: every vertex offers its label to each
     // neighbor; keep the min of own label and all offers. The join is
     // a using-column join so the step composes with itself (the fused
@@ -161,7 +162,7 @@ object GraphOps {
     while (!converged && iter < maxIter) {
       val prop =
         if (iter < shortcutAfter) step(labels)
-        else shortcut(step(labels).localCheckpoint(false))
+        else shortcut(step(labels).localCheckpoint())
       val next = prop.localCheckpoint(false)
       val s = next.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0)
       // a NULL sum means an empty label table (components are never
@@ -269,8 +270,6 @@ object GraphOps {
     // wedge-join side) — unpinned, the caller's pair-generation
     // pipeline executed up to 8x (before-plan: 22 parquet scans in
     // q_triangles, 26 in q_clustering_coef); pinned it executes once.
-    // Eager: the consumers' AQE stages run concurrently, and a lazy pin
-    // truncates its lineage under them (`Failed to update accumulator`).
     val e = und.select(col("u"), col("v")).localCheckpoint()
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
@@ -436,8 +435,8 @@ object GraphOps {
     * (O(E) rows, map-side combinable into per-(node,label) counts),
     * then the argmax folds per node with a max-of-struct aggregate —
     * (count, −label) under struct ordering IS "most frequent,
-    * smallest-label tie-break" — no window, no driver action; a lazy
-    * localCheckpoint per round keeps lineage flat. `edges` must be
+    * smallest-label tie-break" — no window; an eager localCheckpoint
+    * per round (two consumers) keeps lineage flat. `edges` must be
     * symmetrized and deduplicated (callers pass both directions),
     * matching [[pageRank]]'s contract.
     */
@@ -458,7 +457,7 @@ object GraphOps {
         .groupBy("id")
         .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("m"))
         .select(col("id"), (-col("m.neg")).as("label"))
-        .localCheckpoint(false)
+        .localCheckpoint()
     }
     labels
   }
@@ -473,8 +472,8 @@ object GraphOps {
     *
     * Scale: each round recomputes degrees with one map-combinable agg
     * over the surviving edges and drops edges by two semi-joins on
-    * the survivor set — O(E) per round, no driver action inside the
-    * loop, lazy checkpoint per round to flatten lineage. The edge set
+    * the survivor set — O(E) per round, an eager checkpoint per round
+    * (three consumers) to flatten lineage. The edge set
     * only shrinks, so later rounds cost less than earlier ones.
     */
   def kCore(und: DataFrame, k: Int, rounds: Int = 6): DataFrame = {
@@ -488,7 +487,7 @@ object GraphOps {
         .join(keep.select(col("node").as("u")), Seq("u"), "left_semi")
         .join(keep.select(col("node").as("v")), Seq("v"), "left_semi")
         .select(col("u"), col("v"))
-        .localCheckpoint(false)
+        .localCheckpoint()
     }
     edges.select(col("u").as("node"))
       .unionAll(edges.select(col("v").as("node")))

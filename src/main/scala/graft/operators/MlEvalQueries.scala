@@ -228,11 +228,10 @@ object MlEvalQueries {
     * zero rows, not dropped (full outer join over the label axis).
     */
   def qPrf(spark: SparkSession, sfDir: String): DataFrame = {
-    // pinned: three aggregate consumers (byTrue, byPred, tp) would
-    // otherwise each re-run the whole kNN prediction subtree — AQE
-    // stage reuse does not dedupe it across the full-outer join's
+    // pinned: three consumers (byTrue, byPred, tp); AQE stage reuse
+    // does not dedupe the kNN subtree across the full-outer join's
     // branches (the before-plan shows the blocked top-k tripled)
-    val pred = knnPredictions(spark, sfDir).localCheckpoint(false)
+    val pred = knnPredictions(spark, sfDir).localCheckpoint()
     val byTrue = pred.groupBy(col("true_label").as("label"))
       .agg(count(lit(1)).as("n_true"))
     val byPred = pred.groupBy(col("pred_label").as("label"))
@@ -369,10 +368,9 @@ object MlEvalQueries {
     * joins at all past the shared pair-generation.
     */
   def qDegreeDist(spark: SparkSession, sfDir: String): DataFrame = {
-    val und = BehaviorQueries.cooccurPairCounts(Tables.lineitem(spark, sfDir))
-      .filter(col("n_orders") >= AnalyticsQueries.PagerankMinCooccur)
-    val deg = und.select(col("p1").as("node"))
-      .unionAll(und.select(col("p2").as("node")))
+    val und = AnalyticsQueries.copurchaseEdges(spark, sfDir)
+    val deg = und.select(col("u").as("node"))
+      .unionAll(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
     deg.groupBy("degree")
       .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("min_node"))

@@ -110,19 +110,19 @@ object ScaleOps {
     *      contiguous ranges (the same shuffle a distributed sort
     *      does; n is explicit, so AQE never re-coalesces it — the
     *      partition ids must mean the same thing on every branch).
-    *      The ranged frame is pinned with a LAZY localCheckpoint:
+    *      The ranged frame is pinned with an EAGER localCheckpoint:
     *      range boundaries come from SAMPLING a shuffle whose input
     *      order is nondeterministic, so two independent
     *      materializations of "the same" exchange can cut DIFFERENT
     *      boundaries — and the window branch and the stats branch
     *      below would then disagree on what each pid means,
     *      silently corrupting every offset (caught by the sf0.1
-    *      full-surface sweep as a nondeterministic q_cliff_delta;
-    *      AQE stage reuse fixes the simple shapes but is not
-    *      guaranteed in composed plans). Checkpointing freezes ONE
-    *      boundary choice and one pid per row in data; the
-    *      materialization is the same volume the global-sort window
-    *      this operator replaces would shuffle anyway.
+    *      full-surface sweep as a nondeterministic q_cliff_delta).
+    *      Both branches run as concurrent stages, so only a pin
+    *      materialized before either starts freezes ONE boundary
+    *      choice and one pid per row in data; the materialization is
+    *      the same volume the global-sort window this operator
+    *      replaces would shuffle anyway.
     *   2. One window per RANGE (partitioned by `spark_partition_id`)
     *      yields the local row_number and local running sums — n
     *      parallel sorts instead of one.
@@ -156,7 +156,7 @@ object ScaleOps {
       else df.sparkSession.sessionState.conf.numShufflePartitions
     val parted = df.repartitionByRange(n, order: _*)
       .withColumn("__pr_pid", spark_partition_id())
-      .localCheckpoint(false)
+      .localCheckpoint()
     val wLoc = Window.partitionBy(col("__pr_pid")).orderBy(order: _*)
     val wRun = wLoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = sums.foldLeft(

@@ -63,13 +63,13 @@ object SetSimJoin {
     val dfreq = sh.groupBy("s").agg(count(lit(1)).as("df"))
 
     // Per doc: sort shingles rarest-first, keep the tau=1/2 prefix
-    // |x| - ceil(|x|/2) + 1 = floor(|x|/2) + 1. Lazily checkpointed:
-    // both the prefix explode and the verification arrays read it.
+    // |x| - ceil(|x|/2) + 1 = floor(|x|/2) + 1. Pinned: three
+    // consumers (both prefix explodes and the verification arrays).
     val ordered = sh.join(dfreq, "s")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("sorted"),
         count(lit(1)).as("n"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     def prefix(len: Column) = ordered
       .select(col("doc_id"), col("n"),
         posexplode(slice(col("sorted"), lit(1), len.cast("int"))))

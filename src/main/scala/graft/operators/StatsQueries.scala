@@ -1175,10 +1175,9 @@ object StatsQueries {
     * enter as a declared 1-row broadcast.
     */
   def qEmd(spark: SparkSession, sfDir: String): DataFrame = {
-    // pinned: three consumers (sample totals, the next-value side of
-    // the segment self-join, the segment side itself) would otherwise
-    // each re-run the value fold + rank windows
-    val cum = twoSampleValueCounts(spark, sfDir).localCheckpoint(false)
+    // pinned: three consumers (sample totals, both sides of the
+    // segment self-join)
+    val cum = twoSampleValueCounts(spark, sfDir).localCheckpoint()
     val tot = cum.agg(sum(col("c_a")).as("n_a"), sum(col("c_b")).as("n_b"))
     val nxt = cum.select((col("rn") - 1).as("rn"), col("value").as("next_v"))
     cum
