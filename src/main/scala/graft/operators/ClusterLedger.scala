@@ -75,18 +75,23 @@ object ClusterLedger {
     GraphOps.connectedComponents(superEdges)
   }
 
-  /** Create the empty append-only base table + empty patch map. */
+  /** Create the empty append-only base table (bucketed, bucket-sorted
+    * by id) + empty patch map with catalog DDL, which runs no Spark
+    * job; robust to stale warehouse directories (see
+    * Tables.dropWithLocation).
+    */
   def initPatch(spark: SparkSession, ledgerTable: String): Unit = {
-    import spark.implicits._
     graft.Tables.dropWithLocation(spark, ledgerTable)
+    spark.sql(s"CREATE TABLE $ledgerTable (id BIGINT, component BIGINT) " +
+      s"USING parquet CLUSTERED BY (id) SORTED BY (id) INTO $NBuckets BUCKETS")
+    createEmptyPatch(spark, ledgerTable)
+  }
+
+  /** (Re)create the empty patch map with catalog DDL. */
+  private def createEmptyPatch(spark: SparkSession, ledgerTable: String): Unit = {
     graft.Tables.dropWithLocation(spark, patchTable(ledgerTable))
-    Seq.empty[(Long, Long)].toDF("id", "component")
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(NBuckets, "id").sortBy("id")
-      .saveAsTable(ledgerTable)
-    Seq.empty[(Long, Long)].toDF("from_label", "to_label")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(patchTable(ledgerTable))
+    spark.sql(s"CREATE TABLE ${patchTable(ledgerTable)} " +
+      "(from_label BIGINT, to_label BIGINT) USING parquet")
   }
 
   private def patchTable(ledgerTable: String): String = s"${ledgerTable}_patch"
@@ -287,7 +292,6 @@ object ClusterLedger {
     */
   def checkpointPatch(spark: SparkSession, ledgerTable: String,
       tmpDir: String): Unit = {
-    import spark.implicits._
     // materialize the resolve BEFORE overwriting the tables it reads
     resolvePatch(spark, ledgerTable)
       .write.mode(SaveMode.Overwrite).parquet(tmpDir)
@@ -296,9 +300,7 @@ object ClusterLedger {
       .write.mode(SaveMode.Overwrite)
       .bucketBy(NBuckets, "id").sortBy("id")
       .saveAsTable(ledgerTable)
-    Seq.empty[(Long, Long)].toDF("from_label", "to_label")
-      .write.mode(SaveMode.Overwrite).format("parquet")
-      .saveAsTable(patchTable(ledgerTable))
+    createEmptyPatch(spark, ledgerTable)
   }
 
   /** The incremental CLUSTER flow as an ORACLE-CHECKED query — the

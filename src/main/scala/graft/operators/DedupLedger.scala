@@ -18,16 +18,14 @@ object DedupLedger {
 
   val NBuckets = 16
 
-  /** Create an empty ledger table (bucketed, bucket-sorted by hash),
-    * robust to a stale warehouse directory (see Tables.dropWithLocation).
+  /** Create an empty ledger table (bucketed, bucket-sorted by hash)
+    * with one catalog DDL statement, which runs no Spark job; robust to
+    * a stale warehouse directory (see Tables.dropWithLocation).
     */
   def init(spark: SparkSession, ledgerTable: String): Unit = {
-    import spark.implicits._
     graft.Tables.dropWithLocation(spark, ledgerTable)
-    Seq.empty[String].toDF("text_hash")
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(NBuckets, "text_hash").sortBy("text_hash")
-      .saveAsTable(ledgerTable)
+    spark.sql(s"CREATE TABLE $ledgerTable (text_hash STRING) USING parquet " +
+      s"CLUSTERED BY (text_hash) SORTED BY (text_hash) INTO $NBuckets BUCKETS")
   }
 
   /** Admit `batch` rows whose content is new: first occurrence within

@@ -39,19 +39,19 @@ import org.apache.spark.sql.functions._
   *     and sorted by `bkh`, with small parquet row groups
   *     ([[RowGroupBytes]]) so each row group covers a narrow key range
   *     and carries tight min/max stats;
-  *   - a probe collects the batch's distinct `bkh` set (8 bytes/key,
-  *     ≤ [[MaxPushdownKeys]] — the index-lookup vs full-scan planner
-  *     choice; a batch too large to push is itself corpus-sized, the
-  *     regime where a scan join is proportional anyway) and pushes it
-  *     into the ledger scan as an In filter. Parquet row-group
-  *     pruning then reads ONLY the row groups whose key range
-  *     contains a probed key: probe IO ≈ batch_keys × row-group size,
+  *   - a probe collects the batch's `bkh` column (8 bytes/band row,
+  *     ≤ [[MaxPushdownKeys]] rows — the index-lookup vs full-scan
+  *     planner choice; a batch too large to push is itself
+  *     corpus-sized, the regime where a scan is proportional anyway),
+  *     dedupes it on the driver and pushes it into the ledger scan as
+  *     an In filter. Parquet row-group pruning then reads ONLY the
+  *     row groups whose key range contains a probed key: probe IO ≈ batch_keys × row-group size,
   *     FLAT in ledger size — MinHashLedgerSpec asserts the pushed In
   *     filter on every ledger scan of the probe plan.
   *   - `bkh` collisions are harmless: the pushed In-set is a superset
-  *     filter, and every later step (guard counts, pair join) keys on
-  *     the exact `bkey` string, so a collision row can never produce
-  *     a pair or perturb a batch bucket's count.
+  *     filter, and every later step (guard counts, bucket aggregate)
+  *     keys on the exact `bkey` string, so a collision row can never
+  *     produce a pair or perturb a batch bucket's count.
   *
   * The hot-bucket guard's per-bkey totals come off the SAME pruned
   * read (a batch bucket's total population over ledger∪batch needs
@@ -87,23 +87,27 @@ object MinHashLedger {
   val RowGroupBytes: Int = 256 * 1024
   val PageBytes: Int = 32 * 1024
 
-  /** Largest batch key set pushed as an In filter (8 MB of longs at
-    * the limit). Beyond this the probe falls back to the plain scan
-    * join — a batch that large is corpus-scale, where a scan IS
-    * proportional to the batch. ClusterLedger's point-lookup patch fold
-    * caps its touched-id collect at the same bound.
+  /** Largest batch whose keys are pushed as an In filter, counted in
+    * BAND ROWS (the probe collects the batch's `bkh` column, one long
+    * per row, 8 MB at the limit, and dedupes it on the driver — no
+    * shuffle for a distinct). Beyond this the probe falls back to the
+    * plain ledger scan — a batch that large is corpus-scale, where a
+    * scan IS proportional to the batch. ClusterLedger's point-lookup
+    * patch fold caps its touched-id collect at the same bound.
     */
   val MaxPushdownKeys: Int = 1 << 20
 
-  /** Create the empty band-index ledger (robust to a stale warehouse
-    * directory, see Tables.dropWithLocation).
+  /** Create the empty band-index ledger with one catalog DDL
+    * statement, which runs no Spark job. Its OPTIONS become the table's
+    * storage properties, so every append inherits the small row groups
+    * (see writeSorted) and `assertLedgerLayout` finds them. Robust to a
+    * stale warehouse directory (see Tables.dropWithLocation).
     */
   def init(spark: SparkSession, ledgerTable: String): Unit = {
-    import spark.implicits._
     graft.Tables.dropWithLocation(spark, ledgerTable)
-    writeSorted(
-      Seq.empty[(Long, String, Long)].toDF("bkh", "bkey", "doc_id"),
-      ledgerTable, SaveMode.Overwrite)
+    spark.sql(s"CREATE TABLE $ledgerTable (bkh BIGINT, bkey STRING, " +
+      s"doc_id BIGINT) USING parquet OPTIONS ('parquet.block.size' " +
+      s"'$RowGroupBytes', 'parquet.page.size' '$PageBytes')")
   }
 
   /** The document universe the incremental query-surface flows ingest:
@@ -163,13 +167,13 @@ object MinHashLedger {
   /** Range-sorted small-row-group write — every ledger file is one
     * sorted run over `bkh`, the layout the point-lookup probe prunes.
     * How the parquet sizes reach the writer differs by mode: on CREATE
-    * (saveAsTable) the options are persisted into the table's catalog
-    * storage properties; on APPEND, Spark 4.1's V1 `insertInto` builds
-    * an InsertIntoStatement with an EMPTY options map — the
-    * DataFrameWriter options are dropped — and the append job instead
-    * INHERITS the storage properties saved at create time. Appends only
-    * get 256KB row groups because init/compact created the table with
-    * them; `assertLedgerLayout` makes that dependency loud rather than
+    * (init's DDL, compact's saveAsTable) the options are persisted into
+    * the table's catalog storage properties; on APPEND, Spark 4.1's V1
+    * `insertInto` builds an InsertIntoStatement with an EMPTY options
+    * map — the DataFrameWriter options are dropped — and the append job
+    * instead INHERITS the storage properties saved at create time.
+    * Appends only get 256KB row groups because init/compact created
+    * the table with them; `assertLedgerLayout` makes that dependency loud rather than
     * a silent revert to 128MB row groups (and degraded probe pruning)
     * if a ledger table is ever created elsewhere without the options.
     * Nothing touches the shared Hadoop configuration — a set/restore
@@ -214,7 +218,7 @@ object MinHashLedger {
       s"ledger table $table lacks parquet.block.size=$RowGroupBytes in its " +
         "catalog storage properties; appends would revert to 128MB row " +
         "groups and probe pruning would degrade — recreate the table via " +
-        "writeSorted(..., Overwrite/ErrorIfExists)")
+        "init or compact")
   }
 
   /** Ingest one batch: emit its candidate near-dup pairs against the
@@ -283,11 +287,9 @@ object MinHashLedger {
     // ONE pruned scan feeds everything: ledger rows and batch rows
     // union under an is_new flag, repartition on bkey, and every
     // downstream consumer (the per-(bkey,doc_id) dedupe, the
-    // hot-bucket guard, both join sides) reads THAT exchange — under
-    // AQE the duplicated branches reuse the one shuffle stage, so the
-    // point-lookup parquet read happens once per probe (previously
-    // twice: cap totals + pair join — it doubled the per-probe read
-    // floor).
+    // hot-bucket guard, the bucket aggregate) reads THAT exchange, so
+    // the point-lookup parquet read and the windows run once per
+    // probe.
     val all = old.select(col("bkey"), col("doc_id"), lit(false).as("is_new"))
       .unionAll(fresh.select(col("bkey"), col("doc_id"), lit(true).as("is_new")))
       .repartition(col("bkey"))
@@ -300,7 +302,7 @@ object MinHashLedger {
     // decision replay-stable and compaction-invariant. The dedupe
     // prefers the batch copy (is_new desc) so a re-ingested doc still
     // probes. Both windows cluster on bkey, so the one repartition
-    // above satisfies them and the join below with no further
+    // above satisfies them and the aggregate below with no further
     // exchange.
     val wDoc = Window.partitionBy("bkey", "doc_id")
       .orderBy(col("is_new").desc)
@@ -311,25 +313,30 @@ object MinHashLedger {
       .withColumn("df", count(lit(1)).over(wB))
       .withColumn("has_new", max(col("is_new")).over(wB))
       .filter(col("df") > 1 && col("df") <= bucketCap && col("has_new"))
-    val freshOk = ok.filter(col("is_new")).select("bkey", "doc_id")
-    val corpusOk = ok.select("bkey", "doc_id")
-    freshOk.as("a")
-      .join(corpusOk.as("b"),
-        col("a.bkey") === col("b.bkey") && col("a.doc_id") =!= col("b.doc_id"))
-      .select(
-        least(col("a.doc_id"), col("b.doc_id")).as("doc_id_1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_id_2"))
+    // one list pair per surviving bucket, each ≤ bucketCap ids (the
+    // cap filtered above) — MinHashLsh.candidatePairs' bounded
+    // pattern with the batch's docs on one side: every fresh doc meets
+    // every other doc of its bucket (new×old ∪ new×new)
+    ok.groupBy("bkey")
+      .agg(collect_list(when(col("is_new"), col("doc_id"))).as("fresh"),
+        collect_list(col("doc_id")).as("docs"))
+      .select(explode(col("fresh")).as("a"), col("docs"))
+      .select(col("a"), explode(col("docs")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .select(least(col("a"), col("b")).as("doc_id_1"),
+        greatest(col("a"), col("b")).as("doc_id_2"))
       .distinct()
   }
 
   /** The ledger, pruned to the batch's touched keys when the batch is
-    * small enough to push: collect the batch's distinct `bkh` set (a
-    * bounded driver model — longs, capped at [[MaxPushdownKeys]]) and
-    * push it as an In filter the parquet reader prunes row groups
-    * with. Collisions only ADMIT extra rows (superset filter); every
+    * small enough to push: collect the batch's `bkh` column (a bounded
+    * driver model — one long per band row, capped at
+    * [[MaxPushdownKeys]] rows), dedupe it on the driver and push it as
+    * an In filter the parquet reader prunes row groups with.
+    * Collisions only ADMIT extra rows (superset filter); every
     * consumer keys on the exact `bkey`. Falls back to the full scan
     * when the batch outgrows the cap — at that size the batch is
-    * corpus-scale and a scan join is proportional to it anyway.
+    * corpus-scale and a scan is proportional to it anyway.
     *
     * How Spark 4 translates the pushed In decides whether this is
     * merely correct or also SAFE. At or under
@@ -351,8 +358,8 @@ object MinHashLedger {
   private def prunedLedger(spark: SparkSession, fresh: DataFrame,
       ledgerTable: String, maxPushdownKeys: Int): DataFrame = {
     val all = spark.table(ledgerTable)
-    graft.Tables.collectBounded(fresh.select("bkh").distinct(), maxPushdownKeys) match {
-      case Some(keys) => all.filter(col("bkh").isInCollection(keys.map(_.getLong(0))))
+    graft.Tables.collectBounded(fresh.select("bkh"), maxPushdownKeys) match {
+      case Some(rows) => all.filter(col("bkh").isInCollection(rows.map(_.getLong(0)).distinct))
       case None => all
     }
   }

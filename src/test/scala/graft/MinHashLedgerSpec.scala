@@ -1,6 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.graft.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{MinHashLedger, MinHashLsh}
@@ -12,6 +19,23 @@ import graft.operators.{MinHashLedger, MinHashLsh}
   */
 class MinHashLedgerSpec extends AnyFunSuite {
   import SparkTestSession.{spark, sfDir}
+
+  /** Every node of an executed plan, through AQE stages and reuse. */
+  private def flatten(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+    case q: QueryStageExec => q +: flatten(q.plan)
+    case r: ReusedExchangeExec => r +: flatten(r.child)
+    case n => n +: n.children.flatMap(flatten)
+  }
+
+  private def ledgerScans(df: DataFrame, ledger: String): Seq[FileSourceScanExec] =
+    flatten(df.queryExecution.executedPlan).collect {
+      case s: FileSourceScanExec
+        if s.metadata.get("Location").exists(_.contains(ledger)) => s
+    }
+
+  private def pairSet(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("batch-ingest union equals the full-corpus LSH candidate pair set") {
     val ledger = "minhash_ledger_t"
@@ -100,36 +124,57 @@ class MinHashLedgerSpec extends AnyFunSuite {
       // conf too low, InSet not converted — this silently degrades to
       // a full read and the flat-probe-IO claim dies with it)
       val pushed = MinHashLedger.candidatePairsAgainst(spark, probe, ledger)
-      pushed.collect()
-      import org.apache.spark.sql.execution.FileSourceScanExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-      def flatten(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-        case q: QueryStageExec => q +: flatten(q.plan)
-        case r: ReusedExchangeExec => r +: flatten(r.child)
-        case n => n +: n.children.flatMap(flatten)
-      }
-      val ledgerScans = flatten(pushed.queryExecution.executedPlan).collect {
-        case s: FileSourceScanExec
-          if s.metadata.get("Location").exists(_.contains(ledger)) => s
-      }
-      assert(ledgerScans.nonEmpty, "no ledger file scan found in the plan")
-      assert(ledgerScans.forall(
+      val a = pairSet(pushed)
+      val scans = ledgerScans(pushed, ledger)
+      assert(scans.length == 1,
+        s"the probe must read the ledger once, found ${scans.length} scans")
+      assert(scans.forall(
         _.metadata.get("PushedFilters").exists(_.contains("In(bkh"))),
         s"ledger scan lost its pushed In(bkh,...) filter: " +
-          ledgerScans.map(_.metadata.get("PushedFilters")).mkString("; "))
+          scans.map(_.metadata.get("PushedFilters")).mkString("; "))
+      // the pairs come off one bucket aggregate, not a broadcast self-join
+      assert(!flatten(pushed.queryExecution.executedPlan)
+        .exists(_.isInstanceOf[BroadcastExchangeExec]),
+        "the probe plan broadcasts")
+      assert(a.nonEmpty, "fixture probe should find near-dups")
 
-      // a batch too large to push falls back to the plain scan join —
+      // a batch too large to push falls back to the plain scan —
       // pair-for-pair identical output
       val fallback = MinHashLedger.candidatePairsAgainst(
         spark, probe, ledger, maxPushdownKeys = 0)
-      val a = pushed.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val b = fallback.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(a == b, "pushed and fallback probes diverge")
-      assert(a.nonEmpty, "fixture probe should find near-dups")
+      assert(pairSet(fallback) == a, "pushed and fallback probes diverge")
+
+      // the cap counts BAND ROWS, not distinct keys: a cap that holds
+      // the batch's distinct keys but not its rows falls back too
+      val bands = MinHashLedger.bandRows(probe)
+      val (rows, keys) = (bands.count(), bands.select("bkh").distinct().count())
+      assert(keys < rows, "the probe batch must share some buckets")
+      val boundary = MinHashLedger.candidatePairsAgainst(
+        spark, probe, ledger, maxPushdownKeys = keys.toInt)
+      assert(pairSet(boundary) == a, "pushed and boundary probes diverge")
+      val boundaryScans = ledgerScans(boundary, ledger)
+      assert(boundaryScans.nonEmpty && boundaryScans.forall(
+        !_.metadata.get("PushedFilters").exists(_.contains("In(bkh"))),
+        s"a cap of $keys < $rows band rows must not push the key set")
     } finally spark.sql(s"DROP TABLE IF EXISTS $ledger")
+  }
+
+  test("init creates the ledger without a Spark job") {
+    val ledger = "minhash_ledger_init_t"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBridge.waitUntilListenersProcessed(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      MinHashLedger.init(spark, ledger)
+      ListenerBridge.waitUntilListenersProcessed(spark.sparkContext)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.sql(s"DROP TABLE IF EXISTS $ledger")
+    }
+    assert(jobs.get == 0, s"init ran ${jobs.get} Spark jobs")
   }
 
   test("q_dedup_incremental: the query-surface flow equals one-shot LSH on its universe") {

@@ -24,7 +24,7 @@ rm -rf "$OUT"
 status=0
 java $ADD_OPENS -Xmx8g \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "target/scala-2.13/classes:src/main/resources:/opt/spark/jars/*" \
   graft.Verify "$SF_DIR" "$OUT" "$@" 2>/tmp/verify.log || status=$?
 if [ ! -f "$OUT/oracle_sql.json" ]; then tail -30 /tmp/verify.log; exit 1; fi
 grep -E "\[verify\]" /tmp/verify.log || true
